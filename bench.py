@@ -38,7 +38,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from lakehouse_admin_spark import registry
-from lakehouse_admin_spark.session import get_spark
+from lakehouse_admin_spark.session import DEFAULT_CPUS, get_spark
 
 # Headline set: one per operator family — scan+agg, fact-fact join,
 # star join, anti-join, top-k, window pagination, drill-down,
@@ -248,11 +248,11 @@ def main() -> None:
     # bpe_encode_token_counts, which consumes the trained table across
     # many invocations) keep riding their session index unchanged — the
     # last timed train repopulates the cache for them.
-    from lakehouse_admin_spark.operators.textual import invalidate_bpe_cache
+    from lakehouse_admin_spark import index_registry
 
     TRAINER_EVICT = {
-        "bpe_learn_merges": invalidate_bpe_cache,
-        "bpe_batch_learn_merges": invalidate_bpe_cache,
+        name: lambda tier: index_registry.invalidate(tier, "bpe")
+        for name in ("bpe_learn_merges", "bpe_batch_learn_merges")
     }
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
@@ -295,8 +295,7 @@ def main() -> None:
     # r13 both lost their per-query diff to that). bench_full.json holds
     # the latest run; the _c{cpus} variant keeps the main- and low-core
     # recordings from clobbering each other.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    out["cpus"] = int(cpus) if cpus.isdigit() else cpus
+    cpus = out["cpus"] = DEFAULT_CPUS
     here = os.path.dirname(os.path.abspath(__file__))
     for fname in ("bench_full.json", f"bench_full_c{cpus}.json"):
         try:

@@ -23,11 +23,12 @@ DuckDB oracle replays it bit-for-bit:
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lakehouse_admin_spark import index_registry
+from lakehouse_admin_spark.index_registry import free_checkpoint
 from lakehouse_admin_spark.operators.dedup import shingles_expr, tokens_expr
 from lakehouse_admin_spark.registry import query
 from lakehouse_admin_spark.sources.tables import load_table
@@ -998,29 +999,25 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, abspath(sf_dir)) -> localCheckpoint'd
-# (doc_id, is_target, bucket, cdb) hashed-gram bucket counts — the DSIR
-# sufficient statistic every estimator consumer re-aggregates (the
-# paper precomputes exactly this hashed-n-gram representation once).
-# Built once per (session, tier); r13 — previously BOTH weight
-# consumers (dsir_importance, dsir_gumbel_topk) re-ran the
-# tokenize+bigram explode and left a fresh per-call localCheckpoint
-# behind on every invocation.
-_DSIR_G_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _dsir_gram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build (or fetch) the session (doc_id, is_target, bucket, cdb)
-    frame. EAGERLY localCheckpoint'd — the consumers fan out as
-    CONCURRENT subtrees of one action (broadcast builds run in parallel
-    with the main stages), and an unmaterialized cache makes them race:
-    each racer re-runs the full tokenize pipeline before any of them
-    populates the cache (measured r13: dsir_importance 2.4→4.3 s after
-    the totals went lazy, back to 1.9 s with the eager cut)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir.rstrip("/")))
-    hit = _DSIR_G_CACHE.get(key)
-    if hit is not None:
-        return hit
+    hashed-gram bucket counts — the DSIR sufficient statistic every
+    estimator consumer re-aggregates (the paper precomputes exactly
+    this hashed-n-gram representation once), built once per (session,
+    tier) in the index registry. EAGERLY localCheckpoint'd — the
+    consumers fan out as CONCURRENT subtrees of one action (broadcast
+    builds run in parallel with the main stages), and an unmaterialized
+    cache makes them race: each racer re-runs the full tokenize
+    pipeline before any of them populates the cache (measured r13:
+    dsir_importance 2.4→4.3 s after the totals went lazy, back to
+    1.9 s with the eager cut)."""
+    return index_registry.get(
+        spark, sf_dir, "dsir", lambda: _dsir_gram_counts_build(spark, sf_dir),
+        variant="gram_counts", release=free_checkpoint,
+    )
+
+
+def _dsir_gram_counts_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     B = DSIR_BUCKETS
     toks = tokens_expr(F.col("text"))
@@ -1038,7 +1035,7 @@ def _dsir_gram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    g = (
+    return (
         base.select(
             "doc_id",
             "is_target",
@@ -1054,8 +1051,6 @@ def _dsir_gram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cdb"))
         .localCheckpoint()
     )
-    _DSIR_G_CACHE[key] = g
-    return g
 
 
 def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1162,27 +1157,6 @@ def dsir_gumbel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DSIR_DELTA = "doc_id % 7 = 3"  # the delta stripe (new arrivals); target
 # docs are never delta (kind precedence: target > delta > raw)
 
-# (applicationId, abspath(sf_dir)) -> (per-bucket log-ratio list, cutoff).
-# applicationId is unique per SparkContext (the ivf_index pattern —
-# id(spark) is unsafe: CPython can reuse it after a session is GC'd).
-_DSIR_LM_CACHE: dict[tuple, tuple[list[float], float]] = {}
-
-
-def invalidate_dsir_cache(sf_dir: str | None = None) -> int:
-    """Drop cached DSIR model state — the frozen bucket LMs AND the
-    session gram-count frame — all, or one tier's (call after rewriting
-    its documents, same contract as ``invalidate_ivf_cache``). Returns
-    the number evicted."""
-    norm = None if sf_dir is None else os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _DSIR_LM_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        del _DSIR_LM_CACHE[k]
-    gkeys = [k for k in _DSIR_G_CACHE if norm is None or k[1] == norm]
-    for k in gkeys:
-        del _DSIR_G_CACHE[k]  # localCheckpoint blocks free with the GC
-    return len(keys) + len(gkeys)
-
-
 def _dsir_frozen_lm(spark: SparkSession, sf_dir: str) -> tuple[list[float], float]:
     """Train the frozen DSIR model on the BASE corpus (everything
     outside the delta stripe): per-bucket Laplace-smoothed log-ratios
@@ -1191,12 +1165,16 @@ def _dsir_frozen_lm(spark: SparkSession, sf_dir: str) -> tuple[list[float], floa
     an unseen bucket is evidence against the smaller corpus), plus the
     keep threshold = the DSIR_KEEP_PCTL percentile of the base raw
     pool's own weights. Model state is B doubles + 1 scalar, cached per
-    (applicationId, tier) and broadcastable; the training pass is the
-    same single tokenize+fold as :func:`_dsir_weights`."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir.rstrip("/")))
-    hit = _DSIR_LM_CACHE.get(key)
-    if hit is not None:
-        return hit
+    (session, tier) as the "frozen_lm" variant of the registry's "dsir"
+    entry, and broadcastable; the training pass is the same single
+    tokenize+fold as :func:`_dsir_weights`."""
+    return index_registry.get(
+        spark, sf_dir, "dsir", lambda: _dsir_train_lm(spark, sf_dir),
+        variant="frozen_lm",
+    )
+
+
+def _dsir_train_lm(spark: SparkSession, sf_dir: str) -> tuple[list[float], float]:
     from pyspark.storagelevel import StorageLevel
 
     B = DSIR_BUCKETS
@@ -1262,7 +1240,6 @@ def _dsir_frozen_lm(spark: SparkSession, sf_dir: str) -> tuple[list[float], floa
         ]["c"]
     )
     g.unpersist()
-    _DSIR_LM_CACHE[key] = (rb, cutoff)
     return rb, cutoff
 
 
@@ -1348,9 +1325,9 @@ def dsir_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the pushed-down stripe predicate, the LM join is a
     broadcast of B rows, and the per-doc weight is one
     map-side-combinable sum. The model (B doubles + 1 cutoff scalar)
-    is cached per (applicationId, tier) with
-    :func:`invalidate_dsir_cache` for rewrites — the
-    ann_incremental_assign contract applied to data selection."""
+    is cached per (session, tier) in the index registry; invalidate
+    "dsir" after a rewrite — the ann_incremental_assign contract applied
+    to data selection."""
     rb, cutoff = _dsir_frozen_lm(spark, sf_dir)
     B = DSIR_BUCKETS
     docs = load_table(spark, sf_dir, "documents")

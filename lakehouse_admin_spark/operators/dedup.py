@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from lakehouse_admin_spark import index_registry
+from lakehouse_admin_spark.index_registry import free_checkpoint
 from lakehouse_admin_spark.registry import query
 from lakehouse_admin_spark.sources.tables import load_table
 
@@ -77,57 +79,6 @@ def shingles_expr(toks: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-# (applicationId, sf_dir) -> persisted posting list. applicationId is
-# unique per SparkContext — unlike id(spark), which CPython can reuse
-# after a session is GC'd, serving stale frames to a new session.
-_POSTING_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# (applicationId, sf_dir) -> localCheckpoint'd full-corpus LSH band
-# buckets (band, band_key, doc_id) — the standing minhash index the
-# incremental path already persists to parquet for the base stripe
-# (``_persisted_bucket_index``), here for the whole tier: built once per
-# (session, tier) from the posting list, read by every batch consumer
-# (minhash_band_buckets, minhash_near_dup and its dedup_clusters /
-# dedup_keep_list / curation_pipeline / contrastive_triplets chain).
-# Deterministic md5 signature math, so caching never changes results
-# (r13 — previously every consumer re-ran the 16-hash signature
-# aggregate over the full posting list per invocation).
-_BUCKET_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _norm_tier(sf_dir: str) -> str:
-    """Canonical cache key for a tier dir — abspath, no trailing slash
-    (r14, ADVICE): all three dedup caches key on this, so 'dir/' vs
-    'dir' can neither double-build a frame nor dodge the invalidator
-    (the similarity.py cache convention)."""
-    return os.path.abspath(sf_dir.rstrip("/"))
-
-
-def invalidate_posting_cache(sf_dir: str | None = None) -> int:
-    """Drop (and unpersist) cached posting lists and bucket indexes —
-    all of them, or only the ones built over ``sf_dir``. Returns the
-    number evicted. The external-mutation hook, mirroring
-    ``invalidate_ivf_cache`` / ``invalidate_graph_caches``: call after
-    the documents fixture under ``sf_dir`` is rewritten in place."""
-    sf_dir = None if sf_dir is None else _norm_tier(sf_dir)
-    victims = [k for k in _POSTING_CACHE if sf_dir is None or k[1] == sf_dir]
-    for k in victims:
-        try:
-            _POSTING_CACHE[k].unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to free
-        del _POSTING_CACHE[k]
-    bucket_victims = [
-        k for k in _BUCKET_CACHE if sf_dir is None or k[1] == sf_dir
-    ]
-    for k in bucket_victims:
-        del _BUCKET_CACHE[k]  # localCheckpoint blocks free with the GC
-    cdc_victims = [k for k in _CDC_CHUNK_CACHE if sf_dir is None or k[1] == sf_dir]
-    for k in cdc_victims:
-        del _CDC_CHUNK_CACHE[k]
-    return len(victims) + len(bucket_victims) + len(cdc_victims)
-
-
 def exploded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) posting list — the inverted index. Persisted:
     every dedup consumer (minhash signatures, candidate verification,
@@ -146,22 +97,22 @@ def exploded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
       inferred size()>0 predicate re-inline the whole expression below
       the exchange.
     At 100 TB this index would be a materialized table; the shape is
-    identical.
+    identical. Built once per (session, tier) in the index registry.
     """
-    key = (spark.sparkContext.applicationId, _norm_tier(sf_dir))
-    cached = _POSTING_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = load_table(spark, sf_dir, "documents")
-    out = (
-        docs.repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", tokens_expr(F.col("text")).alias("w"))
-        .filter(F.size("w") >= 3)
-        .select("doc_id", F.explode(shingles_expr(F.col("w"))).alias("shingle"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        return (
+            docs.repartition(spark.sparkContext.defaultParallelism)
+            .select("doc_id", tokens_expr(F.col("text")).alias("w"))
+            .filter(F.size("w") >= 3)
+            .select("doc_id", F.explode(shingles_expr(F.col("w"))).alias("shingle"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+
+    return index_registry.get(
+        spark, sf_dir, "posting", build, release=lambda df: df.unpersist()
     )
-    _POSTING_CACHE[key] = out
-    return out
 
 
 def jaccard_pairs(
@@ -593,17 +544,21 @@ def _sig_from_exploded(ex: DataFrame) -> DataFrame:
 
 def _session_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached full-corpus LSH band-bucket index (band, band_key,
-    doc_id) — see the ``_BUCKET_CACHE`` note. ~LSH_BANDS rows per doc,
-    localCheckpoint'd so consumers read materialized blocks instead of
-    re-running the 16-hash minhash signature aggregate."""
-    key = (spark.sparkContext.applicationId, _norm_tier(sf_dir))
-    cached = _BUCKET_CACHE.get(key)
-    if cached is None:
-        cached = _band_buckets_from_sig(
-            minhash_signatures(spark, sf_dir)
-        ).localCheckpoint()
-        _BUCKET_CACHE[key] = cached
-    return cached
+    doc_id) — the standing minhash index the incremental path persists
+    to parquet for the base stripe (``_persisted_bucket_index``), here
+    for the whole tier, read by every batch consumer (minhash_band_buckets,
+    minhash_near_dup and its dedup_clusters / dedup_keep_list /
+    curation_pipeline / contrastive_triplets chain). ~LSH_BANDS rows per
+    doc, localCheckpoint'd so consumers read materialized blocks instead
+    of re-running the 16-hash minhash signature aggregate; derived from
+    the posting list, so dropping that drops this."""
+    return index_registry.get(
+        spark,
+        sf_dir,
+        "minhash_buckets",
+        lambda: _band_buckets_from_sig(minhash_signatures(spark, sf_dir)).localCheckpoint(),
+        release=free_checkpoint,
+    )
 
 
 def _band_buckets_from_sig(sig: DataFrame) -> DataFrame:
@@ -1369,29 +1324,21 @@ CDC_WINDOW = 4  # trailing tokens hashed per boundary test
 CDC_MOD = 16  # boundary when h % MOD == 0 → mean chunk ≈ 16 tokens
 
 
-# (applicationId, sf_dir) -> localCheckpoint'd (doc_id, chunk_hash,
-# n_tokens) CDC chunk occurrences — the chunk-level twin of the shingle
-# posting list (_POSTING_CACHE): deterministic md5 boundaries, built
-# once per (session, tier). r13 — previously cdc_chunk_jaccard_pairs
-# fanned the UNPERSISTED chunker into four consumer subtrees (rare, cr,
-# sizes, both join sides), so the tokenize+boundary+slice pipeline
-# re-ran several times per invocation (Spark does not dedupe common
-# subplans). Evicted by invalidate_posting_cache.
-_CDC_CHUNK_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _cdc_chunk_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, chunk_hash, n_tokens) — one row per CDC chunk
     occurrence; the chunker shared by the dup report and the
-    chunk-Jaccard pair miner. Pure JVM array algebra in the scan;
-    session-cached (see ``_CDC_CHUNK_CACHE``)."""
-    key = (spark.sparkContext.applicationId, _norm_tier(sf_dir))
-    cached = _CDC_CHUNK_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _cdc_chunk_hashes_build(spark, sf_dir).localCheckpoint()
-    _CDC_CHUNK_CACHE[key] = out
-    return out
+    chunk-Jaccard pair miner. Pure JVM array algebra in the scan. The
+    chunk-level twin of the shingle posting list: deterministic md5
+    boundaries, localCheckpoint'd once per (session, tier), because
+    the dup report fans the chunker into four consumer subtrees and
+    Spark does not dedupe common subplans."""
+    return index_registry.get(
+        spark,
+        sf_dir,
+        "cdc_chunks",
+        lambda: _cdc_chunk_hashes_build(spark, sf_dir).localCheckpoint(),
+        release=free_checkpoint,
+    )
 
 
 def _cdc_chunk_hashes_build(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,7 +36,6 @@ rounds reference the build chain recursively — exponential re-eval.
 from __future__ import annotations
 
 import math
-from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -45,9 +44,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
+from lakehouse_admin_spark import index_registry
+from lakehouse_admin_spark.index_registry import free_checkpoint
 from lakehouse_admin_spark.operators.similarity import (
     _as_double,
-    _free_checkpoint,
     block_size_for,
     norm_expr,
     pair_dot,
@@ -109,17 +109,14 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def exact_knn_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached exact k-NN edge index (src, dst, cosine, rank ≤
     KNN_K) over the tier's embeddings — the ground-truth graph every
-    graph-analytics consumer shares. Rides the bounded ``_GRAPH_CACHE``
-    LRU (explicitly invalidatable via :func:`invalidate_graph_caches`
-    after an embeddings rewrite); deterministic build, so caching never
-    changes results."""
+    graph-analytics consumer shares. A "graph" entry of the index
+    registry (invalidate "graph" after an embeddings rewrite);
+    deterministic build, so caching never changes results."""
 
     def build() -> DataFrame:
         return _exact_knn_edges(spark, sf_dir).localCheckpoint()
 
-    return _cached(
-        ("exact_knn", spark.sparkContext.applicationId, sf_dir), build
-    )
+    return _graph_index(spark, sf_dir, "exact_knn", build)
 
 
 def _exact_knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,7 +286,7 @@ def nn_descent_edges(
         # otherwise linger until GC — rounds × graph size of storage).
         prev = graph
         graph = rank_topk(cand, pool).localCheckpoint()
-        _free_checkpoint(prev)
+        free_checkpoint(prev)
     return graph.filter(F.col("rank") <= KNN_K)
 
 
@@ -310,10 +307,10 @@ def nnd_index(
     def build() -> DataFrame:
         wide = nn_descent_edges(spark, sf_dir, rounds=rounds, pool=pool)
         out = wide.localCheckpoint()
-        _free_checkpoint(wide)  # pool-width intermediate
+        free_checkpoint(wide)  # pool-width intermediate
         return out
 
-    return _cached(("nnd", spark.sparkContext.applicationId, sf_dir, rounds, pool), build)
+    return _graph_index(spark, sf_dir, ("nnd", rounds, pool), build)
 
 
 # 6dp-rounded all-pairs cosine CTE shared by every unrolled oracle
@@ -451,64 +448,15 @@ def _gs_oracle() -> str:
     return head + "," + ",".join(rounds) + tail
 
 
-# Bounded LRU over every cached graph artifact (edge indexes, HNSW
-# layer graphs). A graph is an INDEX — built once per (session, tier),
-# searched many times — but a long-lived server must be able to evict:
-# the cache is size-bounded and explicitly invalidatable (e.g. after an
-# embeddings rewrite). Deterministic builds, so caching never changes
-# results.
-_GRAPH_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-GRAPH_CACHE_MAX = 16
-# hnsw_search prebuilds layer graphs on concurrent threads, so the
-# LRU's insert/evict must be atomic: an unlocked eviction racing a
-# concurrent insert could unpersist a just-built checkpoint another
-# thread still holds (r11 ADVICE). build() runs OUTSIDE the lock —
-# a rare double-build of the same key loses the race and frees its
-# duplicate, which is cheap; serialized builds would defeat the
-# concurrent prebuild entirely.
-import threading  # noqa: E402
-
-_GRAPH_CACHE_LOCK = threading.RLock()
-
-
-def _cached(key: tuple, build) -> DataFrame:
-    with _GRAPH_CACHE_LOCK:
-        df = _GRAPH_CACHE.get(key)
-        if df is not None:
-            _GRAPH_CACHE.move_to_end(key)
-            return df
-    df = build()
-    evicted: list[DataFrame] = []
-    with _GRAPH_CACHE_LOCK:
-        winner = _GRAPH_CACHE.get(key)
-        if winner is not None:  # lost a same-key build race
-            _GRAPH_CACHE.move_to_end(key)
-            if winner is not df:
-                evicted.append(df)  # free the duplicate build
-            df = winner
-        else:
-            _GRAPH_CACHE[key] = df
-            while len(_GRAPH_CACHE) > GRAPH_CACHE_MAX:
-                _, ev = _GRAPH_CACHE.popitem(last=False)
-                evicted.append(ev)
-    for ev in evicted:  # unpersist outside the lock (py4j round-trips)
-        _free_checkpoint(ev)
-    return df
-
-
-def invalidate_graph_caches(sf_dir: str | None = None) -> int:
-    """Drop cached graph indexes — ALL of them, or only those built
-    over ``sf_dir`` (call after rewriting that tier's embeddings) —
-    and unpersist their checkpointed blocks immediately.
-    Returns the number of evicted entries."""
-    with _GRAPH_CACHE_LOCK:
-        keys = [
-            k for k in _GRAPH_CACHE if sf_dir is None or k[2] == sf_dir
-        ]
-        victims = [_GRAPH_CACHE.pop(k) for k in keys]
-    for v in victims:
-        _free_checkpoint(v)
-    return len(keys)
+def _graph_index(spark: SparkSession, sf_dir: str, variant, build) -> DataFrame:
+    """A graph artifact (edge index, HNSW layer graph, seed frame) —
+    built once per (session, tier) and searched many times, as a
+    localCheckpoint'd "graph" entry of the index registry. Deterministic
+    builds, so caching never changes results; invalidate "graph" after
+    an embeddings rewrite."""
+    return index_registry.get(
+        spark, sf_dir, "graph", build, variant=variant, release=free_checkpoint
+    )
 
 
 def _vectors_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,7 +477,7 @@ def _vectors_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nrm", norm_expr(F.col("embedding"))
         ).localCheckpoint()
 
-    return _cached(("vecs", spark.sparkContext.applicationId, sf_dir), build)
+    return _graph_index(spark, sf_dir, "vecs", build)
 
 
 def _undirected_edges(
@@ -556,7 +504,7 @@ def _undirected_edges(
             .localCheckpoint()
         )
 
-    return _cached(("edges", spark.sparkContext.applicationId, sf_dir, source), build)
+    return _graph_index(spark, sf_dir, ("edges", source), build)
 
 
 @query("graph_ann_search", oracle=_gs_oracle())
@@ -623,7 +571,7 @@ def graph_ann_search(
             .drop("rn")
             .localCheckpoint()
         )
-        _free_checkpoint(prev)
+        free_checkpoint(prev)
     return (
         beam.filter(F.col("node") != F.col("query_id"))
         .withColumn("rank", F.row_number().over(w).cast("int"))
@@ -788,7 +736,7 @@ def _subset_nnd_edges(
         cand = edges.union(non).distinct()
         prev = graph
         graph = rank_topk(cand, pool).localCheckpoint()
-        _free_checkpoint(prev)
+        free_checkpoint(prev)
     return graph.filter(F.col("rank") <= keep).select("src", "dst")
 
 
@@ -821,8 +769,8 @@ def _layer_edges(spark: SparkSession, sf_dir: str, layer: int) -> DataFrame:
     (level >= layer), built with SUBSET NN-DESCENT — sub-quadratic in
     the layer size. The r4 version was a broadcast crossJoin self-join:
     fine for the top layers but layer 1 holds ~n/M of the corpus, which
-    is neither broadcastable nor all-pairs-scannable at 100 TB. Cached
-    in the bounded LRU (see ``_cached`` / :func:`invalidate_graph_caches`)."""
+    is neither broadcastable nor all-pairs-scannable at 100 TB. A
+    "graph" entry of the index registry (see :func:`_graph_index`)."""
 
     def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -833,7 +781,7 @@ def _layer_edges(spark: SparkSession, sf_dir: str, layer: int) -> DataFrame:
         ).distinct()
         return und.localCheckpoint()
 
-    return _cached(("layer", spark.sparkContext.applicationId, sf_dir, layer), build)
+    return _graph_index(spark, sf_dir, ("layer", layer), build)
 
 
 def _subset_nnd_cte(
@@ -1107,14 +1055,14 @@ def hnsw_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .drop("rn")
                     .localCheckpoint()
                 )
-                _free_checkpoint(prev)
+                free_checkpoint(prev)
         return cur
 
     # QUERY_STRIDE is read at call time (stress bench and tests patch
     # it), so the query set — and therefore the seed frame — varies
     # with it: it MUST be part of the cache key or a stride change
     # would silently serve seeds for the old query set.
-    seeds = _cached(("hnsw_seeds", spark.sparkContext.applicationId, sf_dir, QUERY_STRIDE), build_seeds)
+    seeds = _graph_index(spark, sf_dir, ("hnsw_seeds", QUERY_STRIDE), build_seeds)
     # layer 0: beam search seeded by the descended entry per query,
     # over the sub-quadratically-built NN-descent edge index
     edges0 = _undirected_edges(spark, sf_dir)
@@ -1135,7 +1083,7 @@ def hnsw_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
         if prev is not seeds:  # the cached seed frame must stay live
-            _free_checkpoint(prev)
+            free_checkpoint(prev)
     return (
         beam.filter(F.col("node") != F.col("query_id"))
         .withColumn("rank", F.row_number().over(w).cast("int"))

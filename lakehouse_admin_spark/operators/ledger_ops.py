@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakehouse_admin_spark import index_registry
 from lakehouse_admin_spark.metadata import drilldown, partitions_df, snapshots_df
 from lakehouse_admin_spark.operators.analyze import OptimizeSettings
 from lakehouse_admin_spark.registry import query
@@ -926,13 +927,6 @@ def ledger_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on both dimensions so pruning has work to do)
 Z_USER_LO, Z_USER_HI, Z_VALUE_MIN = 0, 9, 50.0
 
-# (applicationId, tier name) -> z-order rewrite applied (applicationId
-# is unique per SparkContext — id(spark) can be reused by CPython after
-# a session is GC'd, which would silently skip the rewrite and break
-# the pruning pin)
-_ZORDER_DONE: set[tuple] = set()
-
-
 def _events_z_tbl(spark: SparkSession, sf_dir: str) -> LedgerTable:
     """A SEPARATE events ledger clustered by a (user_id, value) z-order
     rewrite — separate because compaction changes file counts, and the
@@ -945,8 +939,8 @@ def _events_z_tbl(spark: SparkSession, sf_dir: str) -> LedgerTable:
     # fixture (so the _LIVE oracle holds) without the 5-commit lineage
     # the z-order rewrite would immediately obliterate
     tbl = build_events_ledger(spark, sf_dir, catalog, name=name, appends_per_day=False)
-    key = (spark.sparkContext.applicationId, name)
-    if key not in _ZORDER_DONE:
+
+    def zorder() -> bool:
         # fixture-scale target size: split each day partition into
         # several z-clustered files (the real 512 MiB default yields
         # many files per partition at production bytes; one file per
@@ -961,7 +955,11 @@ def _events_z_tbl(spark: SparkSession, sf_dir: str) -> LedgerTable:
             min_files_per_group=3,
         )
         tbl.write_manifest()
-        _ZORDER_DONE.add(key)
+        return True
+
+    # once per (session, table): the rewrite is applied to the
+    # catalog's table, so the registry entry lives on the warehouse
+    index_registry.get(spark, catalog.warehouse, "zorder", zorder, variant=name)
     return tbl
 
 

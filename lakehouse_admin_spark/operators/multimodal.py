@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lakehouse_admin_spark import index_registry
+from lakehouse_admin_spark.index_registry import free_checkpoint
 from lakehouse_admin_spark.registry import query
 from lakehouse_admin_spark.sources.tables import load_table
 
@@ -355,29 +357,6 @@ def _feature_ann_oracle() -> str:
     """
 
 
-# (applicationId, abspath(sf_dir)) -> localCheckpoint'd (doc_id, feat)
-# encoded feature frame — the multimodal tier's EMBEDDING TABLE: in a
-# real pipeline the encoder runs once per asset and the features are a
-# standing, materialized asset every retrieval query reads (the
-# docstring's "encode once" contract made literal). r13 — previously
-# every invocation re-ran the encode kernel over the whole corpus AND
-# a second time over the query stride.
-_MM_FEAT_CACHE: dict[tuple, DataFrame] = {}
-
-
-def invalidate_multimodal_cache(sf_dir: str | None = None) -> int:
-    """Drop cached multimodal feature frames — all, or one tier's (call
-    after rewriting its documents; the invalidate_ivf_cache contract).
-    Returns the number evicted."""
-    import os as _os
-
-    norm = None if sf_dir is None else _os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _MM_FEAT_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        del _MM_FEAT_CACHE[k]  # localCheckpoint blocks free with the GC
-    return len(keys)
-
-
 def _make_featurizer():
     """Arrow-batched md5 feature encoder (double precision — the
     float32 carrier in extract_features would quantize away oracle
@@ -397,22 +376,23 @@ def _make_featurizer():
 
 
 def _session_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build (or fetch) the session (doc_id, feat) feature frame —
-    payloads run through the encode kernel exactly once per
-    (session, tier), payload dropped at the kernel boundary."""
-    import os as _os
+    """Build (or fetch) the session (doc_id, feat) feature frame — the
+    multimodal tier's EMBEDDING TABLE: in a real pipeline the encoder
+    runs once per asset and the features are a standing, materialized
+    asset every retrieval query reads. Payloads run through the encode
+    kernel exactly once per (session, tier), payload dropped at the
+    kernel boundary, localCheckpoint'd in the index registry."""
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir.rstrip("/")))
-    hit = _MM_FEAT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    payloads = attach_binary_payload(docs).select("doc_id", "payload")
-    feats = payloads.mapInPandas(
-        _make_featurizer(), "doc_id bigint, feat array<double>"
-    ).localCheckpoint()
-    _MM_FEAT_CACHE[key] = feats
-    return feats
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        payloads = attach_binary_payload(docs).select("doc_id", "payload")
+        return payloads.mapInPandas(
+            _make_featurizer(), "doc_id bigint, feat array<double>"
+        ).localCheckpoint()
+
+    return index_registry.get(
+        spark, sf_dir, "mm_features", build, release=free_checkpoint
+    )
 
 
 @query("multimodal_feature_ann", oracle=_feature_ann_oracle())

@@ -26,11 +26,10 @@ floor — the indexed tiers swap in unchanged). Fusion joins two
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lakehouse_admin_spark import index_registry
 from lakehouse_admin_spark.operators import similarity as _sim
 from lakehouse_admin_spark.operators.dedup import tokens_expr
 from lakehouse_admin_spark.operators.similarity import (
@@ -141,46 +140,14 @@ _BM25_CTE = rf"""
 """
 
 
-# (applicationId, abspath(sf_dir), scope) -> (persisted tf frame, n,
-# avgdl), scope ∈ {"full", "base"} ("base" = the frozen pre-delta
-# corpus the incremental query scores against).
-# The corpus-sized inverted frame used to be persisted per invocation
-# and never unpersisted — every bm25_topk / rrf_hybrid_topk call leaked
-# one cached frame for the session lifetime (r10 ADVICE). The dsir-LM
-# pattern instead: one persisted frame per (app, corpus), reused by
-# both consumers, invalidated explicitly. applicationId is unique per
-# SparkContext, unlike id(spark), which CPython can reuse.
-_BM25_CACHE: dict[
-    tuple[str, str, str], tuple[DataFrame, DataFrame, float, float]
-] = {}
-
-
-def invalidate_bm25_cache(sf_dir: str | None = None) -> int:
-    """Drop (and unpersist) cached BM25 corpus frames — all, or only the
-    ones built over ``sf_dir``. Returns the number evicted. Call after
-    the documents fixture under ``sf_dir`` is rewritten in place."""
-    norm = os.path.abspath(sf_dir.rstrip("/")) if sf_dir is not None else None
-    victims = [k for k in _BM25_CACHE if norm is None or k[1] == norm]
-    for k in victims:
-        for frame in _BM25_CACHE[k][:2]:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to free
-        del _BM25_CACHE[k]
-    # the cached delta-size probe is a property of the same corpus
-    # snapshot — drop it with the index frames
-    for k in [k for k in _DELTA_SIZE_CACHE if norm is None or k[1] == norm]:
-        del _DELTA_SIZE_CACHE[k]
-    return len(victims)
-
-
 def _bm25_corpus(
     spark: SparkSession, sf_dir: str, base_only: bool = False
 ) -> tuple[DataFrame, DataFrame, float, float]:
     """(tf frame incl. per-doc length, df frame, N, avgdl) for the
     corpus — one tokenize scan per (session, corpus, scope), persisted
-    and cached (see ``_BM25_CACHE``). The document length rides ON the
+    once and shared by both consumers as the registry's "bm25" entry
+    (a per-invocation persist used to leak one cached frame per
+    bm25_topk / rrf_hybrid_topk call). The document length rides ON the
     posting rows (``dl`` is constant per doc, so it joins into the
     grouping keys for free at build), which removes a corpus-wide
     doc_id-keyed join from EVERY serve; the vocabulary-sized df frame
@@ -192,14 +159,19 @@ def _bm25_corpus(
     # bench patches retrieval.BM25_DELTA per tier, and a key without it
     # would silently serve an index frozen under a different stripe if
     # two tiers ever shared an sf_dir (r11 ADVICE).
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir.rstrip("/")),
-        f"base:{BM25_DELTA}" if base_only else "full",
+    return index_registry.get(
+        spark,
+        sf_dir,
+        "bm25",
+        lambda: _bm25_corpus_build(spark, sf_dir, base_only),
+        variant=f"base:{BM25_DELTA}" if base_only else "full",
+        release=lambda v: (v[0].unpersist(), v[1].unpersist()),
     )
-    hit = _BM25_CACHE.get(key)
-    if hit is not None:
-        return hit
+
+
+def _bm25_corpus_build(
+    spark: SparkSession, sf_dir: str, base_only: bool
+) -> tuple[DataFrame, DataFrame, float, float]:
     from pyspark.storagelevel import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")
@@ -227,9 +199,7 @@ def _bm25_corpus(
         F.count(F.lit(1)).alias("n"),
         F.avg(F.size("toks").cast("double")).alias("avgdl"),
     ).collect()[0]  # two scalars of corpus stats
-    out = (tf, dfr, float(row["n"]), float(row["avgdl"]))
-    _BM25_CACHE[key] = out
-    return out
+    return tf, dfr, float(row["n"]), float(row["avgdl"])
 
 
 def _bm25_ranked(spark: SparkSession, sf_dir: str, top: int) -> DataFrame:
@@ -722,25 +692,19 @@ def bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = load_table(spark, sf_dir, "documents").filter(F.expr(BM25_DELTA))
     # The stripe's batch-sizedness is a property of the frozen corpus
     # snapshot, so probe it ONCE per (session, tier, predicate) instead
-    # of per serve (3 probes per bench row otherwise). Invalidated with
-    # the corpus cache: same key family, same rewrite hook.
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir.rstrip("/")),
-        f"delta_batch_sized:{BM25_DELTA}:{BM25_BROADCAST_MAX_DOCS}",
+    # of per serve (3 probes per bench row otherwise). A variant of the
+    # "bm25" entry: invalidating the corpus index drops it too.
+    bound = BM25_BROADCAST_MAX_DOCS
+    batch_sized = index_registry.get(
+        spark,
+        sf_dir,
+        "bm25",
+        lambda: delta.select("doc_id").limit(bound + 1).count() <= bound,
+        variant=f"delta_batch_sized:{BM25_DELTA}:{bound}",
     )
-    batch_sized = _DELTA_SIZE_CACHE.get(key)
-    if batch_sized is None:
-        bound = BM25_BROADCAST_MAX_DOCS
-        batch_sized = delta.select("doc_id").limit(bound + 1).count() <= bound
-        _DELTA_SIZE_CACHE[key] = batch_sized
     return bm25_route_frame(
         spark, sf_dir, delta, batch_sized=batch_sized
     ).orderBy("query_id", "rank")
-
-
-# (applicationId, tier, predicate) -> bool; dropped by invalidate_bm25_cache
-_DELTA_SIZE_CACHE: dict[tuple[str, str, str], bool] = {}
 
 
 def bm25_route_frame(

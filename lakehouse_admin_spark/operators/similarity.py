@@ -42,6 +42,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from lakehouse_admin_spark import index_registry
+from lakehouse_admin_spark.index_registry import free_checkpoint
 from lakehouse_admin_spark.registry import query
 from lakehouse_admin_spark.sources.tables import load_table
 
@@ -379,50 +381,28 @@ _SQ_ORACLE = f"""
 """
 
 
-# (applicationId, abspath(sf_dir)) -> (lo list, hi list): the trained
-# scalar quantizer is 2·d doubles — train once per tier, serve many
-# (the ivf_index pattern: applicationId is unique per SparkContext,
-# unlike id(spark), which CPython can reuse after a session is GC'd;
-# no checkpoint to free, so a plain bounded dict)
-_SQ_STATS_CACHE: dict[tuple, tuple[list[float], list[float]]] = {}
-
-
-def invalidate_sq_cache(sf_dir: str | None = None) -> int:
-    """Drop cached SQ8 codebooks — all, or one tier's (call after
-    rewriting its embeddings, same contract as
-    :func:`invalidate_ivf_cache`). Returns the number evicted."""
-    norm = None if sf_dir is None else os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _SQ_STATS_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        del _SQ_STATS_CACHE[k]
-    return len(keys)
-
-
 def sq_train_stats(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[float], list[float]]:
     """Per-dimension [lo, hi] over the corpus — the SQ8 codebook. One
-    map-side-combinable aggregate; 2·d doubles of driver state."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir.rstrip("/")))
-    hit = _SQ_STATS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings")
-    stats = (
-        emb.select(F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(
-            F.min(F.col("v").cast("double")).alias("lo"),
-            F.max(F.col("v").cast("double")).alias("hi"),
+    map-side-combinable aggregate; 2·d doubles of driver state, trained
+    once per (session, tier) in the index registry."""
+
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings")
+        stats = (
+            emb.select(F.posexplode("embedding").alias("pos", "v"))
+            .groupBy("pos")
+            .agg(
+                F.min(F.col("v").cast("double")).alias("lo"),
+                F.max(F.col("v").cast("double")).alias("hi"),
+            )
+            .collect()
         )
-        .collect()
-    )
-    stats.sort(key=lambda r: r["pos"])
-    out = ([float(r["lo"]) for r in stats], [float(r["hi"]) for r in stats])
-    if len(_SQ_STATS_CACHE) >= 8:
-        _SQ_STATS_CACHE.pop(next(iter(_SQ_STATS_CACHE)))
-    _SQ_STATS_CACHE[key] = out
-    return out
+        stats.sort(key=lambda r: r["pos"])
+        return ([float(r["lo"]) for r in stats], [float(r["hi"]) for r in stats])
+
+    return index_registry.get(spark, sf_dir, "sq", build)
 
 
 @query(
@@ -507,17 +487,6 @@ def ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus mean, packed into two 32-bit halves (BIGINT shifts stay ≤31 —
 # bit 63 overflow semantics differ across engines). 64 dims → 8 bytes
 # per vector, a 32× cut vs float32: the cheapest serving tier.
-_BIN_MU_CACHE: dict[tuple, list[float]] = {}
-
-
-def invalidate_binary_cache(sf_dir: str | None = None) -> int:
-    """Drop cached per-dim means — all, or one tier's (call after
-    rewriting its embeddings, the invalidate_sq_cache contract)."""
-    norm = None if sf_dir is None else os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _BIN_MU_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        del _BIN_MU_CACHE[k]
-    return len(keys)
 
 
 def binary_train_mu(spark: SparkSession, sf_dir: str) -> list[float]:
@@ -527,23 +496,19 @@ def binary_train_mu(spark: SparkSession, sf_dir: str) -> list[float]:
     could flip a `v > μ` bit; rounded to 6dp both engines hold the
     IDENTICAL double, after which the comparison is exact. One
     map-side-combinable aggregate, d doubles of driver state."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir.rstrip("/")))
-    hit = _BIN_MU_CACHE.get(key)
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.select(F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("m"))
-        .collect()
-    )
-    rows.sort(key=lambda r: r["pos"])
-    out = [float(r["m"]) for r in rows]
-    if len(_BIN_MU_CACHE) >= 8:
-        _BIN_MU_CACHE.pop(next(iter(_BIN_MU_CACHE)))
-    _BIN_MU_CACHE[key] = out
-    return out
+
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings")
+        rows = (
+            emb.select(F.posexplode("embedding").alias("pos", "v"))
+            .groupBy("pos")
+            .agg(F.round(F.avg(F.col("v").cast("double")), 6).alias("m"))
+            .collect()
+        )
+        rows.sort(key=lambda r: r["pos"])
+        return [float(r["m"]) for r in rows]
+
+    return index_registry.get(spark, sf_dir, "binary_mu", build)
 
 
 _BIN_ORACLE = f"""
@@ -1021,79 +986,21 @@ def ivf_cells(
     return cells, cents_df
 
 
-def _free_checkpoint(df: DataFrame | None) -> None:
-    """Promptly release a localCheckpoint'd DataFrame's storage blocks.
-    Dropping the Python reference alone leaves the checkpointed RDD in
-    executor storage until the JVM GC + ContextCleaner get to it; a
-    bounded cache must free on EVICTION, not eventually. A checkpointed
-    Dataset's analyzed plan is a LogicalRDD whose backing RDD we
-    unpersist directly; for a df LAYERED on a checkpoint (filter/select
-    over it) the LogicalRDD sits at a plan LEAF, so walk the leaves
-    (best-effort: non-checkpointed plans just no-op). Only call on
-    dfs whose underlying checkpoint is exclusively theirs."""
-    if df is None:
-        return
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        try:
-            plan.rdd().unpersist(False)
-            return
-        except Exception:
-            pass
-        leaves = plan.collectLeaves()
-        for i in range(leaves.size()):
-            try:
-                leaves.apply(i).rdd().unpersist(False)
-            except Exception:
-                pass
-    except Exception:
-        pass
-
-
 # Session-cached trained IVF indexes per (session, tier): an index is
 # TRAINED ONCE and served many times — per-query retraining is not the
 # serving shape (at 100 TB the quantizer persists alongside the data).
-# Deterministic build, so caching never changes results; bounded LRU
-# with prompt checkpoint release, explicitly invalidatable after an
-# embeddings rewrite (mirrors graph_ann's edge-index cache).
-from collections import OrderedDict  # noqa: E402
-
-_IVF_CACHE: OrderedDict[tuple, tuple[DataFrame, DataFrame]] = OrderedDict()
-IVF_CACHE_MAX = 8
-
-
+# Deterministic build, so caching never changes results.
 def ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(cells, centroids) for the tier's embeddings — trained on first
-    use, then served from the session cache (cells localCheckpoint'd so
-    repeated queries never re-run the assignment kernel)."""
-    # applicationId is unique per SparkContext (a restarted session
-    # gets a new one — unlike id(spark), which CPython can reuse after
-    # GC and would serve checkpoints bound to a dead context);
-    # abspath-normalized dir matches _persisted_ivf_index's keying
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir.rstrip("/")))
-    hit = _IVF_CACHE.get(key)
-    if hit is not None:
-        _IVF_CACHE.move_to_end(key)
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cells, cents = ivf_cells(spark, emb)
-    hit = (cells.localCheckpoint(), cents)
-    _IVF_CACHE[key] = hit
-    while len(_IVF_CACHE) > IVF_CACHE_MAX:
-        _, (ev_cells, _ev_cents) = _IVF_CACHE.popitem(last=False)
-        _free_checkpoint(ev_cells)
-    return hit
+    use, then served from the index registry (cells localCheckpoint'd
+    so repeated queries never re-run the assignment kernel)."""
 
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        cells, cents = ivf_cells(spark, emb)
+        return cells.localCheckpoint(), cents
 
-def invalidate_ivf_cache(sf_dir: str | None = None) -> int:
-    """Drop cached IVF indexes — all, or one tier's (call after
-    rewriting its embeddings). Returns the number evicted."""
-    norm = None if sf_dir is None else os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _IVF_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        _free_checkpoint(_IVF_CACHE[k][0])
-        del _IVF_CACHE[k]
-    return len(keys)
+    return index_registry.get(spark, sf_dir, "ivf", build, release=free_checkpoint)
 
 
 def _kmeans_cte(
@@ -1573,40 +1480,23 @@ def lsh_band_df(emb: DataFrame, r: int) -> DataFrame:
     return emb.mapInPandas(kernel, schema)
 
 
-# (applicationId, abspath(sf_dir)) -> localCheckpoint'd (vec_id, band,
-# bucket) sign-random-projection band table — the vector tier's LSH
-# index, the exact twin of dedup's ``_BUCKET_CACHE`` band buckets:
-# deterministic LCG hyperplanes, built once per (session, tier), read
-# by the near-dup pair query and its clusters consumer. r13 —
-# previously every invocation re-ran the signature kernel over the
-# corpus and left a per-call .persist() behind.
-_LSH_BAND_CACHE: dict[tuple, DataFrame] = {}
-
-
-def invalidate_lsh_band_cache(sf_dir: str | None = None) -> int:
-    """Drop cached LSH band tables — all, or one tier's (call after
-    rewriting its embeddings; the invalidate_ivf_cache contract).
-    Returns the number evicted."""
-    norm = None if sf_dir is None else os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _LSH_BAND_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        del _LSH_BAND_CACHE[k]  # localCheckpoint blocks free with the GC
-    return len(keys)
-
-
 def _session_lsh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build (or fetch) the session LSH band table; r is derived from
-    the corpus count at build time (lsh_bits_per_band), so serving
-    pays neither the count action nor the signature kernel."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir.rstrip("/")))
-    hit = _LSH_BAND_CACHE.get(key)
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    r = lsh_bits_per_band(emb.count())
-    bands = lsh_band_df(emb, r).localCheckpoint()
-    _LSH_BAND_CACHE[key] = bands
-    return bands
+    """The session's localCheckpoint'd (vec_id, band, bucket)
+    sign-random-projection band table — the vector tier's LSH index,
+    the twin of dedup's minhash band buckets: deterministic LCG
+    hyperplanes, built once per (session, tier), read by the near-dup
+    pair query and its clusters consumer. r is derived from the corpus
+    count at build time (lsh_bits_per_band), so serving pays neither
+    the count action nor the signature kernel."""
+
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        r = lsh_bits_per_band(emb.count())
+        return lsh_band_df(emb, r).localCheckpoint()
+
+    return index_registry.get(
+        spark, sf_dir, "lsh_bands", build, release=free_checkpoint
+    )
 
 
 def _lsh_cte() -> str:
@@ -1959,17 +1849,13 @@ def _pq_index(
 
 
 # Session-cached PQ indexes per (session, tier, variant, stride) — the
-# same "encode once, serve many" contract as _IVF_CACHE: the Arrow
+# same "encode once, serve many" contract as ivf_index: the Arrow
 # encode kernel over the full corpus re-ran on EVERY pq-query
 # invocation (3× per bench row), dominating ann_ivf_pq_topk/_rerank
 # serve latency (r11 verdict #3). Codes AND luts localCheckpoint so a
 # warm serve is two checkpoint scans + joins. QUERY_STRIDE is part of
 # the key because the stress bench patches it per tier and the lut
 # frame bakes it in (the BM25 delta-predicate lesson, r11 ADVICE).
-_PQ_CACHE: OrderedDict[tuple, tuple[DataFrame, DataFrame]] = OrderedDict()
-PQ_CACHE_MAX = 8
-
-
 def pq_index(
     spark: SparkSession, sf_dir: str, with_cells: bool = False,
     variant: str | None = None,
@@ -1981,62 +1867,39 @@ def pq_index(
     OPQ-ROTATED embeddings instead (r14, ADVICE: previously a verbatim
     body copy in ``opq_pq_index`` — the cache/evict logic now exists
     once, the exact drift the r10 ``_adc_ranked`` consolidation was
-    meant to prevent)."""
+    meant to prevent). Cells ride only the "ivf" variant: asking for
+    them with any other explicit variant is a ``ValueError``."""
+    if with_cells and variant not in (None, "ivf"):
+        raise ValueError(f"with_cells=True needs variant 'ivf', got {variant!r}")
     variant = variant or ("ivf" if with_cells else "plain")
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir.rstrip("/")),
-        variant,
-        QUERY_STRIDE,
+
+    def build():
+        if variant == "opq":
+            emb = _rotated_embeddings(spark, sf_dir)
+        else:
+            emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+            if variant == "ivf":
+                cells, _cents = ivf_index(spark, sf_dir)
+                emb = emb.join(cells, "vec_id")
+        codes, luts = _pq_index(
+            spark, emb, cell_col="cell" if variant == "ivf" else None
+        )
+        return codes.localCheckpoint(), luts.localCheckpoint()
+
+    return index_registry.get(
+        spark, sf_dir, "pq", build, variant=(variant, QUERY_STRIDE),
+        release=free_checkpoint,
     )
-    hit = _PQ_CACHE.get(key)
-    if hit is not None:
-        _PQ_CACHE.move_to_end(key)
-        return hit
-    if variant == "opq":
-        emb = _rotated_embeddings(spark, sf_dir)
-        cell_col = None
-    else:
-        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        if variant == "ivf":
-            cells, _cents = ivf_index(spark, sf_dir)
-            emb = emb.join(cells, "vec_id")
-        cell_col = "cell" if variant == "ivf" else None
-    codes, luts = _pq_index(spark, emb, cell_col=cell_col)
-    hit = (codes.localCheckpoint(), luts.localCheckpoint())
-    _PQ_CACHE[key] = hit
-    while len(_PQ_CACHE) > PQ_CACHE_MAX:
-        _, (ev_codes, ev_luts) = _PQ_CACHE.popitem(last=False)
-        _free_checkpoint(ev_codes)
-        _free_checkpoint(ev_luts)
-    return hit
 
 
 def opq_pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(codes, query_luts) over the OPQ-ROTATED embeddings — the "opq"
-    variant in the same ``_PQ_CACHE`` (same eviction + invalidation).
+    variant of :func:`pq_index` (same registry entry family).
     r13: ``ann_opq_pq_topk`` previously called the raw ``_pq_index``
     builder directly, so the rotate AND encode kernels re-ran over the
     corpus on every invocation — the exact r11-verdict-#3 defect the
     plain/IVF variants were cured of in r12."""
     return pq_index(spark, sf_dir, variant="opq")
-
-
-def invalidate_pq_cache(sf_dir: str | None = None, variant: str | None = None) -> int:
-    """Drop cached PQ indexes — all, one tier's, and/or one variant's
-    (call after rewriting the tier's embeddings). Returns the number
-    evicted."""
-    norm = None if sf_dir is None else os.path.abspath(sf_dir.rstrip("/"))
-    keys = [
-        k
-        for k in _PQ_CACHE
-        if (norm is None or k[1] == norm) and (variant is None or k[2] == variant)
-    ]
-    for k in keys:
-        _free_checkpoint(_PQ_CACHE[k][0])
-        _free_checkpoint(_PQ_CACHE[k][1])
-        del _PQ_CACHE[k]
-    return len(keys)
 
 
 def _adc_ranked(codes: DataFrame, queries: DataFrame) -> DataFrame:
@@ -2991,51 +2854,33 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PCA_COMPONENTS = 8  # whitened components kept (top eigenvalues)
 
-# (applicationId, abspath(sf_dir)) -> (mu (d,), cov (d,d)) — the shared
-# second-moment model both eigen consumers (PCA whitening, the OPQ
-# rotation) decompose; (d²+d)/2 + d doubles of state, trained once per
-# tier. r13 — previously pca_whiten_project re-ran the covariance pass
-# PLUS a second mean pass per invocation, and _opq_rotation ran its own
-# copies of both at first train.
-_COV_CACHE: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-
-
-def invalidate_cov_cache(sf_dir: str | None = None) -> int:
-    """Drop cached (mu, cov) second-moment models — all, or one tier's
-    (call after rewriting its embeddings; ``invalidate_opq_cache``
-    chains here, so the OPQ stack needs only that one call — r14)."""
-    norm = None if sf_dir is None else os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _COV_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        del _COV_CACHE[k]
-    return len(keys)
-
-
 def _cov_model(spark: SparkSession, sf_dir: str) -> tuple[np.ndarray, np.ndarray]:
-    """Train (or fetch) the tier's (mu, cov): one distributed Gram pass
-    (:func:`embedding_covariance` — itself computes the mean pass) plus
-    one mean aggregate, driver state only."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir.rstrip("/")))
-    hit = _COV_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cov_rows = embedding_covariance(spark, sf_dir).collect()
-    c = np.zeros((EMB_DIM, EMB_DIM))
-    for r in cov_rows:
-        c[r["dim_i"] - 1, r["dim_j"] - 1] = r["cov"]
-        c[r["dim_j"] - 1, r["dim_i"] - 1] = r["cov"]
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    mu_rows = (
-        emb.select(F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.avg(F.col("v").cast("double")).alias("m"))
-        .collect()
-    )
-    mu = np.zeros(EMB_DIM)
-    for r in mu_rows:
-        mu[r["pos"]] = float(r["m"])
-    _COV_CACHE[key] = (mu, c)
-    return mu, c
+    """Train (or fetch) the tier's (mu, cov) — the shared second-moment
+    model both eigen consumers (PCA whitening, the OPQ rotation)
+    decompose; (d²+d)/2 + d doubles of state, trained once per tier:
+    one distributed Gram pass (:func:`embedding_covariance` — itself
+    computes the mean pass) plus one mean aggregate, driver state
+    only."""
+
+    def build():
+        cov_rows = embedding_covariance(spark, sf_dir).collect()
+        c = np.zeros((EMB_DIM, EMB_DIM))
+        for r in cov_rows:
+            c[r["dim_i"] - 1, r["dim_j"] - 1] = r["cov"]
+            c[r["dim_j"] - 1, r["dim_i"] - 1] = r["cov"]
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        mu_rows = (
+            emb.select(F.posexplode("embedding").alias("pos", "v"))
+            .groupBy("pos")
+            .agg(F.avg(F.col("v").cast("double")).alias("m"))
+            .collect()
+        )
+        mu = np.zeros(EMB_DIM)
+        for r in mu_rows:
+            mu[r["pos"]] = float(r["m"])
+        return mu, c
+
+    return index_registry.get(spark, sf_dir, "cov", build)
 
 
 @query("pca_whiten_project")  # no SQL oracle — documented impossibility
@@ -3121,29 +2966,6 @@ def pca_whiten_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # before an IVFPQ index.
 # ---------------------------------------------------------------------------
 
-# (applicationId, abspath(sf_dir)) -> (mu (d,), R (d,d)) — the trained
-# rotation is d² doubles of model state, trained once per tier
-_OPQ_CACHE: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-
-
-def invalidate_opq_cache(sf_dir: str | None = None) -> int:
-    """Drop cached OPQ rotations — all, or one tier's (call after
-    rewriting its embeddings; same contract as invalidate_ivf_cache).
-    This is the ONE call an embeddings rewrite needs for the OPQ stack
-    (r14, ADVICE): it chains to the BASE (mu, cov) second-moment model
-    (``_COV_CACHE`` — a retrain would otherwise silently reuse stale
-    statistics; pre-r13 the rotation recomputed cov/mu fresh) and to
-    the DERIVED "opq"-variant PQ codes/LUTs (encoded with the dropped
-    rotation). Returns the number of rotations evicted."""
-    norm = None if sf_dir is None else os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _OPQ_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        del _OPQ_CACHE[k]
-    invalidate_cov_cache(sf_dir)
-    invalidate_pq_cache(sf_dir, variant="opq")
-    return len(keys)
-
-
 def opq_eigenvalue_allocation(evals: np.ndarray, m: int, d_sub: int) -> list[int]:
     """The paper's eigenvalue-allocation step: assign principal
     directions (eigenvalues descending) to ``m`` buckets of ``d_sub``
@@ -3170,32 +2992,33 @@ def _opq_rotation(spark: SparkSession, sf_dir: str) -> tuple[np.ndarray, np.ndar
     d×d solve on the distributed Gram pass, the embedding_covariance
     plan), sign-canonicalized eigenvectors, eigenvalue allocation into
     PQ_M buckets of PQ_D — R's rows are the principal directions laid
-    out so subspace b owns dims [b·PQ_D, (b+1)·PQ_D)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir.rstrip("/")))
-    hit = _OPQ_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # shared (mu, cov) model — the same cached Gram pass PCA whitening
-    # decomposes (r13: training previously ran its own covariance AND
-    # mean jobs)
-    mu, c = _cov_model(spark, sf_dir)
-    evals, evecs = np.linalg.eigh(c)
-    order = np.argsort(evals)[::-1]
-    lam, v = evals[order], evecs[:, order]
-    for j in range(v.shape[1]):  # sign canonicalization (BLAS-stable)
-        k = int(np.argmax(np.abs(v[:, j])))
-        if v[k, j] < 0:
-            v[:, j] = -v[:, j]
-    buckets = opq_eigenvalue_allocation(lam, PQ_M, PQ_D)
-    # slot each descending principal direction into its bucket's next
-    # free row: R @ (x - mu) lands subspace b in dims [b*PQ_D,(b+1)*PQ_D)
-    rot = np.zeros((EMB_DIM, EMB_DIM))
-    fill = [0] * PQ_M
-    for i, b in enumerate(buckets):
-        rot[b * PQ_D + fill[b], :] = v[:, i]
-        fill[b] += 1
-    _OPQ_CACHE[key] = (mu, rot)
-    return mu, rot
+    out so subspace b owns dims [b·PQ_D, (b+1)·PQ_D). The (mu, R)
+    model is d² doubles, trained once per tier; it derives from the
+    cached (mu, cov) model, so invalidating "cov" drops it too."""
+
+    def build():
+        # shared (mu, cov) model — the same cached Gram pass PCA
+        # whitening decomposes
+        mu, c = _cov_model(spark, sf_dir)
+        evals, evecs = np.linalg.eigh(c)
+        order = np.argsort(evals)[::-1]
+        lam, v = evals[order], evecs[:, order]
+        for j in range(v.shape[1]):  # sign canonicalization (BLAS-stable)
+            k = int(np.argmax(np.abs(v[:, j])))
+            if v[k, j] < 0:
+                v[:, j] = -v[:, j]
+        buckets = opq_eigenvalue_allocation(lam, PQ_M, PQ_D)
+        # slot each descending principal direction into its bucket's
+        # next free row: R @ (x - mu) lands subspace b in dims
+        # [b*PQ_D, (b+1)*PQ_D)
+        rot = np.zeros((EMB_DIM, EMB_DIM))
+        fill = [0] * PQ_M
+        for i, b in enumerate(buckets):
+            rot[b * PQ_D + fill[b], :] = v[:, i]
+            fill[b] += 1
+        return mu, rot
+
+    return index_registry.get(spark, sf_dir, "opq", build)
 
 
 def _rotated_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3245,13 +3068,13 @@ def ann_opq_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     error on anisotropic corpora (real embedding corpora always are).
 
     Scale shape: training is the covariance pass (shuffle flat in
-    corpus size) plus a d×d driver solve, cached per tier with
-    :func:`invalidate_opq_cache`; the rotation adds one GEMM per Arrow
+    corpus size) plus a d×d driver solve, cached per tier in the index
+    registry; the rotation adds one GEMM per Arrow
     batch to the encode path and NOTHING to serving (queries rotate
     through the same broadcast matrix before LUT construction); the
     ADC join and ranking are byte-identical to ann_pq_topk (the shared
-    :func:`_adc_ranked` pipeline). The rotated codes + LUTs ride the
-    session ``_PQ_CACHE`` ("opq" variant, r13) — warm serves are two
+    :func:`_adc_ranked` pipeline). The rotated codes + LUTs are the
+    "opq" variant of :func:`pq_index` — warm serves are two
     checkpoint scans + the ADC join, no rotate/encode kernels."""
     codes, queries = opq_pq_index(spark, sf_dir)
     return _adc_ranked(codes, queries)

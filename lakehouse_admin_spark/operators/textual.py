@@ -14,6 +14,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from lakehouse_admin_spark import index_registry
+from lakehouse_admin_spark.index_registry import free_checkpoint
 from lakehouse_admin_spark.operators.dedup import tokens_expr
 from lakehouse_admin_spark.registry import query
 from lakehouse_admin_spark.sources.tables import load_table
@@ -224,58 +226,35 @@ def _char_trigrams(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     )
 
 
-# (applicationId, abspath(sf_dir)) -> localCheckpoint'd trained trigram
-# profile (lang, gram, weight) — |langs|×NGRAM_PROFILE_M rows of model
-# state. The profile is a TRAINED MODEL (the same contract as the BPE
-# merge table / SQ stats / DSIR bucket LMs): deterministic per tier,
-# trained once per session, broadcast into every classify pass. r13 —
-# previously every invocation re-ran BOTH corpus gram passes and left a
-# per-call .persist() of the full exploded gram frame behind (the r11
-# BM25 per-call-persist leak class).
-_LANG_PROFILE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def invalidate_lang_profile_cache(sf_dir: str | None = None) -> int:
-    """Drop cached language-ID trigram profiles — all, or one tier's
-    (call after rewriting its documents; the invalidate_ivf_cache
-    contract). Returns the number evicted."""
-    import os as _os
-
-    norm = None if sf_dir is None else _os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _LANG_PROFILE_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        del _LANG_PROFILE_CACHE[k]  # localCheckpoint blocks free with the GC
-    return len(keys)
-
-
 def _session_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train (or fetch) the per-language top-M trigram profile."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir.rstrip("/")))
-    hit = _LANG_PROFILE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """Train (or fetch) the per-language top-M trigram profile (lang,
+    gram, weight) — |langs|×NGRAM_PROFILE_M rows of model state, the
+    same contract as the BPE merge table / SQ stats / DSIR bucket LMs:
+    deterministic per tier, localCheckpoint'd once per session in the
+    index registry, broadcast into every classify pass."""
     from pyspark.sql.window import Window
 
-    counts = (
-        _char_trigrams(spark, sf_dir, "lang")
-        .groupBy("lang", "gram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    rw = Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("gram"))
-    profile = (
-        counts.withColumn("rnk", F.row_number().over(rw))
-        .filter(F.col("rnk") <= NGRAM_PROFILE_M)
-        .select(
-            "lang",
-            "gram",
-            (F.lit(NGRAM_PROFILE_M) - F.col("rnk") + 1).cast("long").alias("weight"),
+    def build():
+        counts = (
+            _char_trigrams(spark, sf_dir, "lang")
+            .groupBy("lang", "gram")
+            .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        .localCheckpoint()
+        rw = Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("gram"))
+        return (
+            counts.withColumn("rnk", F.row_number().over(rw))
+            .filter(F.col("rnk") <= NGRAM_PROFILE_M)
+            .select(
+                "lang",
+                "gram",
+                (F.lit(NGRAM_PROFILE_M) - F.col("rnk") + 1).cast("long").alias("weight"),
+            )
+            .localCheckpoint()
+        )
+
+    return index_registry.get(
+        spark, sf_dir, "lang_profile", build, release=free_checkpoint
     )
-    _LANG_PROFILE_CACHE[key] = profile
-    return profile
 
 
 @query("lang_id_ngram", oracle=_LANG_ID_NGRAM_ORACLE)
@@ -387,30 +366,6 @@ def _make_winnow_kernel():
     return kernel
 
 
-# (applicationId, abspath(sf_dir), kind) -> localCheckpoint'd winnow
-# index frames: kind="fps" is the exploded (doc_id, fingerprint) set,
-# kind="posts" the df-capped posting lists (fingerprint, ds). The
-# fingerprint index is the MOSS "standing index" — deterministic
-# integer hashing, built once per (session, tier), read by both winnow
-# queries. r13 — previously EVERY invocation re-ran the Arrow kernel
-# over the corpus and left two per-call .persist() frames behind (the
-# r11 BM25 per-call-persist leak class).
-_WINNOW_FP_CACHE: dict[tuple, DataFrame] = {}
-
-
-def invalidate_winnow_cache(sf_dir: str | None = None) -> int:
-    """Drop cached winnow fingerprint/posting frames — all, or one
-    tier's (call after rewriting its documents). Returns the number
-    evicted."""
-    import os as _os
-
-    norm = None if sf_dir is None else _os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _WINNOW_FP_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        del _WINNOW_FP_CACHE[k]  # localCheckpoint blocks free with the GC
-    return len(keys)
-
-
 def winnow_fingerprint_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fingerprint) rows via winnowing: Karp-Rabin hash of
     every k-char gram, keep the minimum of each w-wide sliding window,
@@ -424,25 +379,24 @@ def winnow_fingerprint_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     lambdas are interpreted per element and substring(s, i, k) walks
     O(i) chars, so the expression form paid ~n^2 char walks per doc;
     the vectorized kernel is a handful of O(n) int64 vector ops).
-    Session-cached (see ``_WINNOW_FP_CACHE``): the kernel runs once per
-    (session, tier); consumers read materialized blocks."""
-    import os as _os
+    The fingerprint index is the MOSS "standing index": localCheckpoint'd
+    once per (session, tier) in the index registry; consumers read
+    materialized blocks."""
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir.rstrip("/")), "fps")
-    hit = _WINNOW_FP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    prepped = (
-        docs.select("doc_id", F.lower(F.trim(F.col("text"))).alias("s"))
-        .filter(F.length("s") >= WINNOW_K + WINNOW_W - 1)
-        .repartition(spark.sparkContext.defaultParallelism)
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        prepped = (
+            docs.select("doc_id", F.lower(F.trim(F.col("text"))).alias("s"))
+            .filter(F.length("s") >= WINNOW_K + WINNOW_W - 1)
+            .repartition(spark.sparkContext.defaultParallelism)
+        )
+        return prepped.mapInPandas(
+            _make_winnow_kernel(), "doc_id long, fingerprint long"
+        ).localCheckpoint()
+
+    return index_registry.get(
+        spark, sf_dir, "winnow", build, variant="fps", release=free_checkpoint
     )
-    out = prepped.mapInPandas(
-        _make_winnow_kernel(), "doc_id long, fingerprint long"
-    ).localCheckpoint()
-    _WINNOW_FP_CACHE[key] = out
-    return out
 
 
 def _winnow_capped_posts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,21 +404,19 @@ def _winnow_capped_posts(spark: SparkSession, sf_dir: str) -> DataFrame:
     index — the second (derived) index frame; one collect_list shuffle
     at build, then read by both the pair expansion and the per-doc
     sizes."""
-    import os as _os
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir.rstrip("/")), "posts")
-    hit = _WINNOW_FP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    posts = (
-        winnow_fingerprint_df(spark, sf_dir)
-        .groupBy("fingerprint")
-        .agg(F.collect_list("doc_id").alias("ds"))
-        .filter(F.size("ds") <= WINNOW_DF_CAP)
-        .localCheckpoint()
+    def build():
+        return (
+            winnow_fingerprint_df(spark, sf_dir)
+            .groupBy("fingerprint")
+            .agg(F.collect_list("doc_id").alias("ds"))
+            .filter(F.size("ds") <= WINNOW_DF_CAP)
+            .localCheckpoint()
+        )
+
+    return index_registry.get(
+        spark, sf_dir, "winnow", build, variant="posts", release=free_checkpoint
     )
-    _WINNOW_FP_CACHE[key] = posts
-    return posts
 
 
 _WINNOW_FP_SQL = f"""
@@ -720,26 +672,6 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rank")
 
 
-# (applicationId, abspath(sf_dir)) -> learned merge table: the model is
-# k rows — train once per tier, reuse for encoding (the sq_train_stats
-# pattern; applicationId is unique per SparkContext, unlike id(spark),
-# which CPython can reuse after a session is GC'd)
-_BPE_MERGE_CACHE: dict[tuple, list[tuple[int, str, str, int]]] = {}
-
-
-def invalidate_bpe_cache(sf_dir: str | None = None) -> int:
-    """Drop cached BPE merge tables — all, or one tier's (call after
-    rewriting its documents; same contract as
-    ``similarity.invalidate_ivf_cache``). Returns the number evicted."""
-    import os as _os
-
-    norm = None if sf_dir is None else _os.path.abspath(sf_dir.rstrip("/"))
-    keys = [k for k in _BPE_MERGE_CACHE if norm is None or k[1] == norm]
-    for k in keys:
-        del _BPE_MERGE_CACHE[k]
-    return len(keys)
-
-
 def _bpe_vocab_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, freq, seq) — the vocab frame BPE trains on; seq is the
     '|'-delimited symbol sequence."""
@@ -797,17 +729,16 @@ def _pair_counts(cur: DataFrame) -> DataFrame:
 
 
 def _learn_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, int]]:
-    import os as _os
+    """The learned merge table: k rows of model state, trained once per
+    (session, tier) in the index registry and reused for encoding."""
+    return index_registry.get(
+        spark, sf_dir, "bpe", lambda: _train_merges(spark, sf_dir)
+    )
 
+
+def _train_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str, int]]:
     from pyspark.storagelevel import StorageLevel
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir.rstrip("/")),
-    )
-    hit = _BPE_MERGE_CACHE.get(key)
-    if hit is not None:
-        return hit
     base = _bpe_vocab_base(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     cur = base
     merges: list[tuple[int, str, str, int]] = []
@@ -824,9 +755,6 @@ def _learn_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str,
             cur = _apply_merge(cur, a, b)
     finally:
         base.unpersist()  # the model is the k-row merge list
-    if len(_BPE_MERGE_CACHE) >= 8:
-        _BPE_MERGE_CACHE.pop(next(iter(_BPE_MERGE_CACHE)))
-    _BPE_MERGE_CACHE[key] = merges
     return merges
 
 
@@ -1652,7 +1580,7 @@ def bpe_batch_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash.
 
     r13: the learned batch merge table is MODEL STATE, cached per
-    (applicationId, tier) exactly like the serial trainer's
+    (session, tier) exactly like the serial trainer's
     ``_learn_merges`` (which ``bpe_learn_merges`` has rendered from its
     cache since r9) — training runs once per session; the query renders
     the rows."""
@@ -1665,21 +1593,20 @@ def bpe_batch_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _learn_batch_merges(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, int, str, str, int]]:
-    """Train (or fetch) the batched merge table — model state in the
-    shared ``_BPE_MERGE_CACHE`` under a ("batch",)-extended key, so
-    ``invalidate_bpe_cache`` evicts both trainers' models for a tier."""
-    import os as _os
+    """Train (or fetch) the batched merge table — the "batch" variant
+    of the registry's "bpe" entry, so invalidating "bpe" drops both
+    trainers' models for a tier."""
+    return index_registry.get(
+        spark, sf_dir, "bpe", lambda: _train_batch_merges(spark, sf_dir),
+        variant="batch",
+    )
 
+
+def _train_batch_merges(
+    spark: SparkSession, sf_dir: str
+) -> list[tuple[int, int, str, str, int]]:
     from pyspark.storagelevel import StorageLevel
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir.rstrip("/")),
-        "batch",
-    )
-    hit = _BPE_MERGE_CACHE.get(key)
-    if hit is not None:
-        return hit
     base = _bpe_vocab_base(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     cur = base
     rows: list[tuple[int, int, str, str, int]] = []
@@ -1706,9 +1633,6 @@ def _learn_batch_merges(
                 cur = _apply_merge(cur, a, b)
     finally:
         base.unpersist()
-    if len(_BPE_MERGE_CACHE) >= 8:
-        _BPE_MERGE_CACHE.pop(next(iter(_BPE_MERGE_CACHE)))
-    _BPE_MERGE_CACHE[key] = rows
     return rows
 
 

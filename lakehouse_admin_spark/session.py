@@ -24,7 +24,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# SPARK_GRAFT_CPUS, else the cores this process may run on (a container
+# or taskset can allow fewer than the host has)
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(

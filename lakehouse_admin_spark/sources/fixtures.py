@@ -21,24 +21,10 @@ import threading
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from lakehouse_admin_spark import index_registry
 from lakehouse_admin_spark.sources.ledger import LedgerCatalog, LedgerTable, PartitionField
 from lakehouse_admin_spark.sources.tables import load_table
 
-# (applicationId, warehouse) -> catalog handle. applicationId is unique
-# per SparkContext (id(spark) can be reused by CPython after a GC'd
-# session, serving a catalog bound to a dead session).
-_CATALOGS: dict[tuple[str, str], LedgerCatalog] = {}
-
-
-def invalidate_catalog_cache(warehouse: str | None = None) -> int:
-    """Drop cached catalog handles — all, or only those over
-    ``warehouse``. Returns the number evicted. External-mutation hook
-    (parity with ``invalidate_posting_cache`` et al.): call when a
-    warehouse directory is wiped out from under a live process."""
-    victims = [k for k in _CATALOGS if warehouse is None or k[1] == warehouse]
-    for k in victims:
-        del _CATALOGS[k]
-    return len(victims)
 _DEFAULT_WAREHOUSE: str | None = None
 # fixture builds mutate the warehouse; a runner invoking several
 # registered queries concurrently must not race the exists()+create
@@ -70,10 +56,11 @@ def get_catalog(spark: SparkSession, warehouse: str | None = None) -> LedgerCata
         if _DEFAULT_WAREHOUSE is None:
             _DEFAULT_WAREHOUSE = tempfile.mkdtemp(prefix="lakehouse_wh_")
         warehouse = _DEFAULT_WAREHOUSE
-    key = (spark.sparkContext.applicationId, warehouse)
-    if key not in _CATALOGS:
-        _CATALOGS[key] = LedgerCatalog(spark, warehouse)
-    return _CATALOGS[key]
+    # one handle per (session, warehouse); invalidate "catalog" when a
+    # warehouse directory is wiped out from under a live process
+    return index_registry.get(
+        spark, warehouse, "catalog", lambda: LedgerCatalog(spark, warehouse)
+    )
 
 
 @_locked

@@ -20,7 +20,7 @@ rows exactly.
 At 100 TB: the stream is the ingest firehose; per batch the work is
 O(batch posting mass) against a shared immutable index — no state
 shuffle, no corpus rescan, and a re-trained index epoch is one
-``invalidate_bm25_cache`` + warm rebuild away.
+``index_registry.invalidate(tier, "bm25")`` + warm rebuild away.
 """
 
 from __future__ import annotations

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from lakehouse_admin_spark import index_registry as ir
 from lakehouse_admin_spark import registry
 from lakehouse_admin_spark.operators.graph_ann import (
     KNN_K,
@@ -127,32 +128,32 @@ def test_nnd_served_search_recall_vs_exact_served(spark):
 
 
 def test_graph_cache_bounded_and_invalidatable(spark):
-    """The graph-index cache is a bounded LRU with explicit
-    invalidation — a long-lived server must not leak indexes or serve
-    stale edges after an embeddings rewrite."""
+    """Graph indexes live in the bounded index-registry LRU with
+    explicit invalidation — a long-lived server must not leak indexes
+    or serve stale edges after an embeddings rewrite."""
     from lakehouse_admin_spark.operators import graph_ann as ga
 
-    ga.invalidate_graph_caches()
-    assert len(ga._GRAPH_CACHE) == 0
+    def graph_entries():
+        return [(e["tier"], e["variant"]) for e in ir.entries() if e["name"] == "graph"]
+
+    ir.invalidate(name="graph")
+    assert graph_entries() == []
     ga._undirected_edges(spark, SF_SMOKE)  # populates nnd + edges
-    assert len(ga._GRAPH_CACHE) == 2
-    # scoped invalidation: another tier's key survives
-    ga._GRAPH_CACHE[("edges", 0, "/other/tier", "nn_descent")] = (
-        ga._GRAPH_CACHE[
-            ("edges", spark.sparkContext.applicationId, SF_SMOKE, "nn_descent")
-        ]
-    )
-    assert ga.invalidate_graph_caches(SF_SMOKE) == 2
-    assert list(ga._GRAPH_CACHE) == [("edges", 0, "/other/tier", "nn_descent")]
-    ga.invalidate_graph_caches()
-    assert len(ga._GRAPH_CACHE) == 0
+    assert len(graph_entries()) == 2
+    # scoped invalidation: another tier's entry survives
+    variant = ("edges", "nn_descent")
+    ir.get(spark, "/other/tier", "graph", lambda: spark.range(1), variant=variant)
+    assert ir.invalidate(SF_SMOKE, "graph") == 2
+    assert graph_entries() == [("/other/tier", variant)]
+    ir.invalidate(name="graph")
+    assert graph_entries() == []
     # LRU bound: inserting past the cap evicts the oldest
     dummy = spark.range(1)
-    for i in range(ga.GRAPH_CACHE_MAX + 3):
-        ga._cached(("layer", 0, f"/t{i}", 1), lambda: dummy)
-    assert len(ga._GRAPH_CACHE) == ga.GRAPH_CACHE_MAX
-    assert ("layer", 0, "/t0", 1) not in ga._GRAPH_CACHE
-    ga.invalidate_graph_caches()
+    for i in range(ir.MAX_ENTRIES + 3):
+        ir.get(spark, f"/t{i}", "graph", lambda: dummy, variant=("layer", 1))
+    assert len(ir.entries()) == ir.MAX_ENTRIES
+    assert ("/t0", ("layer", 1)) not in graph_entries()
+    ir.invalidate(name="graph")
 
 
 def test_hnsw_levels_geometric_and_deterministic(spark):
@@ -190,18 +191,15 @@ def test_eviction_frees_checkpoint_blocks(spark):
     """LRU eviction / invalidation must unpersist the checkpointed
     blocks promptly, not wait for JVM GC (the 'bounded' cache otherwise
     does not bound storage)."""
-    from lakehouse_admin_spark.operators import graph_ann as ga
-
     def persistent_count():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    ga.invalidate_graph_caches()
     before = persistent_count()
     df = spark.range(100).localCheckpoint()
     assert df.count() == 100
     assert persistent_count() > before
-    ga._GRAPH_CACHE[("edges", 0, "/free/test", "nn_descent")] = df
-    ga.invalidate_graph_caches("/free/test")
+    ir.get(spark, "/free/test", "graph", lambda: df, release=ir.free_checkpoint)
+    ir.invalidate("/free/test")
     assert persistent_count() == before, (
         "invalidation must unpersist the checkpointed RDD immediately"
     )

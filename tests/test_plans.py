@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from lakehouse_admin_spark import index_registry as ir
 from lakehouse_admin_spark import registry
 from lakehouse_admin_spark.functions.skew import salted_aggregate, salted_join
 from lakehouse_admin_spark.plans.inspect import (
@@ -20,6 +21,14 @@ from lakehouse_admin_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
 registry.load_all_operators()
+
+
+def cached(name, tier=SF_SMOKE):
+    """The index registry's entries named ``name`` over ``tier``."""
+    import os
+
+    norm = os.path.abspath(tier.rstrip("/"))
+    return [e for e in ir.entries() if e["name"] == name and e["tier"] == norm]
 
 
 def q(name):
@@ -127,12 +136,10 @@ def test_lsh_near_dup_keyed_and_subset_of_exact(spark):
 def test_minhash_bucket_join_bounded_exchanges(spark):
     # assert on the UNCACHED plan: a warmed shingle cache embeds an
     # InMemoryRelation whose inner plan inflates the string-based count
-    from lakehouse_admin_spark.operators import dedup
-
     # CacheManager substitutes ANY matching cached subplan (including
     # persists left by minhash_near_dup), so wipe everything
     spark.catalog.clearCache()
-    dedup._POSTING_CACHE.clear()
+    ir.invalidate(SF_SMOKE, "posting")
     df = q("minhash_band_buckets")(spark, SF_SMOKE)
     # 3 real shuffles (repartition, signature agg, output sort); the
     # string-based count sees one more when the posting-list cache's
@@ -375,33 +382,38 @@ def test_ivf_index_cached_and_invalidatable(spark):
     invalidatable after an embeddings rewrite."""
     import lakehouse_admin_spark.operators.similarity as sim
 
-    sim.invalidate_ivf_cache()
-    assert len(sim._IVF_CACHE) == 0
+    ir.invalidate(name="ivf")
+    assert not cached("ivf")
     c1, _ = sim.ivf_index(spark, SF_SMOKE)
-    assert len(sim._IVF_CACHE) == 1
+    assert len(cached("ivf")) == 1
     c2, _ = sim.ivf_index(spark, SF_SMOKE)
     assert c1 is c2, "second call must hit the cache"
-    assert sim.invalidate_ivf_cache(SF_SMOKE) == 1
-    assert len(sim._IVF_CACHE) == 0
+    assert ir.invalidate(SF_SMOKE, "ivf") == 1
+    assert not cached("ivf")
 
 
 def test_pq_index_cached_and_invalidatable(spark):
     """r12 (r11 verdict #3): the PQ codes/LUT frames are encoded once
     per (session, tier, variant, stride) and served from checkpoint —
     the Arrow encode kernel previously re-ran on every pq-query
-    invocation, dominating ann_ivf_pq_topk/_rerank serve latency."""
+    invocation, dominating ann_ivf_pq_topk/_rerank serve latency.
+    Cells ride only the "ivf" variant: with_cells on any other
+    explicit variant is refused instead of silently dropping them."""
     import lakehouse_admin_spark.operators.similarity as sim
 
-    sim.invalidate_pq_cache()
-    assert len(sim._PQ_CACHE) == 0
+    ir.invalidate(name="pq")
+    assert not cached("pq")
     c1, l1 = sim.pq_index(spark, SF_SMOKE, with_cells=False)
     c2, l2 = sim.pq_index(spark, SF_SMOKE, with_cells=False)
     assert c1 is c2 and l1 is l2, "second call must hit the cache"
     ci, _li = sim.pq_index(spark, SF_SMOKE, with_cells=True)
     assert ci is not c1 and "cell" in ci.columns and "cell" not in c1.columns
-    assert len(sim._PQ_CACHE) == 2
-    assert sim.invalidate_pq_cache(SF_SMOKE) == 2
-    assert len(sim._PQ_CACHE) == 0
+    assert len(cached("pq")) == 2
+    with pytest.raises(ValueError):
+        sim.pq_index(spark, SF_SMOKE, with_cells=True, variant="opq")
+    assert len(cached("pq")) == 2
+    assert ir.invalidate(SF_SMOKE, "pq") == 2
+    assert not cached("pq")
 
 
 def test_sq_topk_recall_and_plan(spark):
@@ -571,17 +583,18 @@ def test_bpe_encode_bounds_and_cached_trainer(spark):
     retrain."""
     import lakehouse_admin_spark.operators.textual as tx
 
-    tx._BPE_MERGE_CACHE.clear()
+    ir.invalidate(name="bpe")
     rows = q("bpe_encode_token_counts")(spark, SF_SMOKE).collect()
     assert rows
     for r in rows:
         assert r.n_words <= r.n_bpe_tokens <= r.n_chars, r
         assert r.chars_per_token >= 1.0
-    assert len(tx._BPE_MERGE_CACHE) == 1
-    cached = next(iter(tx._BPE_MERGE_CACHE.values()))
+    [entry] = cached("bpe")
+    merges = tx._learn_merges(spark, SF_SMOKE)
+    assert cached("bpe")[0]["hits"] == entry["hits"] + 1, "must hit the cache"
     learned = [(r.rank, r.left_sym, r.right_sym, r.pair_count)
                for r in q("bpe_learn_merges")(spark, SF_SMOKE).collect()]
-    assert learned == cached
+    assert learned == merges
 
 
 def test_filtered_ivf_consistent_with_filtered_brute(spark):
@@ -837,10 +850,10 @@ def test_binary_funnel_laws(spark):
     rerank_df = q("ann_binary_rerank")(spark, SF_SMOKE)
     assert not has_cartesian(topk_df) and not has_cartesian(rerank_df)
 
-    sim.invalidate_binary_cache()
+    ir.invalidate(name="binary_mu")
     m1 = sim.binary_train_mu(spark, SF_SMOKE)
     assert sim.binary_train_mu(spark, SF_SMOKE) is m1, "must hit the cache"
-    assert sim.invalidate_binary_cache(SF_SMOKE) == 1
+    assert ir.invalidate(SF_SMOKE, "binary_mu") == 1
 
     def by_query(df):
         out = {}
@@ -1134,24 +1147,23 @@ def test_dsir_gumbel_topk_laws(spark):
 
 
 def test_sq_and_bpe_caches_invalidatable(spark):
-    """The r10 invalidation helpers mirror invalidate_ivf_cache: train
-    once → cache hit (same object) → targeted invalidation evicts
-    exactly the tier's entry so a fixture rewrite can't serve a stale
-    quantizer or merge table."""
+    """Train once → cache hit (same object) → targeted invalidation
+    evicts exactly the tier's entry so a fixture rewrite can't serve a
+    stale quantizer or merge table."""
     import lakehouse_admin_spark.operators.similarity as sim
     import lakehouse_admin_spark.operators.textual as tex
 
-    sim.invalidate_sq_cache()
+    ir.invalidate(name="sq")
     s1 = sim.sq_train_stats(spark, SF_SMOKE)
     assert sim.sq_train_stats(spark, SF_SMOKE) is s1, "must hit the cache"
-    assert sim.invalidate_sq_cache(SF_SMOKE) == 1
-    assert sim.invalidate_sq_cache(SF_SMOKE) == 0
+    assert ir.invalidate(SF_SMOKE, "sq") == 1
+    assert ir.invalidate(SF_SMOKE, "sq") == 0
 
-    tex.invalidate_bpe_cache()
+    ir.invalidate(name="bpe")
     m1 = tex._learn_merges(spark, SF_SMOKE)
     assert tex._learn_merges(spark, SF_SMOKE) is m1, "must hit the cache"
-    assert tex.invalidate_bpe_cache(SF_SMOKE) == 1
-    assert tex.invalidate_bpe_cache(SF_SMOKE) == 0
+    assert ir.invalidate(SF_SMOKE, "bpe") == 1
+    assert ir.invalidate(SF_SMOKE, "bpe") == 0
 
 
 def test_posting_bm25_catalog_caches_invalidatable(spark):
@@ -1164,27 +1176,27 @@ def test_posting_bm25_catalog_caches_invalidatable(spark):
     import lakehouse_admin_spark.operators.retrieval as ret
     import lakehouse_admin_spark.sources.fixtures as fx
 
-    dd.invalidate_posting_cache()
+    ir.invalidate(name="posting")
     p1 = dd.exploded_shingles(spark, SF_SMOKE)
     assert dd.exploded_shingles(spark, SF_SMOKE) is p1, "must hit the cache"
     app = spark.sparkContext.applicationId
-    assert all(k[0] == app for k in dd._POSTING_CACHE), "appId-keyed"
-    assert dd.invalidate_posting_cache(SF_SMOKE) == 1
-    assert dd.invalidate_posting_cache(SF_SMOKE) == 0
+    assert [e["app"] for e in cached("posting")] == [app], "appId-keyed"
+    assert ir.invalidate(SF_SMOKE, "posting") == 1
+    assert ir.invalidate(SF_SMOKE, "posting") == 0
 
-    ret.invalidate_bm25_cache()
+    ir.invalidate(name="bm25")
     c1 = ret._bm25_corpus(spark, SF_SMOKE)
     assert ret._bm25_corpus(spark, SF_SMOKE) is c1, "must hit the cache"
-    assert all(k[0] == app for k in ret._BM25_CACHE), "appId-keyed"
-    assert ret.invalidate_bm25_cache(SF_SMOKE) == 1
-    assert ret.invalidate_bm25_cache(SF_SMOKE) == 0
+    assert [e["app"] for e in cached("bm25")] == [app], "appId-keyed"
+    assert ir.invalidate(SF_SMOKE, "bm25") == 1
+    assert ir.invalidate(SF_SMOKE, "bm25") == 0
 
     cat1 = fx.get_catalog(spark)
     assert fx.get_catalog(spark) is cat1, "must hit the cache"
-    assert all(k[0] == app for k in fx._CATALOGS), "appId-keyed"
-    wh = next(k[1] for k in fx._CATALOGS)
-    assert fx.invalidate_catalog_cache(wh) == 1
-    assert fx.invalidate_catalog_cache(wh) == 0
+    wh = cat1.warehouse
+    assert [e["app"] for e in cached("catalog", wh)] == [app], "appId-keyed"
+    assert ir.invalidate(wh, "catalog") == 1
+    assert ir.invalidate(wh, "catalog") == 0
     # repopulate: later fixture-backed tests reuse the process warehouse
     assert fx.get_catalog(spark) is not cat1
 
@@ -1205,105 +1217,113 @@ def test_r13_session_index_caches_invalidatable(spark):
 
     app = spark.sparkContext.applicationId
 
-    tex.invalidate_winnow_cache()
+    ir.invalidate(name="winnow")
     p1 = tex._winnow_capped_posts(spark, SF_SMOKE)  # builds fps too
     assert tex._winnow_capped_posts(spark, SF_SMOKE) is p1, "must hit"
     assert tex.winnow_fingerprint_df(spark, SF_SMOKE) is tex.winnow_fingerprint_df(
         spark, SF_SMOKE
     )
-    assert all(k[0] == app for k in tex._WINNOW_FP_CACHE), "appId-keyed"
-    assert tex.invalidate_winnow_cache(SF_SMOKE) == 2  # fps + posts
-    assert tex.invalidate_winnow_cache(SF_SMOKE) == 0
+    assert {e["app"] for e in cached("winnow")} == {app}, "appId-keyed"
+    assert ir.invalidate(SF_SMOKE, "winnow") == 2  # fps + posts
+    assert ir.invalidate(SF_SMOKE, "winnow") == 0
 
-    tex.invalidate_lang_profile_cache()
+    ir.invalidate(name="lang_profile")
     pr1 = tex._session_lang_profile(spark, SF_SMOKE)
     assert tex._session_lang_profile(spark, SF_SMOKE) is pr1, "must hit"
-    assert all(k[0] == app for k in tex._LANG_PROFILE_CACHE), "appId-keyed"
-    assert tex.invalidate_lang_profile_cache(SF_SMOKE) == 1
-    assert tex.invalidate_lang_profile_cache(SF_SMOKE) == 0
+    assert [e["app"] for e in cached("lang_profile")] == [app], "appId-keyed"
+    assert ir.invalidate(SF_SMOKE, "lang_profile") == 1
+    assert ir.invalidate(SF_SMOKE, "lang_profile") == 0
 
-    cur.invalidate_dsir_cache()
+    ir.invalidate(name="dsir")
     g1 = cur._dsir_gram_counts(spark, SF_SMOKE)
     assert cur._dsir_gram_counts(spark, SF_SMOKE) is g1, "must hit"
-    assert all(k[0] == app for k in cur._DSIR_G_CACHE), "appId-keyed"
-    assert cur.invalidate_dsir_cache(SF_SMOKE) == 1  # only g built here
-    assert cur.invalidate_dsir_cache(SF_SMOKE) == 0
+    assert [e["app"] for e in cached("dsir")] == [app], "appId-keyed"
+    assert ir.invalidate(SF_SMOKE, "dsir") == 1  # only g built here
+    assert ir.invalidate(SF_SMOKE, "dsir") == 0
 
-    sim.invalidate_lsh_band_cache()
+    ir.invalidate(name="lsh_bands")
     b1 = sim._session_lsh_bands(spark, SF_SMOKE)
     assert sim._session_lsh_bands(spark, SF_SMOKE) is b1, "must hit"
-    assert all(k[0] == app for k in sim._LSH_BAND_CACHE), "appId-keyed"
-    assert sim.invalidate_lsh_band_cache(SF_SMOKE) == 1
-    assert sim.invalidate_lsh_band_cache(SF_SMOKE) == 0
+    assert [e["app"] for e in cached("lsh_bands")] == [app], "appId-keyed"
+    assert ir.invalidate(SF_SMOKE, "lsh_bands") == 1
+    assert ir.invalidate(SF_SMOKE, "lsh_bands") == 0
 
-    mm.invalidate_multimodal_cache()
+    ir.invalidate(name="mm_features")
     f1 = mm._session_features(spark, SF_SMOKE)
     assert mm._session_features(spark, SF_SMOKE) is f1, "must hit"
-    assert all(k[0] == app for k in mm._MM_FEAT_CACHE), "appId-keyed"
-    assert mm.invalidate_multimodal_cache(SF_SMOKE) == 1
-    assert mm.invalidate_multimodal_cache(SF_SMOKE) == 0
+    assert [e["app"] for e in cached("mm_features")] == [app], "appId-keyed"
+    assert ir.invalidate(SF_SMOKE, "mm_features") == 1
+    assert ir.invalidate(SF_SMOKE, "mm_features") == 0
 
     import lakehouse_admin_spark.operators.dedup as dd
 
-    dd.invalidate_posting_cache()
+    ir.invalidate(name="cdc_chunks")
     c1 = dd._cdc_chunk_hashes(spark, SF_SMOKE)
     assert dd._cdc_chunk_hashes(spark, SF_SMOKE) is c1, "must hit"
-    assert all(k[0] == app for k in dd._CDC_CHUNK_CACHE), "appId-keyed"
-    assert dd.invalidate_posting_cache(SF_SMOKE) == 1  # only cdc built here
-    assert dd.invalidate_posting_cache(SF_SMOKE) == 0
+    assert [e["app"] for e in cached("cdc_chunks")] == [app], "appId-keyed"
+    assert ir.invalidate(SF_SMOKE, "cdc_chunks") == 1
+    assert ir.invalidate(SF_SMOKE, "cdc_chunks") == 0
 
-    sim.invalidate_cov_cache()
+    ir.invalidate(name="cov")
     m1 = sim._cov_model(spark, SF_SMOKE)
-    # element identity (the arrays are the cached objects; the tuple is
-    # rebuilt on the miss path — the _opq_rotation test convention)
-    assert sim._cov_model(spark, SF_SMOKE)[1] is m1[1], "must hit"
-    assert all(k[0] == app for k in sim._COV_CACHE), "appId-keyed"
-    assert sim.invalidate_cov_cache(SF_SMOKE) == 1
-    assert sim.invalidate_cov_cache(SF_SMOKE) == 0
+    assert sim._cov_model(spark, SF_SMOKE) is m1, "must hit"
+    assert [e["app"] for e in cached("cov")] == [app], "appId-keyed"
+    assert ir.invalidate(SF_SMOKE, "cov") == 1
+    assert ir.invalidate(SF_SMOKE, "cov") == 0
 
 
 def test_r14_cache_hygiene(spark):
-    """r14 ADVICE sweep: (a) invalidate_opq_cache is the ONE call an
-    embeddings rewrite needs for the OPQ stack — it chains to the BASE
-    (mu, cov) second-moment model (a retrain must not reuse stale
-    statistics) and to the DERIVED 'opq'-variant PQ codes/LUTs (encoded
-    with the dropped rotation); (b) the three dedup caches normalize
-    their tier key (abspath, no trailing slash), so a 'dir/' alias
-    neither double-builds a frame nor dodges the invalidator; (c) the
-    'opq' PQ variant is served by the shared pq_index body (single
-    cache/evict implementation)."""
-    import os
-
+    """r14 ADVICE sweep: (a) invalidating the OPQ rotation also drops
+    the DERIVED 'opq'-variant PQ codes/LUTs (encoded with the dropped
+    rotation); (b) every index family normalises its tier key (abspath,
+    no trailing slash), so a 'dir/' alias neither double-builds an
+    index nor dodges the invalidator; (c) the 'opq' PQ variant is
+    served by the shared pq_index body (single cache/evict
+    implementation)."""
+    import lakehouse_admin_spark.operators.curation as cur
     import lakehouse_admin_spark.operators.dedup as dd
+    import lakehouse_admin_spark.operators.graph_ann as ga
+    import lakehouse_admin_spark.operators.multimodal as mm
+    import lakehouse_admin_spark.operators.retrieval as ret
     import lakehouse_admin_spark.operators.similarity as sim
-
-    norm = os.path.abspath(SF_SMOKE.rstrip("/"))
+    import lakehouse_admin_spark.operators.textual as tex
 
     # (a) + (c): train the rotation (pulls the cov model) + opq codes
-    sim.invalidate_opq_cache()
+    ir.invalidate(name="opq")
     c1, _l1 = sim.opq_pq_index(spark, SF_SMOKE)
     assert sim.opq_pq_index(spark, SF_SMOKE)[0] is c1, "must hit"
     assert sim.pq_index(spark, SF_SMOKE, variant="opq")[0] is c1, (
         "opq_pq_index must be the shared pq_index body"
     )
-    assert any(k[1] == norm and k[2] == "opq" for k in sim._PQ_CACHE)
-    assert any(k[1] == norm for k in sim._COV_CACHE)
-    assert sim.invalidate_opq_cache(SF_SMOKE) == 1
-    assert not any(k[1] == norm for k in sim._OPQ_CACHE), "rotation evicted"
-    assert not any(k[1] == norm for k in sim._COV_CACHE), "base cov evicted"
-    assert not any(
-        k[1] == norm and k[2] == "opq" for k in sim._PQ_CACHE
-    ), "derived opq codes evicted"
+    assert [e["variant"][0] for e in cached("pq")].count("opq") == 1
+    assert cached("cov") and cached("opq")
+    assert ir.invalidate(SF_SMOKE, "opq") == 2  # rotation + derived codes
+    assert not cached("opq"), "rotation evicted"
+    assert "opq" not in [e["variant"][0] for e in cached("pq")], (
+        "derived opq codes evicted"
+    )
 
-    # (b): trailing-slash alias hits the same dedup cache entries
-    dd.invalidate_posting_cache(SF_SMOKE)
-    p1 = dd.exploded_shingles(spark, SF_SMOKE)
-    assert dd.exploded_shingles(spark, SF_SMOKE + "/") is p1, "alias must hit"
-    ch1 = dd._cdc_chunk_hashes(spark, SF_SMOKE)
-    assert dd._cdc_chunk_hashes(spark, SF_SMOKE + "/") is ch1, "alias must hit"
-    n = dd.invalidate_posting_cache(SF_SMOKE + "/")
-    assert n >= 2, "alias-dir invalidation must evict the canonical keys"
-    assert dd.invalidate_posting_cache(SF_SMOKE) == 0
+    # (b): one index per family; the trailing-slash alias hits the same
+    # entry and invalidates it
+    families = [
+        ("posting", dd.exploded_shingles),
+        ("cdc_chunks", dd._cdc_chunk_hashes),
+        ("sq", sim.sq_train_stats),
+        ("lang_profile", tex._session_lang_profile),
+        ("dsir", cur._dsir_gram_counts),
+        ("bm25", ret._bm25_corpus),
+        ("mm_features", mm._session_features),
+        ("graph", ga._vectors_with_norm),
+    ]
+    for name, build in families:
+        ir.invalidate(SF_SMOKE, name)
+        v = build(spark, SF_SMOKE)
+        assert build(spark, SF_SMOKE + "/") is v, f"{name}: alias must hit"
+        assert len(cached(name)) == 1, name
+        assert ir.invalidate(SF_SMOKE + "/", name) == 1, (
+            f"{name}: alias-dir invalidation must evict the canonical key"
+        )
+        assert ir.invalidate(SF_SMOKE, name) == 0, name
 
 
 def test_bm25_route_frame_broadcast_gated_on_delta_size(spark, monkeypatch):
@@ -1344,7 +1364,7 @@ def test_bm25_base_cache_keyed_by_delta_predicate(spark, monkeypatch):
     stripe for the same sf_dir."""
     import lakehouse_admin_spark.operators.retrieval as ret
 
-    ret.invalidate_bm25_cache()
+    ir.invalidate(name="bm25")
     b1 = ret._bm25_corpus(spark, SF_SMOKE, base_only=True)
     assert ret._bm25_corpus(spark, SF_SMOKE, base_only=True) is b1
     monkeypatch.setattr(ret, "BM25_DELTA", "doc_id % 7 = 5")
@@ -1353,7 +1373,7 @@ def test_bm25_base_cache_keyed_by_delta_predicate(spark, monkeypatch):
     assert b2[2] != b1[2] or b2[0] is not b1[0]
     monkeypatch.undo()
     assert ret._bm25_corpus(spark, SF_SMOKE, base_only=True) is b1
-    ret.invalidate_bm25_cache(SF_SMOKE)
+    ir.invalidate(SF_SMOKE, "bm25")
 
 
 def test_dsir_incremental_laws(spark):
@@ -1364,10 +1384,10 @@ def test_dsir_incremental_laws(spark):
     cutoff separates selected from rejected docs exactly."""
     import lakehouse_admin_spark.operators.curation as cur
 
-    cur.invalidate_dsir_cache()
+    ir.invalidate(name="dsir")
     rows = q("dsir_incremental")(spark, SF_SMOKE).collect()
-    key = next(iter(cur._DSIR_LM_CACHE))
-    assert key[1].endswith(SF_SMOKE.rstrip("/").split("/")[-1])
+    [entry] = cached("dsir")
+    assert entry["variant"] == "frozen_lm"
     docs = load_table(spark, SF_SMOKE, "documents")
     delta_ids = {
         r.doc_id
@@ -1382,13 +1402,14 @@ def test_dsir_incremental_laws(spark):
     assert len(delta_ids - got) <= sum(
         1 for _ in docs.filter(F.expr("trim(text) = ''")).collect()
     )
-    _, cutoff = cur._DSIR_LM_CACHE[key]
+    _, cutoff = cur._dsir_frozen_lm(spark, SF_SMOKE)
+    assert cached("dsir")[0]["hits"] > entry["hits"], "must hit the cache"
     for r in rows:
         assert r.selected == (r.logw >= cutoff)
     warm = q("dsir_incremental")(spark, SF_SMOKE).collect()
     assert sorted(map(tuple, warm)) == sorted(map(tuple, rows))
-    assert cur.invalidate_dsir_cache(SF_SMOKE) == 1
-    assert cur.invalidate_dsir_cache(SF_SMOKE) == 0
+    assert ir.invalidate(SF_SMOKE, "dsir") == 1
+    assert ir.invalidate(SF_SMOKE, "dsir") == 0
 
 
 def test_opq_rotation_laws(spark):
@@ -1407,7 +1428,7 @@ def test_opq_rotation_laws(spark):
 
     import lakehouse_admin_spark.operators.similarity as sim
 
-    sim.invalidate_opq_cache()
+    ir.invalidate(name="opq")
     mu, R = sim._opq_rotation(spark, SF_SMOKE)
     assert np.abs(R @ R.T - np.eye(sim.EMB_DIM)).max() < 1e-9
     assert sim._opq_rotation(spark, SF_SMOKE)[1] is R, "must hit the cache"
@@ -1438,7 +1459,7 @@ def test_opq_rotation_laws(spark):
         per_q.setdefault(r.query_id, []).append(r.rank)
     assert all(sorted(v) == list(range(1, sim.TOP_K + 1)) for v in per_q.values())
     assert set(per_q) == {v for v in orig if v % sim.QUERY_STRIDE == 0}
-    assert sim.invalidate_opq_cache(SF_SMOKE) == 1
+    assert ir.invalidate(SF_SMOKE, "opq") == 2  # rotation + derived opq codes
 
     # value law on a deterministic anisotropic corpus (no RNG)
     n, d, M, D = 2000, 64, sim.PQ_M, sim.PQ_D

@@ -10,7 +10,7 @@ pickle-by-reference trap (module-level Python-worker functions don't
 import from a foreign cwd). Runs in a subprocess so the tuned session
 used by the rest of the suite can't leak in.
 
-r14 (driver-window fix, VERDICT #2): the DEFAULT run drives a ~60-query
+r14 (driver-window fix, VERDICT #2): the DEFAULT run drives a 75-query
 HAZARD-CLASS SAMPLE — every query whose serve plan crosses the Python
 boundary (sweep: n_python > 0), every index-backed family whose BUILD
 runs a Python kernel at first touch, every events/timestamp reader, the
@@ -114,7 +114,7 @@ def _drive(names: list[str] | None) -> None:
 
 
 def test_hazard_sample_runs_under_vanilla_session():
-    """Default-suite tier: the ~80-query hazard-class sample."""
+    """Default-suite tier: the 75-query hazard-class sample."""
     _drive(SAMPLE)
 
 

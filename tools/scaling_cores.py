@@ -56,7 +56,7 @@ def main() -> None:
     nd, nv = TIERS[tier]
     import lakehouse_admin_spark.operators.similarity as sim
     from lakehouse_admin_spark import registry
-    from lakehouse_admin_spark.session import get_spark
+    from lakehouse_admin_spark.session import DEFAULT_CPUS, get_spark
 
     registry.load_all_operators()
     spark = get_spark(app_name=f"scaling-cores-{tier}")
@@ -91,7 +91,7 @@ def main() -> None:
         "tier": tier,
         "docs": nd,
         "vectors": nv,
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": DEFAULT_CPUS,
         "sentinel_sf01_median": sent,
         "sentinel_spread": sent_spread,
         "serving_nq_fixed": 100,

@@ -434,7 +434,7 @@ def run_bm25_backfill(root: str) -> None:
       anyway — record it in the artifact.
     """
     import lakehouse_admin_spark.operators.retrieval as ret
-    from lakehouse_admin_spark import registry
+    from lakehouse_admin_spark import index_registry, registry
 
     registry.load_all_operators()
     spark = _spark()
@@ -490,7 +490,7 @@ def run_bm25_backfill(root: str) -> None:
         finally:
             ret.BM25_BROADCAST_MAX_DOCS = base_bound
             spark.conf.set("spark.sql.shuffle.partitions", base_parts)
-            ret.invalidate_bm25_cache(sf_dir)  # drop tier index + probes
+            index_registry.invalidate(sf_dir, "bm25")  # tier index + probes
         out[tier] = rec
     print(json.dumps({
         "metric": "bm25_unbounded_backfill",
