@@ -408,61 +408,24 @@ def multimodal_feature_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode->featurize->rank chain. The exact scan is the baseline; at
     corpus scale the feature frame feeds the same IVF/PQ/graph tiers
     as the embeddings table."""
-    from pyspark.sql.window import Window
+    from lakehouse_admin_spark.operators import similarity as _sim
 
     # the encoded feature frame comes off the session cache — the
     # kernel ran once at build; serving reads materialized (doc_id,
-    # feat) rows (r13 — previously the kernel re-ran over the corpus
-    # AND the stride per invocation)
-    feats = _session_features(spark, sf_dir)
-    # query workload = the shared serving stride (module attr read at
-    # call time so the stress bench can fix nq per tier; default 100
-    # matches the oracle's literal)
-    from lakehouse_admin_spark.operators import similarity as _sim
-
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
+    # feat) rows, and the query side filters that same frame (the
+    # stride read at call time, so the stress bench can fix nq per
+    # tier; default 100 matches the oracle's literal)
+    vecs = _session_features(spark, sf_dir).select(
+        F.col("doc_id").alias("vec_id"), F.col("feat").alias("embedding")
     )
-    # norms folded once PER SIDE before the pair join (cosine inside
-    # the pair projection would re-derive both norms per pair — the
-    # r9 semantic_contamination fix, similarity.cosine_from_norms)
-    featsn = feats.withColumn("nf", nrm(F.col("feat")))
-    # the query side filters the MATERIALIZED feature frame (no second
-    # kernel run — pre-r13 the query subtree re-encoded the stride
-    # because Spark does not dedupe common subplans)
-    q = (
-        feats.filter(F.col("doc_id") % _sim.QUERY_STRIDE == 0)
-        .select(
-            F.col("doc_id").alias("query_id"),
-            F.col("feat").alias("qf"),
-            nrm(F.col("feat")).alias("nq"),
-        )
+    queries, cands = _sim.stride_queries(vecs), _sim.candidates(vecs)
+    pairs = _sim.brute_pairs(queries, cands, "neighbor_id")
+    sims = pairs.select(
+        "query_id", "neighbor_id", _sim.cosine6("qe", "ce", "nq", "nc").alias("cosine")
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("qf"), F.col("feat"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sims = (
-        featsn.crossJoin(F.broadcast(q))
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("doc_id").alias("neighbor_id"),
-            F.round(dot / (F.col("nq") * F.col("nf")), 6).alias("cosine"),
-        )
-    )
-    # partition-local top-k before the rank exchange (brute scan shape
-    # — similarity.local_topk_prune, ≤k rows per (query, partition))
-    sims = _sim.local_topk_prune(sims, "query_id", "cosine", "neighbor_id", _MM_ANN_TOPK)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
+    by_cosine = [F.desc("cosine"), F.asc("neighbor_id")]
     return (
-        sims.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _MM_ANN_TOPK)
+        _sim.top_k(sims, "query_id", by_cosine, _MM_ANN_TOPK)
         .select("query_id", "neighbor_id", "cosine", "rank")
         .orderBy("query_id", "rank")
     )

@@ -19,8 +19,8 @@ tiny and broadcast; the shuffle key is the TERM, so cost is posting
 mass, never |queries| × |corpus|. High-df terms (df > 10% of N) are
 pruned from queries (the classic stopword/WAND economy: they carry
 ~zero idf but own the longest posting lists). The semantic side is the
-brute top-C scan with partition-local pre-aggregation (the exactness
-floor — the indexed tiers swap in unchanged). Fusion joins two
+brute top-C scan of ``similarity.brute_pairs``/``top_k`` (the
+exactness floor — the indexed tiers swap in unchanged). Fusion joins two
 ≤C-row-per-query shortlists — O(queries·C), independent of corpus.
 """
 
@@ -35,7 +35,6 @@ from lakehouse_admin_spark.operators.dedup import tokens_expr
 from lakehouse_admin_spark.operators.similarity import (
     QUERY_STRIDE,
     cosine_from_norms,
-    local_topk_prune,
     norm_expr,
 )
 
@@ -332,44 +331,25 @@ def rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Top-5 fused hits per query.
 
     Scale shape: each tier produces O(queries·C) rows (BM25 via the
-    posting-list join, cosine via the brute scan with partition-local
-    top-C pre-aggregation — swap in the IVF/PQ tier for the same
-    shortlist contract at 100 TB); the fusion is a full-outer join of
-    two tiny shortlists and a per-query window over ≤2C rows."""
+    posting-list join, cosine via the brute scan whose partial
+    WindowGroupLimit ships ≤C rows per (query, map task) — swap in
+    the IVF/PQ tier for the same shortlist contract at 100 TB); the
+    fusion is a full-outer join of two tiny shortlists and a per-query
+    window over ≤2C rows."""
     lex = _bm25_ranked(spark, sf_dir, RRF_SHORTLIST).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % _sim.QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm_expr(F.col("embedding")).alias("nq"),
+    queries, cands = _sim.stride_queries(emb), _sim.candidates(emb)
+    pairs = _sim.brute_pairs(queries, cands, "neighbor_id")
+    sims = pairs.select(
+        "query_id",
+        F.col("neighbor_id").alias("doc_id"),
+        _sim.cosine6("qe", "ce", "nq", "nc").alias("cosine"),
     )
-    cands = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("embedding").alias("ce"),
-        norm_expr(F.col("embedding")).alias("nc"),
-    )
-    sims = (
-        F.broadcast(queries)
-        .crossJoin(cands)
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "doc_id",
-            F.round(
-                cosine_from_norms(F.col("qe"), F.col("ce"), F.col("nq"), F.col("nc")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    sims = local_topk_prune(sims, "query_id", "cosine", "doc_id", RRF_SHORTLIST)
-    ws = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("doc_id"))
-    sem = (
-        sims.withColumn("sem_rank", F.row_number().over(ws).cast("int"))
-        .filter(F.col("sem_rank") <= RRF_SHORTLIST)
-        .select("query_id", "doc_id", "sem_rank")
-    )
+    by_cosine = [F.desc("cosine"), F.asc("doc_id")]
+    sem = _sim.top_k(sims, "query_id", by_cosine, RRF_SHORTLIST, rank="sem_rank")
+    sem = sem.select("query_id", "doc_id", "sem_rank")
     fused = lex.join(sem, ["query_id", "doc_id"], "full_outer").select(
         "query_id",
         "doc_id",

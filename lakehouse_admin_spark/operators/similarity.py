@@ -164,41 +164,63 @@ def pair_scan_barrier(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def local_topk_prune(
-    df: DataFrame, key_col: str, val_col: str, tie_col: str, k: int
+def brute_pairs(queries: DataFrame, cands: DataFrame, id_col: str) -> DataFrame:
+    """Every (query, candidate) pair of a brute scan, self pairs
+    dropped. ``queries`` carries ``query_id`` and is broadcast (the
+    small stride set — the big side never shuffles by key and the plan
+    is a BroadcastNestedLoopJoin, never a CartesianProduct); ``cands``
+    carries ``id_col`` and goes through :func:`pair_scan_barrier`, so
+    its per-vector projections run once per vector, not once per pair.
+    Rank the scored pairs with :func:`top_k`."""
+    return (
+        F.broadcast(queries)
+        .crossJoin(pair_scan_barrier(cands))
+        .filter(F.col(id_col) != F.col("query_id"))
+    )
+
+
+def top_k(
+    df: DataFrame, by: str | list[str], order: list[Column], k: int, rank: str = "rank"
 ) -> DataFrame:
-    """Partition-local top-k pre-aggregation under the total order
-    (``val_col`` DESC, ``tie_col`` ASC) — the same order the global
-    rank window uses, so pruning never discards a global winner: a row
-    dropped here has ≥k better rows in its own partition, hence ≥k
-    better rows globally. The rank window's exchange then carries at
-    most k rows per (key, input-partition) instead of every scored
-    pair — a |candidates|/k shuffle-volume cut for the brute ANN scans
-    (the knn_graph tile kernel's shape, applied to JVM-scored pairs).
+    """The first ``k`` rows per ``by`` group under ``order``, numbered
+    1..k in column ``rank``. The filter is a plain ``rank <= k``
+    conjunct — the shape Catalyst's InferWindowGroupLimit reads — so
+    the physical plan gets a partial ``WindowGroupLimit`` BELOW the
+    rank exchange: each map task ships at most k rows per group, not
+    every scored pair (``spark.sql.optimizer.windowGroupLimitThreshold``
+    defaults to 1000, above every k here). Callers that keep a subset
+    of the top k filter further on top of this one."""
+    w = Window.partitionBy(by).orderBy(order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
 
-    Memory is bounded: the kernel folds batches into a running
-    ≤(keys×k)-row frame. Schema passes through unchanged."""
-    k = int(k)
-    schema = df.schema
 
-    # nested so cloudpickle ships it BY VALUE (foreign-cwd drivers)
-    def prune(batches):
-        import pandas as _pd
+def stride_queries(emb: DataFrame, *extra: Column | str) -> DataFrame:
+    """The serving query set of the embedding tiers: every
+    ``QUERY_STRIDE``-th vector as (``query_id``, ``qe``, ``nq``, *extra)
+    with its norm folded once per query (module global read at call
+    time — the stress bench patches the stride per tier)."""
+    return emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        norm_expr(F.col("embedding")).alias("nq"),
+        *extra,
+    )
 
-        acc = None
-        for pdf in batches:
-            if acc is not None:
-                pdf = _pd.concat([acc, pdf], ignore_index=True)
-            pdf = pdf.sort_values(
-                [key_col, val_col, tie_col],
-                ascending=[True, False, True],
-                kind="mergesort",
-            )
-            acc = pdf.groupby(key_col, sort=False).head(k)
-        if acc is not None and len(acc):
-            yield acc
 
-    return df.mapInPandas(prune, schema)
+def candidates(emb: DataFrame, *extra: Column | str) -> DataFrame:
+    """Every vector as a brute-scan candidate (``neighbor_id``, ``ce``,
+    ``nc``, *extra), the counterpart of :func:`stride_queries`."""
+    return emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("ce"),
+        norm_expr(F.col("embedding")).alias("nc"),
+        *extra,
+    )
+
+
+def cosine6(q: str, c: str, nq: str, nc: str) -> Column:
+    """6dp-rounded :func:`cosine_from_norms` over named columns."""
+    return F.round(cosine_from_norms(F.col(q), F.col(c), F.col(nq), F.col(nc)), 6)
 
 
 @query(
@@ -248,57 +270,18 @@ _ANN_ORACLE_BODY = """
 """
 
 
-def _ann_topk(
-    spark: SparkSession, sf_dir: str, restrict_cell: bool
-) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("qlabel"),
-        norm_expr(F.col("embedding")).alias("nq"),
-    )
-    cands = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("label").alias("clabel"),
-        norm_expr(F.col("embedding")).alias("nc"),
-    )
-    if not restrict_cell:
-        # barrier: codegen otherwise folds the nc norm into the BNLJ
-        # pair loop (nq evaluations per vector — see pair_scan_barrier)
-        cands = pair_scan_barrier(cands)
-    cond = F.col("neighbor_id") != F.col("query_id")
-    if restrict_cell:
-        # IVF: probe only the query's cell. The join is keyed on the cell
-        # id → shuffle/broadcast by cell, not a cross join.
-        joined = queries.join(
-            cands, (F.col("qlabel") == F.col("clabel")) & cond
-        )
-    else:
-        # Brute force: broadcast the (small) query set against all
-        # candidates — scales linearly in candidates, embarrassingly
-        # parallel, no shuffle of the big side.
-        joined = F.broadcast(queries).crossJoin(cands).filter(cond)
-    sims = joined.select(
+def _ranked_cosine(pairs: DataFrame, *extra: str) -> DataFrame:
+    """Top-``TOP_K`` neighbors per query by 6dp cosine, ``extra``
+    columns carried between neighbor and score."""
+    sims = pairs.select(
         "query_id",
         "neighbor_id",
-        F.round(
-            cosine_from_norms(F.col("qe"), F.col("ce"), F.col("nq"), F.col("nc")), 6
-        ).alias("cosine"),
+        *extra,
+        cosine6("qe", "ce", "nq", "nc").alias("cosine"),
     )
-    if not restrict_cell:
-        # partition-local top-k before the rank window: the exchange
-        # then carries ≤k rows per (query, partition), not all n_q×n
-        # scored pairs. Brute path only — the cell-restricted join's
-        # pair volume is already ~n_q·n/k, and the Arrow round-trip
-        # measured a 25% regression there (0.60→0.75 s at sf0.1)
-        sims = local_topk_prune(sims, "query_id", "cosine", "neighbor_id", TOP_K)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        top_k(sims, "query_id", [F.desc("cosine"), F.asc("neighbor_id")], TOP_K)
+        .select("query_id", "neighbor_id", *extra, "cosine", "rank")
         .orderBy("query_id", "rank")
     )
 
@@ -308,8 +291,13 @@ def _ann_topk(
     oracle=_ANN_ORACLE_BODY.format(label_sel="", stride=QUERY_STRIDE, cell_pred="", k=TOP_K),
 )
 def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for every stride-100 query vector."""
-    return _ann_topk(spark, sf_dir, restrict_cell=False)
+    """Brute-force cosine top-5 for every stride-100 query vector:
+    broadcast the (small) query set against all candidates — linear
+    in candidates, embarrassingly parallel, no shuffle of the big
+    side."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    pairs = brute_pairs(stride_queries(emb), candidates(emb), "neighbor_id")
+    return _ranked_cosine(pairs)
 
 
 @query(
@@ -322,8 +310,18 @@ def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-cell-restricted cosine top-5 (label = cell id stand-in)."""
-    return _ann_topk(spark, sf_dir, restrict_cell=True)
+    """IVF-cell-restricted cosine top-5 (label = cell id stand-in):
+    probe only the query's cell — the join is keyed on the cell id, so
+    it plans as a shuffle/broadcast by cell, not a cross join."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = stride_queries(emb, F.col("label").alias("qlabel"))
+    cands = candidates(emb, F.col("label").alias("clabel"))
+    pairs = queries.join(
+        cands,
+        (F.col("qlabel") == F.col("clabel"))
+        & (F.col("neighbor_id") != F.col("query_id")),
+    )
+    return _ranked_cosine(pairs)
 
 
 SQ_LEVELS = 255  # 8-bit scalar quantizer (FAISS SQ8): max code / divisor —
@@ -447,40 +445,10 @@ def ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return F.transform(col, one)
 
-    queries = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm_expr(F.col("embedding")).alias("nq"),
-    )
     cands = emb.select(
         F.col("vec_id").alias("neighbor_id"), recon(F.col("embedding")).alias("ce")
     ).withColumn("nc", norm_expr(F.col("ce")))
-    # barrier: the 64-element recon transform + nc norm otherwise fold
-    # into the BNLJ pair loop (nq evaluations per vector)
-    cands = pair_scan_barrier(cands)
-    sims = (
-        F.broadcast(queries)
-        .crossJoin(cands)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_from_norms(F.col("qe"), F.col("ce"), F.col("nq"), F.col("nc")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    # partition-local top-k: the rank exchange carries ≤k rows per
-    # (query, partition) instead of the full n_q×n pair set
-    sims = local_topk_prune(sims, "query_id", "cosine", "neighbor_id", TOP_K)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _ranked_cosine(brute_pairs(stride_queries(emb), cands, "neighbor_id"))
 
 
 # Binary (sign) quantization: 1 bit per dimension against the per-dim
@@ -549,31 +517,17 @@ _BIN_ORACLE = f"""
 """
 
 
-@query("ann_binary_hamming_topk", oracle=_BIN_ORACLE)
-def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-quantized ANN — the cheapest serving tier below SQ8 and
-    PQ: each vector sign-quantizes to 64 bits against the per-dim
-    corpus mean (``binary_train_mu``, trained once per tier) and
-    candidates rank by HAMMING distance, computed as two
-    ``bit_count(xor)`` ops over the packed 32-bit halves — pure
-    integer whole-stage-codegen arithmetic, so the DuckDB oracle is
-    exact (no FP rounding anywhere past the 6dp-rounded threshold).
-
-    Scale shape: the code table is 8 bytes/vector — at 100 TB of
-    float32 embeddings the binary index is ~3 TB and the scan ranks in
-    memory-bandwidth terms ~32× cheaper than the float brute force;
-    the classic funnel is binary-scan shortlist → SQ8/float re-rank
-    (compose with ann_topk_cosine exactly like ann_ivf_pq_rerank).
-    Same broadcast-queries linear-scan shape as the other brute tiers,
-    but WITHOUT local_topk_prune: the pair rows are four integers, so
-    the Arrow prune kernel costs ~26× the narrow exchange it would
-    save (measured 2.1 s vs 0.08 s at sf0.1) — the float tiers prune
-    because their scoring stage is already batch-bound, this one is
-    codegen end to end. At corpus scale the rank exchange carries
-    nq×n 16-byte rows; the scale remedy for THAT is bucketing the
-    binary codes (multi-index hamming / LSH on code prefixes), not
-    row pruning — this query is the exactness floor those swap into."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+def _hamming_pairs(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, hamming) for every stride query against
+    every vector: 64-bit sign codes against the trained per-dim mean
+    (``binary_train_mu``), packed into two 32-bit halves, distance as
+    two ``bit_count(xor)`` ops. The queries are packed from the raw
+    scan (the stride filter pushes below the pack, so only query rows
+    pay it); :func:`brute_pairs` puts the 64-CASE-WHEN pack of the
+    candidate side behind the barrier — folded into the pair loop it
+    ran nq× per vector (17.8 s → 0.44 s on this scan at the s25 stress
+    tier), and the shuffled rows are the 24-byte codes, never the
+    floats."""
     mu = binary_train_mu(spark, sf_dir)
 
     def pack(lo_bit: int) -> Column:
@@ -589,39 +543,71 @@ def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long"),
         )
 
-    # barrier: the 64-CASE-WHEN pack otherwise folds into the BNLJ pair
-    # loop and runs nq× per vector — measured 17.8 s → 0.44 s on this
-    # pair scan at the s25 stress tier (see pair_scan_barrier); the
-    # shuffled rows are the 24-byte packed codes, never the floats
-    codes = pair_scan_barrier(
-        emb.select("vec_id", pack(0).alias("c_lo"), pack(32).alias("c_hi"))
-    )
+    codes = emb.select("vec_id", pack(0).alias("c_lo"), pack(32).alias("c_hi"))
     queries = codes.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("c_lo").alias("q_lo"),
         F.col("c_hi").alias("q_hi"),
     )
-    ham = (
-        F.broadcast(queries)
-        .crossJoin(codes)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                F.bit_count(F.col("q_lo").bitwiseXOR(F.col("c_lo")))
-                + F.bit_count(F.col("q_hi").bitwiseXOR(F.col("c_hi")))
-            )
-            .cast("int")
-            .alias("hamming"),
-        )
+    hamming = (
+        F.bit_count(F.col("q_lo").bitwiseXOR(F.col("c_lo")))
+        + F.bit_count(F.col("q_hi").bitwiseXOR(F.col("c_hi")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
+    return brute_pairs(queries, codes, "vec_id").select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        hamming.cast("int").alias("hamming"),
     )
+
+
+def _exact_rerank(emb: DataFrame, short: DataFrame) -> DataFrame:
+    """The fine stage of every funnel: exact 6dp cosine top-``TOP_K``
+    over a (query_id, neighbor_id) shortlist. The shortlist is
+    broadcast against the embeddings table (the big side never
+    shuffles and is touched only for shortlisted ids); the candidate
+    norm is derived AFTER that semi-join (norms only for the
+    survivors) but BEFORE the query join, so the broadcast query
+    side's norm folds once per query, not once per pair. The query
+    side is the stride set by construction, restricted directly:
+    re-deriving it FROM ``short`` would execute the coarse subtree
+    twice (Spark does not dedupe common subplans)."""
+    cands = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
+    )
+    pairs = (
+        cands.join(F.broadcast(short), "neighbor_id")
+        .withColumn("nc", norm_expr(F.col("ce")))
+        .join(F.broadcast(stride_queries(emb)), "query_id")
+    )
+    return _ranked_cosine(pairs)
+
+
+@query("ann_binary_hamming_topk", oracle=_BIN_ORACLE)
+def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary-quantized ANN — the cheapest serving tier below SQ8 and
+    PQ: each vector sign-quantizes to 64 bits against the per-dim
+    corpus mean (``binary_train_mu``, trained once per tier) and
+    candidates rank by HAMMING distance, computed as two
+    ``bit_count(xor)`` ops over the packed 32-bit halves — pure
+    integer whole-stage-codegen arithmetic, so the DuckDB oracle is
+    exact (no FP rounding anywhere past the 6dp-rounded threshold).
+
+    Scale shape: the code table is 8 bytes/vector — at 100 TB of
+    float32 embeddings the binary index is ~3 TB and the scan ranks in
+    memory-bandwidth terms ~32× cheaper than the float brute force;
+    the classic funnel is binary-scan shortlist → SQ8/float re-rank
+    (compose with ann_topk_cosine exactly like ann_ivf_pq_rerank).
+    Same broadcast-queries linear-scan shape as the other brute tiers
+    (:func:`_hamming_pairs`). At corpus scale the rank exchange carries
+    at most k 16-byte rows per (query, map task) after the partial
+    ``WindowGroupLimit``; the scale remedy for the nq×n pair scan
+    itself is bucketing the binary codes (multi-index hamming / LSH on
+    code prefixes) — this query is the exactness floor those swap
+    into."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    ham = _hamming_pairs(spark, sf_dir, emb)
     return (
-        ham.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
+        top_k(ham, "query_id", [F.asc("hamming"), F.asc("neighbor_id")], TOP_K)
         .select("query_id", "neighbor_id", "hamming", "rank")
         .orderBy("query_id", "rank")
     )
@@ -693,84 +679,11 @@ def ann_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the embeddings table (the big side never shuffles and is
     touched only for shortlisted ids); the coarse stage is the
     codegen'd integer scan of ann_binary_hamming_topk."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    mu = binary_train_mu(spark, sf_dir)
-
-    def pack(lo_bit: int) -> Column:
-        return sum(
-            (
-                F.when(
-                    F.element_at("embedding", i + lo_bit + 1).cast("double")
-                    > F.lit(mu[i + lo_bit]),
-                    F.lit(1 << i).cast("long"),
-                ).otherwise(F.lit(0).cast("long"))
-                for i in range(32)
-            ),
-            F.lit(0).cast("long"),
-        )
-
-    # barrier: same pair-loop pack re-evaluation as the hamming scan
-    codes = pair_scan_barrier(
-        emb.select("vec_id", pack(0).alias("c_lo"), pack(32).alias("c_hi"))
-    )
-    qcodes = codes.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("c_lo").alias("q_lo"),
-        F.col("c_hi").alias("q_hi"),
-    )
-    sw = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    short = (
-        F.broadcast(qcodes)
-        .crossJoin(codes)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                F.bit_count(F.col("q_lo").bitwiseXOR(F.col("c_lo")))
-                + F.bit_count(F.col("q_hi").bitwiseXOR(F.col("c_hi")))
-            )
-            .cast("int")
-            .alias("hamming"),
-        )
-        .withColumn("srn", F.row_number().over(sw))
-        .filter(F.col("srn") <= BIN_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    qe = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm_expr(F.col("embedding")).alias("nq"),
-    )
-    ne = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-    )
-    rer = (
-        ne.join(F.broadcast(short), "neighbor_id")
-        .withColumn("nn", norm_expr(F.col("ne")))
-        .join(F.broadcast(qe), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_from_norms(
-                    F.col("qe"), F.col("ne"), F.col("nq"), F.col("nn")
-                ),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    ham = _hamming_pairs(spark, sf_dir, emb)
+    by_hamming = [F.asc("hamming"), F.asc("neighbor_id")]
+    short = top_k(ham, "query_id", by_hamming, BIN_SHORTLIST, rank="srn")
+    return _exact_rerank(emb, short.select("query_id", "neighbor_id"))
 
 
 FILTER_LANG = "en"  # metadata gate of the filtered-retrieval query
@@ -831,46 +744,11 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id"), F.col("lang"), F.col("source")
     )
-    gated = (
-        emb.join(docs, emb.vec_id == docs.doc_id)
-        .filter(F.col("lang") == FILTER_LANG)
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("ce"),
-            "source",
-            norm_expr(F.col("embedding")).alias("nc"),
-        )
+    gated = emb.join(docs, emb.vec_id == docs.doc_id).filter(
+        F.col("lang") == FILTER_LANG
     )
-    # barrier: nc otherwise folds into the BNLJ pair loop (nq× per row)
-    gated = pair_scan_barrier(gated)
-    queries = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm_expr(F.col("embedding")).alias("nq"),
-    )
-    sims = (
-        F.broadcast(queries)
-        .crossJoin(gated)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "source",
-            F.round(
-                cosine_from_norms(F.col("qe"), F.col("ce"), F.col("nq"), F.col("nc")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    # partition-local top-k before the rank exchange (gated-brute scan)
-    sims = local_topk_prune(sims, "query_id", "cosine", "neighbor_id", TOP_K)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "source", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    pairs = brute_pairs(stride_queries(emb), candidates(gated, "source"), "neighbor_id")
+    return _ranked_cosine(pairs, "source")
 
 
 IVF_PROBES = 2  # multi-probe width: nearest cells searched per query
@@ -2189,49 +2067,9 @@ def ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_ivf_pq_oracle`."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     adc = _ivf_pq_adc(spark, sf_dir)
-    sw = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_dist"), F.asc("neighbor_id")
-    )
-    short = (
-        adc.withColumn("srn", F.row_number().over(sw))
-        .filter(F.col("srn") <= PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    # the query side is the stride set by construction — restrict it
-    # directly (re-deriving it FROM `short` would execute the whole
-    # ADC subtree twice: Spark does not dedupe common subplans)
-    qe = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm_expr(F.col("embedding")).alias("nq"),
-    )
-    ne = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-    )
-    # nn is derived AFTER the shortlist semi-join (norms only for the
-    # nq×PQ_SHORTLIST survivors, not the full corpus) but BEFORE the
-    # query join, so the broadcast query side's nq is folded once per
-    # query instead of once per pair
-    rer = (
-        ne.join(F.broadcast(short), "neighbor_id")
-        .withColumn("nn", norm_expr(F.col("ne")))
-        .join(F.broadcast(qe), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_from_norms(F.col("qe"), F.col("ne"), F.col("nq"), F.col("nn")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    by_dist = [F.asc("approx_dist"), F.asc("neighbor_id")]
+    short = top_k(adc, "query_id", by_dist, PQ_SHORTLIST, rank="srn")
+    return _exact_rerank(emb, short.select("query_id", "neighbor_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -3135,15 +2973,14 @@ def knn_label_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     representation change that drops k-NN accuracy degraded the
     geometry even if downstream training hasn't run yet.
 
-    Scale shape: rides the brute top-k scan (partition-local top-k
-    pre-aggregation, broadcast queries — swap in the IVF/graph tier
-    for the same neighbor contract); the vote is a ≤k-row-per-query
-    aggregate and the label joins broadcast. Deterministic: 6dp
-    cosines, id tiebreaks, smallest-label vote ties."""
+    Scale shape: rides the brute top-k scan (:func:`ann_topk_cosine`:
+    broadcast queries, partial WindowGroupLimit under the rank exchange
+    — swap in the IVF/graph tier for the same neighbor contract); the
+    vote is a ≤k-row-per-query aggregate and the label joins
+    broadcast. Deterministic: 6dp cosines, id tiebreaks, smallest-label
+    vote ties."""
     emb = load_table(spark, sf_dir, "embeddings")
-    top = _ann_topk(spark, sf_dir, restrict_cell=False).select(
-        "query_id", "neighbor_id"
-    )
+    top = ann_topk_cosine(spark, sf_dir).select("query_id", "neighbor_id")
     labels = emb.select("vec_id", "label")
     votes = (
         top.join(
@@ -3227,54 +3064,28 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Xiong et al. 2021, ANCE).
 
     Scale shape: one brute scan per anchor set (broadcast queries,
-    per-side norms, partition-local top-k pre-aggregation keyed on
-    (anchor, same-label) — the exactness floor; the IVF/graph tiers
-    swap in for the same contract, which is exactly how ANCE refreshes
-    its negative index); the rank windows run over ≤(k·partitions)
-    rows per anchor side. Deterministic: 6dp cosines, id tiebreaks,
-    so the all-pairs oracle replays both rankings."""
+    per-side norms) ranked by ONE window keyed on (anchor, same-label)
+    and cut at ``rank <= HARD_NEG_K`` BEFORE the positive/negative
+    filter — that conjunct is what gives the plan its partial
+    WindowGroupLimit (a disjunctive rank filter infers none), so each
+    map task ships ≤k rows per anchor side to the rank exchange. The
+    exactness floor; the IVF/graph tiers swap in for the same
+    contract, which is exactly how ANCE refreshes its negative index.
+    Deterministic: 6dp cosines, id tiebreaks, so the all-pairs oracle
+    replays both rankings."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("ql"),
-        norm_expr(F.col("embedding")).alias("nq"),
+    queries = stride_queries(emb, F.col("label").alias("ql"))
+    cands = candidates(emb, F.col("label").alias("cl"))
+    sims = brute_pairs(queries, cands, "neighbor_id").select(
+        "query_id",
+        "neighbor_id",
+        (F.col("cl") == F.col("ql")).alias("same"),
+        cosine6("qe", "ce", "nq", "nc").alias("cosine"),
     )
-    cands = pair_scan_barrier(  # nc otherwise re-evaluates per pair
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("ce"),
-            F.col("label").alias("cl"),
-            norm_expr(F.col("embedding")).alias("nc"),
-        )
-    )
-    sims = (
-        F.broadcast(queries)
-        .crossJoin(cands)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("cl") == F.col("ql")).alias("same"),
-            F.round(
-                cosine_from_norms(F.col("qe"), F.col("ce"), F.col("nq"), F.col("nc")),
-                6,
-            ).alias("cosine"),
-        )
-        .withColumn(
-            "grp", F.concat_ws(":", F.col("query_id"), F.col("same").cast("string"))
-        )
-    )
-    sims = local_topk_prune(sims, "grp", "cosine", "neighbor_id", HARD_NEG_K)
-    w = Window.partitionBy("query_id", "same").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
+    by_cosine = [F.desc("cosine"), F.asc("neighbor_id")]
     return (
-        sims.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(
-            (F.col("same") & (F.col("rank") == 1))
-            | (~F.col("same") & (F.col("rank") <= HARD_NEG_K))
-        )
+        top_k(sims, ["query_id", "same"], by_cosine, HARD_NEG_K)
+        .filter((F.col("same") & (F.col("rank") == 1)) | ~F.col("same"))
         .select(
             "query_id",
             F.when(F.col("same"), "positive").otherwise("negative").alias("kind"),
@@ -3385,6 +3196,27 @@ _PFX_ORACLE = f"""
 """
 
 
+def _prefix_pairs(emb: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, pcosine): 6dp cosine over the first
+    PREFIX_DIMS dims for every stride query against every vector. The
+    barrier of :func:`brute_pairs` keeps the prefix slice (an array
+    copy) and its norm out of the pair loop, where they ran nq× per
+    vector."""
+    base = emb.select(
+        "vec_id", F.slice(F.col("embedding"), 1, PREFIX_DIMS).alias("pe")
+    ).withColumn("np", norm_expr(F.col("pe")))
+    queries = base.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("pe").alias("qpe"),
+        F.col("np").alias("nqp"),
+    )
+    return brute_pairs(queries, base, "vec_id").select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        cosine6("qpe", "pe", "nqp", "np").alias("pcosine"),
+    )
+
+
 @query("ann_prefix_topk", oracle=_PFX_ORACLE)
 def ann_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-dimension ANN (the Matryoshka coarse tier): rank by 6dp
@@ -3398,42 +3230,14 @@ def ann_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the re-rank stage recovers.
 
     Scale shape: identical to the other brute tiers (broadcast stride
-    queries, linear scan, partition-local top-k prune, one rank
-    exchange); the prefix slice prunes the per-pair fold from 64 to
-    {PREFIX_DIMS} multiplies and — unlike binary codes — needs no
-    second pass over the corpus to build anything."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    pfx = F.slice(F.col("embedding"), 1, PREFIX_DIMS)
-    # barrier: the prefix slice (an array copy) + np norm otherwise fold
-    # into the BNLJ pair loop and run nq× per vector
-    base = pair_scan_barrier(
-        emb.select("vec_id", pfx.alias("pe")).withColumn(
-            "np", norm_expr(F.col("pe"))
-        )
-    )
-    queries = base.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("pe").alias("qe"),
-        F.col("np").alias("nq"),
-    )
-    sims = (
-        F.broadcast(queries)
-        .crossJoin(base)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                cosine_from_norms(F.col("qe"), F.col("pe"), F.col("nq"), F.col("np")),
-                6,
-            ).alias("pcosine"),
-        )
-    )
-    sims = local_topk_prune(sims, "query_id", "pcosine", "neighbor_id", TOP_K)
-    w = Window.partitionBy("query_id").orderBy(F.desc("pcosine"), F.asc("neighbor_id"))
+    queries, linear scan, one rank exchange); the prefix slice prunes
+    the per-pair fold from 64 to {PREFIX_DIMS} multiplies and — unlike
+    binary codes — needs no second pass over the corpus to build
+    anything."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    by_pcosine = [F.desc("pcosine"), F.asc("neighbor_id")]
     return (
-        sims.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
+        top_k(_prefix_pairs(emb), "query_id", by_pcosine, TOP_K)
         .select("query_id", "neighbor_id", "pcosine", "rank")
         .orderBy("query_id", "rank")
     )
@@ -3491,78 +3295,15 @@ def ann_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_binary_rerank / ann_ivf_pq_rerank funnel contract with a
     train-free float prefix as the coarse stage.
 
-    Scale shape: coarse stage = the prefix linear scan (local top-k
-    prune holds the shortlist exchange to ≤{PFX_SHORTLIST} rows per
-    (query, partition)); fine stage = the nq×{PFX_SHORTLIST} shortlist
+    Scale shape: coarse stage = the prefix linear scan (the partial
+    WindowGroupLimit holds the shortlist exchange to ≤{PFX_SHORTLIST}
+    rows per (query, map task)); fine stage = the nq×{PFX_SHORTLIST} shortlist
     broadcast against the embeddings table, so the big side never
     shuffles and full vectors are touched only for shortlisted ids."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    pfx = F.slice(F.col("embedding"), 1, PREFIX_DIMS)
-    # barrier: same pair-loop slice+norm re-evaluation as ann_prefix_topk
-    base = pair_scan_barrier(
-        emb.select("vec_id", pfx.alias("pe")).withColumn(
-            "np", norm_expr(F.col("pe"))
-        )
-    )
-    pqueries = base.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("pe").alias("qpe"),
-        F.col("np").alias("nqp"),
-    )
-    coarse = (
-        F.broadcast(pqueries)
-        .crossJoin(base)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                cosine_from_norms(
-                    F.col("qpe"), F.col("pe"), F.col("nqp"), F.col("np")
-                ),
-                6,
-            ).alias("pcosine"),
-        )
-    )
-    coarse = local_topk_prune(coarse, "query_id", "pcosine", "neighbor_id", PFX_SHORTLIST)
-    sw = Window.partitionBy("query_id").orderBy(
-        F.desc("pcosine"), F.asc("neighbor_id")
-    )
-    short = (
-        coarse.withColumn("srn", F.row_number().over(sw))
-        .filter(F.col("srn") <= PFX_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    qe = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm_expr(F.col("embedding")).alias("nq"),
-    )
-    ne = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-    )
-    rer = (
-        ne.join(F.broadcast(short), "neighbor_id")
-        .withColumn("nn", norm_expr(F.col("ne")))
-        .join(F.broadcast(qe), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_from_norms(
-                    F.col("qe"), F.col("ne"), F.col("nq"), F.col("nn")
-                ),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .orderBy("query_id", "rank")
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    by_pcosine = [F.desc("pcosine"), F.asc("neighbor_id")]
+    short = top_k(_prefix_pairs(emb), "query_id", by_pcosine, PFX_SHORTLIST, rank="srn")
+    return _exact_rerank(emb, short.select("query_id", "neighbor_id"))
 
 
 DRIFT_Z = 3.0  # standard-error z threshold flagging a drifted dimension

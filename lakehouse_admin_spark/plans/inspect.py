@@ -69,3 +69,20 @@ def exchange_count(df: DataFrame) -> int:
 def codegen_stage_count(df: DataFrame) -> int:
     plan = explain_str(df, "simple")
     return plan.count("WholeStageCodegen")
+
+
+def plan_tree(plan: str) -> list[tuple[int, str]]:
+    """``(column, operator)`` for every node of the numbered operator
+    tree of an ``explain("formatted")`` plan, top down. The details
+    section below the tree repeats each node, so a count over the whole
+    text sees every operator twice. A node's parent is the nearest
+    earlier node with a smaller column."""
+    import re
+
+    tree = plan.split("\n\n")[0]
+    nodes = []
+    for line in tree.splitlines():
+        m = re.match(r"([ :|+\-]*)(?:\* )?([A-Za-z]\w*).* \(\d+\)$", line)
+        if m:
+            nodes.append((len(m.group(1)), m.group(2)))
+    return nodes

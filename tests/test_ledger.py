@@ -990,7 +990,9 @@ def test_zorder_rewrite_enables_multicolumn_skipping(spark, catalog):
     rectangle, so manifest stats prune files on EITHER column — and the
     table content is unchanged."""
     n = 1 << 16
-    df = spark.range(n).selectExpr(
+    # 16 input partitions pinned: the default (the core count) can be
+    # too few for the multi-file precondition below
+    df = spark.range(0, n, 1, 16).selectExpr(
         "id",
         "CAST(id % 256 AS BIGINT) AS x",
         "CAST((id * 7919) % 256 AS BIGINT) AS y",

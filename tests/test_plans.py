@@ -81,11 +81,67 @@ def test_needs_optimize_single_agg_pass(spark):
     assert not has_cartesian(df)
 
 
+BRUTE_TIERS = (
+    "ann_topk_cosine",
+    "knn_label_predict",
+    "ann_sq_topk",
+    "ann_filtered_topk",
+    "ann_binary_hamming_topk",
+    "ann_binary_rerank",
+    "ann_prefix_topk",
+    "ann_prefix_rerank",
+    "hard_negative_mining",
+    "rrf_hybrid_topk",
+    "multimodal_feature_ann",
+)
+
+
+def _limit_below_rank_exchange(nodes) -> bool:
+    """Some WindowGroupLimit has an Exchange ancestor that itself sits
+    under a Window: the partial per-task limit of a rank window."""
+    for i, (col, name) in enumerate(nodes):
+        if name != "WindowGroupLimit":
+            continue
+        above = []
+        for pcol, pname in reversed(nodes[:i]):
+            if pcol < col:
+                above.append(pname)
+                col = pcol
+        if "Exchange" in above and "Window" in above[above.index("Exchange") :]:
+            return True
+    return False
+
+
 def test_ann_brute_force_is_broadcast_not_cartesian(spark):
-    df = q("ann_topk_cosine")(spark, SF_SMOKE)
-    # the deliberate small-side crossJoin must plan as broadcast NLJ,
-    # never a CartesianProduct of the big side
-    assert not has_cartesian(df)
+    """Every brute tier plans its deliberate small-side crossJoin as a
+    broadcast NLJ (never a CartesianProduct of the big side), ranks
+    with no Python boundary, and gets a partial WindowGroupLimit under
+    the rank exchange — the JVM bound on the rows each task ships."""
+    from lakehouse_admin_spark.plans.inspect import explain_str, plan_tree
+
+    for name in BRUTE_TIERS:
+        nodes = plan_tree(explain_str(q(name)(spark, SF_SMOKE), "formatted"))
+        names = [n for _c, n in nodes]
+        assert "MapInPandas" not in names, name
+        assert "BroadcastNestedLoopJoin" in names, name
+        assert "CartesianProduct" not in names, name
+        assert _limit_below_rank_exchange(nodes), name
+
+
+def test_plan_sweep_counts_each_operator_once():
+    """The committed r14 ann_topk_cosine plan holds one MapInPandas
+    node; the details section repeats it, and must not count twice."""
+    from pathlib import Path
+
+    from tools.plan_sweep import analyze
+
+    root = Path(__file__).resolve().parent.parent
+    flags = analyze((root / "plans/r14/after/ann_topk_cosine.txt").read_text())
+    assert flags["n_python"] == 1
+    assert flags["n_bnlj"] == 1
+    assert flags["n_window"] == 1
+    assert flags["n_window_group_limit"] == 2
+    assert flags["n_exchange"] == 3
 
 
 def test_bucketed_star_join_no_fact_exchange(spark):

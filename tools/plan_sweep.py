@@ -2,10 +2,12 @@
 query and flag physical-plan antipatterns programmatically.
 
 Emits one JSON line per query to stdout (redirect to a file) with:
-  name, n_exchange, n_smj, n_bhj, n_shj, n_cartesian, n_window,
-  n_partitionless_window, n_python (BatchEvalPython/ArrowEvalPython/
-  MapInArrow/FlatMapGroupsInPandas), n_scans, scans_without_pushdown,
-  plan_len
+  name, n_exchange, n_smj, n_bhj, n_shj, n_bnlj, n_cartesian, n_window,
+  n_window_group_limit, n_partitionless_window, n_python
+  (BatchEvalPython/ArrowEvalPython/MapInArrow/MapInPandas/
+  FlatMapGroupsInPandas), n_scans, pushedfilters_empty, plan_len
+Operator counts read the numbered tree only, so each node counts once
+(the details section below the tree repeats every node).
 
 Usage: python tools/plan_sweep.py [--only name1,name2] [--dir OUTDIR]
 With --dir, also writes each query's formatted plan to OUTDIR/<name>.txt.
@@ -23,31 +25,31 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lakehouse_admin_spark import registry
-from lakehouse_admin_spark.plans.inspect import explain_str
+from lakehouse_admin_spark.plans.inspect import explain_str, plan_tree
 from lakehouse_admin_spark.session import get_spark
 
 
+PYTHON_NODES = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInArrow",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+)
+
+
 def analyze(plan: str) -> dict:
-    # Count operator list entries only (the numbered tree section), so
-    # the details section does not double count.
+    names = [name for _col, name in plan_tree(plan)]
     flags = {
-        "n_exchange": len(re.findall(r"\bExchange\b", plan.split("\n\n")[0])),
-        "n_smj": plan.count("SortMergeJoin"),
-        "n_bhj": plan.count("BroadcastHashJoin"),
-        "n_shj": plan.count("ShuffledHashJoin"),
-        "n_bnlj": plan.count("BroadcastNestedLoopJoin"),
-        "n_cartesian": plan.count("CartesianProduct"),
-        "n_window": plan.count("Window"),
-        "n_python": sum(
-            plan.count(x)
-            for x in (
-                "BatchEvalPython",
-                "ArrowEvalPython",
-                "MapInArrow",
-                "MapInPandas",
-                "FlatMapGroupsInPandas",
-            )
-        ),
+        "n_exchange": names.count("Exchange"),
+        "n_smj": names.count("SortMergeJoin"),
+        "n_bhj": names.count("BroadcastHashJoin"),
+        "n_shj": names.count("ShuffledHashJoin"),
+        "n_bnlj": names.count("BroadcastNestedLoopJoin"),
+        "n_cartesian": names.count("CartesianProduct"),
+        "n_window": names.count("Window"),
+        "n_window_group_limit": names.count("WindowGroupLimit"),
+        "n_python": sum(names.count(x) for x in PYTHON_NODES),
     }
     # partition-less windows: the details section shows
     # "Arguments: [sum(...)...], [partcol ASC ...], or windowspecdefinition(...)
@@ -64,7 +66,7 @@ def analyze(plan: str) -> dict:
     flags["n_partitionless_window"] = n_pw
     # scans and pushdown
     scans = re.findall(r"PushedFilters: \[(.*?)\]", plan)
-    flags["n_scans"] = plan.count("Scan parquet") + plan.count("Scan ExistingRDD")
+    flags["n_scans"] = names.count("Scan")
     flags["pushedfilters_empty"] = sum(1 for s in scans if not s.strip())
     flags["plan_len"] = len(plan)
     return flags
