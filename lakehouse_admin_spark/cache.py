@@ -21,10 +21,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from lakehouse_admin_spark.metadata import partitions_df, snapshots_df
+from lakehouse_admin_spark.metadata import local_frame, partitions_df, snapshots_df
 from lakehouse_admin_spark.operators.analyze import OptimizeSettings
 from lakehouse_admin_spark.sources.ledger import LedgerCatalog
+
+_TABLE_KEY_SCHEMA = StructType(
+    [StructField("database", StringType()), StructField("table", StringType())]
+)
 
 
 class MetadataCache:
@@ -164,9 +169,7 @@ class MetadataCache:
         if not self._exists("partitions"):
             return []
         cached = self.read("partitions").select("database", "table").distinct()
-        live_df = self.spark.createDataFrame(
-            live or [("", "")], "database string, table string"
-        )
+        live_df = local_frame(self.spark, live, _TABLE_KEY_SCHEMA)
         stale = cached.join(live_df, ["database", "table"], "left_anti")
         return sorted((r["database"], r["table"]) for r in stale.collect())
 

@@ -10,18 +10,27 @@ Spark-first re-expression of the reference's metadata surface:
 - table summaries A3/A4 (reference: backend/internal/service_metadata.go:36-66)
 - partition drill-down A2 (reference: backend/internal/handler_browse.go:137-178)
 
-The file/snapshot inventories are small (O(files), O(snapshots)) —
-driver-held JSON turned into DataFrames so every analysis below is a
-plain Catalyst plan. At 100 TB the inventory DataFrame would come from a
-distributed manifest scan instead; every aggregation here is already
-shaped for that (no collect before aggregation).
+The file/snapshot inventories are small (O(files), O(snapshots)) and
+held on the driver, so :func:`local_frame` hands them to Spark as one
+Arrow table: the plan leaf is a ``LocalRelation``, the optimizer folds
+the Filter/Project above it (``ConvertToLocalRelation``), and a browse
+read that filters down to a few rows runs no Spark job at all. Above
+``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by default)
+Spark itself turns the Arrow batches into an RDD scan, so a large
+inventory plans as a distributed scan with no change here. Tables with a
+parquet manifest skip the driver entirely (:func:`files_df`); every
+aggregation below is shaped for either leaf (no collect before
+aggregation).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
+    BooleanType,
     LongType,
     MapType,
     StringType,
@@ -54,6 +63,32 @@ FILE_SCHEMA = StructType(
     ]
 )
 
+PATH_SCHEMA = StructType([StructField("file_path", StringType())])
+
+HISTORY_SCHEMA = StructType(
+    [
+        StructField("made_current_at_ms", LongType()),
+        StructField("snapshot_id", LongType()),
+        StructField("parent_id", LongType(), nullable=True),
+        StructField("is_current_ancestor", BooleanType()),
+    ]
+)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """Driver-held ``rows`` (tuples in ``schema`` field order; map
+    columns as dicts) as a DataFrame whose plan leaf is a
+    ``LocalRelation``. The rows travel as one Arrow table typed by
+    ``schema``, so no pickled-RDD scan is built and a Filter/Project
+    over the frame is folded at optimization time. Empty ``rows`` give
+    an empty frame of the same schema."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
+
 
 def snapshots_df(table: LedgerTable) -> DataFrame:
     """The `{t}.snapshots` metadata table. Default operation is
@@ -68,7 +103,7 @@ def snapshots_df(table: LedgerTable) -> DataFrame:
         )
         for s in table.snapshots()
     ]
-    df = table.spark.createDataFrame(rows, SNAPSHOT_SCHEMA)
+    df = local_frame(table.spark, rows, SNAPSHOT_SCHEMA)
     return df.withColumn(
         "committed_at", F.timestamp_millis(F.col("committed_at_ms"))
     )
@@ -83,7 +118,8 @@ def files_df(table: LedgerTable, snapshot_id: int | None = None) -> DataFrame:
     parquet scan — predicate pushdown and column pruning reach the
     manifest, and nothing O(files) is materialized on the driver, which
     is what keeps partition analytics viable at 10⁶-10⁷ files. Small or
-    freshly-committed tables fall back to the in-memory JSON entries."""
+    freshly-committed tables fall back to the in-memory JSON entries,
+    as a :func:`local_frame`."""
     sid = snapshot_id if snapshot_id is not None else table.current_snapshot_id()
     if sid is not None and table.has_manifest(sid):
         return table.spark.read.schema(FILE_SCHEMA).parquet(table.manifest_path(sid))
@@ -99,7 +135,7 @@ def files_df(table: LedgerTable, snapshot_id: int | None = None) -> DataFrame:
         )
         for e in table.live_files(sid)
     ]
-    return table.spark.createDataFrame(rows, FILE_SCHEMA)
+    return local_frame(table.spark, rows, FILE_SCHEMA)
 
 
 def partitions_df(
@@ -122,10 +158,14 @@ def partitions_df(
     # spec_id participates in the grouping: after partition evolution,
     # files written under different specs are distinct partitions even
     # if their tuples collide (reference keeps spec_id on every
-    # partition row, types.go:31-42)
+    # partition row, types.go:31-42). Every map in a group serialises to
+    # the same JSON, so it is the same map and `first` carries it
+    # exactly. The key stays the JSON string: grouping by the map itself
+    # ignores key order.
     rolled = file_rollup(
         keyed,
         ["partition_key", "spec_id"],
+        F.first("partition").alias("partition"),
         settings=settings,
     )
     # raw map + browse-normalized map (hidden transforms expanded to
@@ -135,14 +175,7 @@ def partitions_df(
         expr = normalize_map_expr(spec, F.col("partition"))
         branch = (F.col("spec_id") == sid, expr)
         browse = F.when(*branch) if browse is None else browse.when(*branch)
-    first_map = (
-        files.select(
-            F.to_json(F.col("partition")).alias("partition_key"), "spec_id", "partition"
-        )
-        .dropDuplicates(["partition_key", "spec_id"])
-        .withColumn("partition_browse", browse)
-    )
-    return rolled.join(first_map, ["partition_key", "spec_id"])
+    return rolled.withColumn("partition_browse", browse)
 
 
 def table_summary(table: LedgerTable, settings: OptimizeSettings | None = None) -> dict:
@@ -254,15 +287,5 @@ def history_df(table: LedgerTable) -> DataFrame:
         )
         for s in snaps
     ]
-    from pyspark.sql.types import BooleanType
-
-    schema = StructType(
-        [
-            StructField("made_current_at_ms", LongType()),
-            StructField("snapshot_id", LongType()),
-            StructField("parent_id", LongType(), nullable=True),
-            StructField("is_current_ancestor", BooleanType()),
-        ]
-    )
-    df = table.spark.createDataFrame(rows, schema)
+    df = local_frame(table.spark, rows, HISTORY_SCHEMA)
     return df.withColumn("made_current_at", F.timestamp_millis(F.col("made_current_at_ms")))

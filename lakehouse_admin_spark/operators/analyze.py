@@ -54,6 +54,7 @@ def needs_optimize_expr(
 def file_rollup(
     files: DataFrame,
     partition_cols: list[str],
+    *extra: Column,
     size_col: str = "file_size_in_bytes",
     records_col: str = "record_count",
     settings: OptimizeSettings | None = None,
@@ -65,7 +66,8 @@ def file_rollup(
     reference's row-at-a-time Go map fold
     (reference: backend/internal/iceberg_client.go:188-219) with a
     distributed partial aggregate — the shuffle carries one row per
-    partition value, not per file.
+    partition value, not per file. ``extra`` aggregates ride along in
+    the same aggregate.
     """
     settings = settings or OptimizeSettings()
     small = F.sum(
@@ -76,6 +78,7 @@ def file_rollup(
         F.sum(records_col).alias("record_count"),
         F.sum(size_col).alias("total_data_file_size_in_bytes"),
         small,
+        *extra,
     )
     return out.withColumn(
         "needs_optimize",

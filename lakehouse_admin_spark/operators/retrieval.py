@@ -32,11 +32,7 @@ from pyspark.sql import functions as F
 from lakehouse_admin_spark import index_registry
 from lakehouse_admin_spark.operators import similarity as _sim
 from lakehouse_admin_spark.operators.dedup import tokens_expr
-from lakehouse_admin_spark.operators.similarity import (
-    QUERY_STRIDE,
-    cosine_from_norms,
-    norm_expr,
-)
+from lakehouse_admin_spark.operators.similarity import QUERY_STRIDE
 
 # NOTE: oracle SQL strings bake QUERY_STRIDE in at import (the graded
 # form); the Spark-side functions read _sim.QUERY_STRIDE dynamically so
@@ -474,41 +470,23 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     against earlier ones — the classic answer to "my top-k is five
     copies of the same document" after semantic retrieval.
 
-    Scale shape: the shortlist is the brute top-C scan (swap in any
-    indexed tier for the same contract); the greedy loop runs as one
+    Scale shape: the shortlist is the brute top-C scan of the shared
+    scaffold, ``brute_pairs`` + ``top_k`` (swap in any indexed tier for
+    the same contract); the greedy loop runs as one
     Arrow-batched kernel per query over C rows — a C×C sim matrix and
     5 argmax passes, constant work per query, embarrassingly parallel
     across queries. All sims 6dp-rounded with id tiebreaks, so the
     unrolled-CTE oracle replays every round bit-for-bit."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % _sim.QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        norm_expr(F.col("embedding")).alias("nq"),
+    pairs = _sim.brute_pairs(_sim.stride_queries(emb), _sim.candidates(emb), "neighbor_id")
+    sims = pairs.select(
+        "query_id",
+        F.col("neighbor_id").alias("doc_id"),
+        "ce",
+        _sim.cosine6("qe", "ce", "nq", "nc").alias("qsim"),
     )
-    cands = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("embedding").alias("ce"),
-        norm_expr(F.col("embedding")).alias("nc"),
-    )
-    sims = (
-        F.broadcast(queries)
-        .crossJoin(cands)
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "doc_id",
-            "ce",
-            F.round(
-                cosine_from_norms(F.col("qe"), F.col("ce"), F.col("nq"), F.col("nc")),
-                6,
-            ).alias("qsim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qsim"), F.asc("doc_id"))
-    short = sims.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= MMR_SHORTLIST
-    )
+    by_qsim = [F.desc("qsim"), F.asc("doc_id")]
+    short = _sim.top_k(sims, "query_id", by_qsim, MMR_SHORTLIST, rank="rn")
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,

@@ -93,6 +93,7 @@ BRUTE_TIERS = (
     "hard_negative_mining",
     "rrf_hybrid_topk",
     "multimodal_feature_ann",
+    "mmr_diversified_topk",
 )
 
 
@@ -142,6 +143,20 @@ def test_plan_sweep_counts_each_operator_once():
     assert flags["n_window"] == 1
     assert flags["n_window_group_limit"] == 2
     assert flags["n_exchange"] == 3
+
+
+def test_plan_sweep_counts_rdd_scans():
+    """The committed r14 minhash_near_dup tree reads five localCheckpoint
+    frames: five ``Scan ExistingRDD`` nodes and no local scan."""
+    from pathlib import Path
+
+    from tools.plan_sweep import analyze
+
+    root = Path(__file__).resolve().parent.parent
+    flags = analyze((root / "plans/r14/after/minhash_near_dup.txt").read_text())
+    assert flags["n_rdd_scan"] == 5
+    assert flags["n_local_scan"] == 0
+    assert flags["n_scans"] == 5
 
 
 def test_bucketed_star_join_no_fact_exchange(spark):

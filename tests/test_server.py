@@ -12,6 +12,7 @@ import pytest
 from lakehouse_admin_spark.engine import LakehouseAdmin
 from lakehouse_admin_spark.server import AdminHTTPServer
 from lakehouse_admin_spark.sources.fixtures import build_events_ledger
+from lakehouse_admin_spark.sources.ledger import PartitionField
 from tests.conftest import SF_SMOKE
 
 
@@ -309,3 +310,71 @@ def test_task_list_query_params(served):
     assert e.value.code == 400
     admin.tasks.flush()
     admin.tasks.flush(database="otherdb")
+
+
+@pytest.fixture(scope="module")
+def one_file_served(spark, tmp_path_factory):
+    """A day-partitioned ledger with one file per partition and no
+    parquet manifest, so its browse reads use the driver-held inventory,
+    plus a table that was never written to."""
+    wh = str(tmp_path_factory.mktemp("wh_http_one_file"))
+    admin = LakehouseAdmin(spark, wh)
+    rows = spark.range(0, 30).selectExpr(
+        "timestamp_seconds(1704067200 + (id % 3) * 86400) AS ts", "id AS v"
+    )
+    spec = [PartitionField(source="ts", transform="day", name="ts_day")]
+    tbl = admin.catalog.create_table("main", "daily", rows.schema, spec)
+    tbl.append(rows.coalesce(1))
+    empty = admin.catalog.create_table("main", "never_written", rows.schema, spec)
+    with AdminHTTPServer(admin) as srv:
+        yield f"http://127.0.0.1:{srv.port}", tbl, empty
+
+
+def _new_jobs(spark, fn):
+    """``fn()`` and the ids of the Spark jobs it started."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    return out, set(tracker.getJobIdsForGroup(None)) - before
+
+
+def test_small_browse_reads_start_no_spark_job(spark, one_file_served):
+    """A one-file partition listing and the snapshot list are answered
+    from the optimizer-folded local relation: no Spark job at all."""
+    base, tbl, _ = one_file_served
+    assert not tbl.has_manifest(tbl.current_snapshot_id())
+    sel = {"partitions": {"year": "2024", "month": "01", "day": "02"}}
+    (_, files), jobs = _new_jobs(
+        spark, lambda: _req(base, "POST", "/api/browse/main/daily/files", sel)
+    )
+    assert [f["record_count"] for f in files["files"]] == [10]
+    assert files["files"][0]["partition"] == {"ts_day": "2024-01-02"}
+    assert not jobs, f"file listing started Spark jobs {sorted(jobs)}"
+    (_, snaps), jobs = _new_jobs(
+        spark, lambda: _req(base, "GET", "/api/iceberg/main/daily/snapshots")
+    )
+    assert [s["snapshot_id"] for s in snaps["snapshots"]] == [tbl.current_snapshot_id()]
+    assert not jobs, f"snapshot list started Spark jobs {sorted(jobs)}"
+
+
+def test_driver_held_frames_are_local_relations(spark, one_file_served):
+    """Every driver-held admin frame analyses to a LocalRelation leaf,
+    never a pickled-RDD scan; an empty inventory keeps its schema."""
+    from lakehouse_admin_spark.integrity import expected_files_df, listed_files_df
+    from lakehouse_admin_spark.metadata import files_df, history_df, snapshots_df
+
+    _, tbl, empty = one_file_served
+    frames = {
+        "files_df": files_df,
+        "snapshots_df": snapshots_df,
+        "history_df": history_df,
+        "expected_files_df": expected_files_df,
+        "listed_files_df": lambda t: listed_files_df(spark, t.data_dir),
+    }
+    for name, build in frames.items():
+        full, none = build(tbl), build(empty)
+        for df in (full, none):
+            plan = df._jdf.queryExecution().analyzed().toString()
+            assert "LocalRelation" in plan and "LogicalRDD" not in plan, (name, plan)
+        assert full.count() > 0, name
+        assert none.schema == full.schema and none.collect() == [], name

@@ -5,7 +5,8 @@ Emits one JSON line per query to stdout (redirect to a file) with:
   name, n_exchange, n_smj, n_bhj, n_shj, n_bnlj, n_cartesian, n_window,
   n_window_group_limit, n_partitionless_window, n_python
   (BatchEvalPython/ArrowEvalPython/MapInArrow/MapInPandas/
-  FlatMapGroupsInPandas), n_scans, pushedfilters_empty, plan_len
+  FlatMapGroupsInPandas), n_scans, n_rdd_scan (Scan ExistingRDD),
+  n_local_scan (LocalTableScan), pushedfilters_empty, plan_len
 Operator counts read the numbered tree only, so each node counts once
 (the details section below the tree repeats every node).
 
@@ -67,6 +68,11 @@ def analyze(plan: str) -> dict:
     # scans and pushdown
     scans = re.findall(r"PushedFilters: \[(.*?)\]", plan)
     flags["n_scans"] = names.count("Scan")
+    # plan_tree keeps a node's first word only, so an RDD scan and a
+    # parquet scan both read "Scan"; the full tree line tells them apart
+    tree = plan.split("\n\n")[0]
+    flags["n_rdd_scan"] = tree.count("Scan ExistingRDD")
+    flags["n_local_scan"] = tree.count("LocalTableScan")
     flags["pushedfilters_empty"] = sum(1 for s in scans if not s.strip())
     flags["plan_len"] = len(plan)
     return flags
