@@ -37,7 +37,6 @@ class MetadataCache:
         self.spark = spark
         self.cache_dir = cache_dir
         os.makedirs(cache_dir, exist_ok=True)
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def _path(self, entity: str) -> str:
         return os.path.join(self.cache_dir, entity)
@@ -109,9 +108,9 @@ class MetadataCache:
         partition overwrite replaces exactly this table's slice; returns
         the refreshed rows (the handlers echo them back)."""
         df = self._build_entity(catalog, database, name, entity, settings)
-        df.write.mode("overwrite").partitionBy("database", "table").parquet(
-            self._path(entity)
-        )
+        df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("database", "table").parquet(self._path(entity))
         return self.cached(entity, database, name)
 
     def refresh_table(

@@ -34,10 +34,6 @@ def quote_literal(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-def qualified_table_name(database: str, table: str) -> str:
-    return f"{quote_ident(database)}.{quote_ident(table)}"
-
-
 def optimize_where_clause(column_path: str, date_from: str, date_until: str) -> str:
     """The partition-scoped rewrite predicate
     `` `col` >= 'from 00:00:00' AND `col` < 'until 00:00:00' ``

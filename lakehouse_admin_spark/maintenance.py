@@ -153,9 +153,9 @@ def rewrite_data_files_zorder(
     Mechanics: per-column min/max (one metadata-cheap agg per
     partition group) linearly quantize each column to ``bits`` bits;
     the z-value interleaves those bits (a pure codegen'd integer
-    expression — no UDF); files are written via
-    ``repartitionByRange(z)`` so ranges are disjoint. At 100 TB the
-    cost is one range shuffle of the rewritten partitions — the same
+    expression — no UDF); files are cut at quantiles of z
+    (``LedgerTable.write_clustered_files``) so ranges are disjoint. At
+    100 TB the cost is one shuffle of the rewritten partitions — the same
     price as a sort-order compaction — bought once, and every
     multi-dimensional scan afterwards skips at the manifest level.
     Pending position deletes are folded in exactly like binpack.

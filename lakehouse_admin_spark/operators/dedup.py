@@ -23,6 +23,9 @@ shingles can be dropped by document-frequency filtering, see
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -693,35 +696,32 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 INCR_DELTA_MOD = 10  # doc_id % 10 == 0 → the "newly ingested" delta
-_INDEX_DIRS: dict[str, str] = {}
 
 
 def _persisted_bucket_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standing LSH index: band buckets of the EXISTING corpus
     (doc_id % INCR_DELTA_MOD != 0), materialized to parquet once per
-    process and read back — the delta pipeline joins against this
-    stored table, never recomputing corpus signatures. At 100 TB this
-    is the persisted posting/bucket table a production dedup service
+    session (a registry entry whose release removes the directory) and
+    read back — the delta pipeline joins against this stored table,
+    never recomputing corpus signatures. At 100 TB this is the
+    persisted posting/bucket table a production dedup service
     maintains between ingests."""
-    import tempfile
-    import threading
 
-    tag = sf_dir.rstrip("/").split("/")[-1]
-    lock = getattr(_persisted_bucket_index, "_lock", None)
-    if lock is None:
-        lock = _persisted_bucket_index._lock = threading.Lock()
-    with lock:
-        path = _INDEX_DIRS.get(tag)
-        if path is None:
-            path = os.path.join(
-                tempfile.mkdtemp(prefix="lsh_index_"), f"buckets_{tag}.parquet"
-            )
-            ex = exploded_shingles(spark, sf_dir).filter(
-                F.col("doc_id") % INCR_DELTA_MOD != 0
-            )
-            _band_buckets_from_sig(_sig_from_exploded(ex)).write.parquet(path)
-            _INDEX_DIRS[tag] = path
-    return spark.read.parquet(path)
+    def build() -> str:
+        d = tempfile.mkdtemp(prefix="lsh_index_")
+        ex = exploded_shingles(spark, sf_dir).filter(
+            F.col("doc_id") % INCR_DELTA_MOD != 0
+        )
+        _band_buckets_from_sig(_sig_from_exploded(ex)).write.parquet(
+            os.path.join(d, "buckets.parquet")
+        )
+        return d
+
+    d = index_registry.get(
+        spark, sf_dir, "lsh_base", build,
+        release=partial(shutil.rmtree, ignore_errors=True),
+    )
+    return spark.read.parquet(os.path.join(d, "buckets.parquet"))
 
 
 @query(

@@ -26,6 +26,9 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
+import tempfile
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -2077,45 +2080,36 @@ def ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 INCR_VEC_MOD = 10  # vec_id % mod == 0 → the delta ingest
 
-_IVF_PERSIST_PATHS: dict[str, tuple[str, str]] = {}
 
 
 def _persisted_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """The standing IVF index of the EXISTING corpus
     (vec_id % INCR_VEC_MOD != 0): (cells, centroids) trained once per
-    process and materialized to parquet — the delta pipeline reads the
-    stored index, never retraining on the corpus. At 100 TB this is
-    the persisted quantizer + assignment table a production vector
-    store maintains between ingests (the FAISS train-once model; the
-    dedup tier's `_persisted_bucket_index` is the same pattern).
+    session and materialized to parquet (a registry entry whose release
+    removes the directory) — the delta pipeline reads the stored index,
+    never retraining on the corpus. At 100 TB this is the persisted
+    quantizer + assignment table a production vector store maintains
+    between ingests (the FAISS train-once model; the dedup tier's
+    `_persisted_bucket_index` is the same pattern).
     Returns (cells_path, cents_path)."""
-    import tempfile
-    import threading
 
-    # key by the FULL dir (two tiers may share a basename); the tag is
-    # only a human-readable filename suffix
-    tag = sf_dir.rstrip("/").split("/")[-1]
-    cache_key = os.path.abspath(sf_dir.rstrip("/"))
-    lock = getattr(_persisted_ivf_index, "_lock", None)
-    if lock is None:
-        lock = _persisted_ivf_index._lock = threading.Lock()
-    with lock:
-        hit = _IVF_PERSIST_PATHS.get(cache_key)
-        if hit is None:
-            emb = (
-                load_table(spark, sf_dir, "embeddings")
-                .select("vec_id", "embedding")
-                .filter(F.col("vec_id") % INCR_VEC_MOD != 0)
-            )
-            cells, cents = ivf_cells(spark, emb)
-            d = tempfile.mkdtemp(prefix="ivf_index_")
-            cells_path = os.path.join(d, f"cells_{tag}.parquet")
-            cents_path = os.path.join(d, f"cents_{tag}.parquet")
-            cells.write.parquet(cells_path)
-            cents.write.parquet(cents_path)
-            hit = (cells_path, cents_path)
-            _IVF_PERSIST_PATHS[cache_key] = hit
-    return hit
+    def build() -> str:
+        emb = (
+            load_table(spark, sf_dir, "embeddings")
+            .select("vec_id", "embedding")
+            .filter(F.col("vec_id") % INCR_VEC_MOD != 0)
+        )
+        cells, cents = ivf_cells(spark, emb)
+        d = tempfile.mkdtemp(prefix="ivf_index_")
+        cells.write.parquet(os.path.join(d, "cells.parquet"))
+        cents.write.parquet(os.path.join(d, "cents.parquet"))
+        return d
+
+    d = index_registry.get(
+        spark, sf_dir, "ivf_base", build,
+        release=partial(shutil.rmtree, ignore_errors=True),
+    )
+    return os.path.join(d, "cells.parquet"), os.path.join(d, "cents.parquet")
 
 
 def _incr_assign_oracle() -> str:

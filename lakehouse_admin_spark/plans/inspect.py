@@ -66,11 +66,6 @@ def exchange_count(df: DataFrame) -> int:
     ) + plan.count("Exchange RoundRobinPartitioning")
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    plan = explain_str(df, "simple")
-    return plan.count("WholeStageCodegen")
-
-
 def plan_tree(plan: str) -> list[tuple[int, str]]:
     """``(column, operator)`` for every node of the numbered operator
     tree of an ``explain("formatted")`` plan, top down. The details

@@ -14,7 +14,12 @@ variant of the ledger's directory layout.)
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+
+from lakehouse_admin_spark import index_registry
 
 
 def write_bucketed(
@@ -25,7 +30,6 @@ def write_bucketed(
     sort_col: str | None = None,
 ) -> None:
     """One-time bucketed materialization (overwrites)."""
-    import os
     import shutil
 
     spark = df.sparkSession
@@ -43,41 +47,44 @@ def write_bucketed(
     writer.mode("overwrite").format("parquet").saveAsTable(table_name)
 
 
-_BUILT: set[str] = set()
-_LOCK = None
-
-
 def get_bucketed_fact_pair(
-    spark: SparkSession,
-    sf_dir: str,
-    n_buckets: int = 16,
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Session-cached bucketed copies of lineitem and orders, bucketed
-    (and sorted) on their orderkey — built ONCE per (process, sf tier);
-    every subsequent star join reuses the co-located layout. This is the
+    (and sorted) on their orderkey — built ONCE per (session, sf tier)
+    as an index-registry entry whose release drops both tables; every
+    subsequent star join reuses the co-located layout. This is the
     write-once/join-many trade the reference's warehouse would make at
     100 TB: the one fact-fact shuffle moves from every query into a
-    single materialization."""
-    import threading
-
+    single materialization. Table names derive from the normalised
+    tier path, so two tiers sharing a basename never share tables."""
     from lakehouse_admin_spark.sources.tables import load_table
 
-    global _LOCK
-    if _LOCK is None:
-        _LOCK = threading.Lock()
-    tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_").replace("-", "_")
-    ln, rn = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
-    with _LOCK:
-        if ln not in _BUILT:
-            write_bucketed(
-                load_table(spark, sf_dir, "lineitem"), ln, "l_orderkey",
-                n_buckets, sort_col="l_orderkey",
-            )
-            write_bucketed(
-                load_table(spark, sf_dir, "orders"), rn, "o_orderkey",
-                n_buckets, sort_col="o_orderkey",
-            )
-            _BUILT.add(ln)
+    def build() -> tuple[str, str]:
+        norm = os.path.abspath(sf_dir.rstrip("/"))
+        tag = hashlib.sha1(norm.encode()).hexdigest()[:16]
+        ln, rn = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
+        write_bucketed(
+            load_table(spark, sf_dir, "lineitem"), ln, "l_orderkey",
+            sort_col="l_orderkey",
+        )
+        write_bucketed(
+            load_table(spark, sf_dir, "orders"), rn, "o_orderkey",
+            sort_col="o_orderkey",
+        )
+        return ln, rn
+
+    def release(names: tuple[str, str]) -> None:
+        if spark.sparkContext._jsc is None:
+            # a stopped session's DROP still runs and would delete the
+            # on-disk location a later session's same-named table uses
+            return
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+    ln, rn = index_registry.get(
+        spark, sf_dir, "bucketed_facts", build, release=release
+    )
     return spark.table(ln), spark.table(rn)
 
 

@@ -32,8 +32,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass
 
 import pyarrow.parquet as pq
@@ -162,85 +164,125 @@ _SEGMENT_SCALARS = (
     ("file_format", "string"),
 )
 
-# process-wide LRU over immutable segment files (abs path -> parsed
-# JSON); bounded so a long-lived server planning many tables can't
-# accumulate one inventory per table in driver memory.
-#
-# Both metadata caches are bounded by WEIGHT (total manifest entries),
-# not item count: a count-only bound admits 32 segments x 10^6 entries
-# (multi-GB of driver dicts) — at 10 TB-class tables the heap, not the
-# slot count, is the budget. Weight caps chosen for ~low-hundreds of MB
-# worst case; eviction just re-reads (segments are immutable).
-from collections import OrderedDict as _OrderedDict  # noqa: E402
+class LRU:
+    """A locked, bounded least-recently-used map for immutable driver
+    metadata (segment bodies, per-snapshot file views, sketch sidecars,
+    probe positions) — the one cache class outside the session-index
+    registry. Safe under concurrent readers (the admin server is a
+    ``ThreadingHTTPServer``): every map operation holds one lock, and
+    builds run OUTSIDE it, so a slow segment read never blocks lookups
+    of other keys. Two threads missing the same key may both build; the
+    first insert wins and both get that value (values are immutable, so
+    either is correct).
 
-_SEGMENT_CACHE: "_OrderedDict[str, dict]" = _OrderedDict()
-_SEGMENT_CACHE_MAX = 32
-_SEGMENT_CACHE_MAX_ENTRIES = 2_000_000
+    Bounded by ``max_items`` and, optionally, by ``max_weight`` summed
+    over ``weigh(value)`` — a count-only bound would admit 32 cached
+    million-entry inventories (a multi-GB driver heap at 10 TB-class
+    tables). A single over-weight item may remain alone (its caller
+    needs it this instant); it evicts as soon as anything newer lands.
+    Eviction just re-reads: the cached values are immutable."""
 
-# (table meta_dir, snapshot_id) -> materialized live-file list; a
-# committed snapshot's live set is immutable, so the planner replays
-# the segment merge once per snapshot, not once per plan_files call
-_LIVE_FILES_CACHE: "_OrderedDict[tuple, list]" = _OrderedDict()
-_LIVE_FILES_CACHE_MAX = 8
-_LIVE_FILES_CACHE_MAX_ENTRIES = 2_000_000
+    def __init__(self, max_items: int, max_weight: int | None = None, weigh=None):
+        self.max_items, self.max_weight, self._weigh = max_items, max_weight, weigh
+        self._lock = threading.Lock()
+        self._items: OrderedDict = OrderedDict()
+        self._weight = 0  # running sum of weigh() over _items
 
-# (table meta_dir, snapshot_id) -> the DATA-only (content == 0) subset
-# of the live list, sharing the same entry dicts (pointer list, not a
-# copy). Warm plan_files otherwise re-filters O(files) per call — at
-# 10^6 files that scan, not the index probe, dominates steady-state
-# plan latency.
-_DATA_FILES_CACHE: "_OrderedDict[tuple, list]" = _OrderedDict()
-_DATA_FILES_CACHE_MAX = 8
-_DATA_FILES_CACHE_MAX_ENTRIES = 2_000_000
+    def __len__(self) -> int:
+        return len(self._items)
+
+    def get(self, key, build):
+        """The cached value for ``key``, or ``build()``'s (cached)."""
+        with self._lock:
+            hit = self._items.get(key)
+            if hit is not None:
+                self._items.move_to_end(key)
+                return hit
+        value = build()
+        with self._lock:
+            hit = self._items.get(key)
+            if hit is not None:  # a concurrent build landed first
+                self._items.move_to_end(key)
+                return hit
+            self._items[key] = value
+            if self._weigh is not None:
+                self._weight += self._weigh(value)
+            while len(self._items) > self.max_items or (
+                self.max_weight is not None
+                and len(self._items) > 1
+                and self._weight > self.max_weight
+            ):
+                self._discard(next(iter(self._items)))
+        return value
+
+    def peek(self, key):
+        """The cached value for ``key`` or None; never builds and
+        leaves the recency order alone."""
+        with self._lock:
+            return self._items.get(key)
+
+    def pop(self, key) -> None:
+        with self._lock:
+            if key in self._items:
+                self._discard(key)
+
+    def clear(self) -> None:
+        with self._lock:
+            self._items.clear()
+            self._weight = 0
+
+    def _discard(self, key) -> None:  # lock held
+        value = self._items.pop(key)
+        if self._weigh is not None:
+            self._weight -= self._weigh(value)
 
 
 def _seg_weight(seg: dict) -> int:
     return len(seg.get("added", ())) + len(seg.get("removed", ()))
 
 
-def _evict_lru(cache: "_OrderedDict", max_items: int, max_weight: int, weigh) -> None:
-    """Evict oldest-first until both the item bound and the weight
-    bound hold. A single over-weight item is allowed to remain alone
-    (the caller needs it this instant anyway); it evicts as soon as
-    anything newer lands.
-
-    The total weight is summed ONCE and decremented per eviction —
-    re-summing inside the loop would be O(n²) across a multi-eviction
-    pass (and each _SEGMENT_CACHE weigh walks two entry lists)."""
-    total = sum(weigh(v) for v in cache.values())
-    while len(cache) > max_items or (len(cache) > 1 and total > max_weight):
-        _, evicted = cache.popitem(last=False)
-        total -= weigh(evicted)
+# abs segment path -> parsed body; bounded so a long-lived server
+# planning many tables can't accumulate one inventory per table in
+# driver memory. Weight caps (total manifest entries) are chosen for a
+# ~low-hundreds-of-MB worst case.
+_SEGMENT_CACHE = LRU(32, 2_000_000, _seg_weight)
 
 
-# (table meta_dir, snapshot_id, column) -> equality-lookup index over
-# the snapshot's data-file stats (see LedgerTable._eq_index)
-_EQ_INDEX_CACHE: "_OrderedDict[tuple, tuple]" = _OrderedDict()
-_EQ_INDEX_CACHE_MAX = 32
+class _SnapshotFiles:
+    """One committed snapshot's immutable file views, cached together
+    under ``(meta_dir, snapshot_id)``: the live entry list (the segment
+    merge replayed once per snapshot, not once per plan), its lazily
+    built DATA-only (content == 0) subset — a pointer list into the
+    same entry dicts, so warm plan_files never re-filters O(files) —
+    and the per-column lookup indexes built over that subset (see
+    :meth:`LedgerTable._eq_index` / :meth:`LedgerTable._range_index`).
+    Lazy fields may be built twice by racing threads; both builds are
+    equal, so the last assignment is as good as the first."""
 
-# (table meta_dir, snapshot_id, column) -> sorted interval index over
-# the snapshot's data-file stats (see LedgerTable._range_index)
-_RANGE_INDEX_CACHE: "_OrderedDict[tuple, tuple]" = _OrderedDict()
-_RANGE_INDEX_CACHE_MAX = 32
+    __slots__ = ("live", "_data", "eq", "range")
+
+    def __init__(self, live: list[dict]):
+        self.live = live
+        self._data: list[dict] | None = None
+        self.eq: dict[str, tuple] = {}
+        self.range: dict[str, tuple] = {}
+
+    @property
+    def data(self) -> list[dict]:
+        if self._data is None:
+            self._data = [e for e in self.live if e.get("content", 0) == 0]
+        return self._data
+
+
+_SNAPSHOT_CACHE = LRU(8, 2_000_000, lambda s: len(s.live))
 
 
 def invalidate_live_files_cache(meta_dir: str, snapshot_id: int) -> None:
-    """Drop one cached live-file list (and its derived data-only
-    subset). Required when a snapshot JSON is DELETED and its id may be
-    re-assigned — an aborted transaction's staged snapshot is the one
-    such path (expired snapshots keep the current head, so their ids
-    never recycle)."""
-    key = (os.path.abspath(meta_dir), snapshot_id)
-    _LIVE_FILES_CACHE.pop(key, None)
-    _DATA_FILES_CACHE.pop(key, None)
-    for cache in (_EQ_INDEX_CACHE, _RANGE_INDEX_CACHE):
-        stale = [
-            k
-            for k in cache
-            if k[0] == os.path.abspath(meta_dir) and k[1] == snapshot_id
-        ]
-        for k in stale:
-            del cache[k]
+    """Drop one snapshot's cached file views. Required when a snapshot
+    JSON is DELETED and its id may be re-assigned — an aborted
+    transaction's staged snapshot is the one such path (expired
+    snapshots keep the current head, so their ids never recycle)."""
+    _SNAPSHOT_CACHE.pop((os.path.abspath(meta_dir), snapshot_id))
 
 
 class Snapshot:
@@ -1186,20 +1228,14 @@ class LedgerTable:
         keeps reading, so time travel across a mixed-format chain is
         exact."""
         path = os.path.abspath(self._segment_path(name))
-        hit = _SEGMENT_CACHE.get(path)
-        if hit is not None:
-            _SEGMENT_CACHE.move_to_end(path)
-            return hit
-        if name.endswith(".parquet"):
-            seg = _read_parquet_segment(path)
-        else:
+
+        def load() -> dict:
+            if name.endswith(".parquet"):
+                return _read_parquet_segment(path)
             with open(path) as fh:
-                seg = json.load(fh)
-        _SEGMENT_CACHE[path] = seg
-        _evict_lru(
-            _SEGMENT_CACHE, _SEGMENT_CACHE_MAX, _SEGMENT_CACHE_MAX_ENTRIES, _seg_weight
-        )
-        return seg
+                return json.load(fh)
+
+        return _SEGMENT_CACHE.get(path, load)
 
     def _segment_path_delta(self, name: str) -> tuple[list[str], list[str]]:
         """(added file paths, removed paths) of one segment — the
@@ -1209,7 +1245,7 @@ class LedgerTable:
         decode); JSON bodies and already-cached segments derive from
         the full form."""
         path = os.path.abspath(self._segment_path(name))
-        hit = _SEGMENT_CACHE.get(path)
+        hit = _SEGMENT_CACHE.peek(path)
         if hit is None and name.endswith(".parquet"):
             added: list[str] = []
             removed: list[str] = []
@@ -1534,9 +1570,7 @@ class LedgerTable:
                     os.remove(self._segment_path(d["path"]))
                 except OSError:
                     pass
-                _SEGMENT_CACHE.pop(
-                    os.path.abspath(self._segment_path(d["path"])), None
-                )
+                _SEGMENT_CACHE.pop(os.path.abspath(self._segment_path(d["path"])))
         return mlist
 
     def _commit(self, snap: Snapshot, expected_parent: object = "__FROM_SNAP__") -> None:
@@ -1674,9 +1708,7 @@ class LedgerTable:
                     os.remove(self._segment_path(name))
                 except OSError:
                     pass
-                _SEGMENT_CACHE.pop(
-                    os.path.abspath(self._segment_path(name)), None
-                )
+                _SEGMENT_CACHE.pop(os.path.abspath(self._segment_path(name)))
             raise
         return snap
 
@@ -2121,9 +2153,31 @@ class LedgerTable:
         covers a disjoint cluster-key range, so footer min/max stats —
         and therefore manifest column_stats — become selective on every
         column correlated with the cluster key. The z-order rewrite
-        (maintenance.rewrite_data_files_zorder) is the caller."""
+        (maintenance.rewrite_data_files_zorder) is the caller.
+
+        The file boundaries are quantiles of ``cluster_col`` (one
+        deterministic ``approxQuantile`` pass), not
+        ``repartitionByRange``'s sample, whose seed follows the
+        SparkContext's RDD id: the same input must give the same layout
+        in every session. Each row's file index is mapped to a label
+        that Spark's hash partitioner sends to exactly that partition."""
+        n_out = max(1, n_out)
+        key = F.col(cluster_col)
+        bounds = sorted(set(
+            df.stat.approxQuantile(cluster_col, [i / n_out for i in range(1, n_out)], 1e-4)
+        )) if n_out > 1 else []
+        fid = sum((F.when(key > b, 1).otherwise(0) for b in bounds), F.lit(0))
+        labels = dict(
+            self.spark.range(64 * n_out)
+            .groupBy(F.pmod(F.hash("id"), F.lit(n_out)).alias("p"))
+            .agg(F.min("id"))
+            .collect()
+        )
+        label = F.element_at(
+            F.array(*[F.lit(labels[i]).cast("long") for i in range(n_out)]), fid + 1
+        )
         staged = (
-            df.repartitionByRange(max(1, n_out), F.col(cluster_col))
+            df.repartition(n_out, label)
             .sortWithinPartitions(cluster_col)
             .drop(cluster_col)
         )
@@ -2694,80 +2748,47 @@ class LedgerTable:
     # ------------------------------------------------------------------
     # reads
     # ------------------------------------------------------------------
+    def _snapshot_files(self, sid: int) -> _SnapshotFiles:
+        """The committed snapshot's cached file views (see
+        :class:`_SnapshotFiles`): a snapshot's live set is immutable
+        once committed, so repeated planning against it replays the
+        segment merge once, not per query."""
+        return _SNAPSHOT_CACHE.get(
+            (os.path.abspath(self.meta_dir), sid),
+            lambda: _SnapshotFiles(self.snapshot(sid).files),
+        )
+
     def live_files(self, snapshot_id: int | None = None) -> list[dict]:
-        """The snapshot's live manifest entries, served from a small
-        process-wide LRU keyed by (table, snapshot id): a snapshot's
-        live set is immutable once committed, so repeated planning
-        against the same snapshot replays the segment merge once, not
-        per query. Treat the returned list as READ-ONLY."""
+        """The snapshot's live manifest entries (cached per snapshot).
+        Treat the returned list as READ-ONLY."""
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         if sid is None:
             return []
-        key = (os.path.abspath(self.meta_dir), sid)
-        hit = _LIVE_FILES_CACHE.get(key)
-        if hit is not None:
-            _LIVE_FILES_CACHE.move_to_end(key)
-            return hit
-        files = self.snapshot(sid).files
-        _LIVE_FILES_CACHE[key] = files
-        _evict_lru(
-            _LIVE_FILES_CACHE,
-            _LIVE_FILES_CACHE_MAX,
-            _LIVE_FILES_CACHE_MAX_ENTRIES,
-            len,
-        )
-        return files
+        return self._snapshot_files(sid).live
 
     def _data_files_for(self, snapshot_id: int | None) -> list[dict]:
-        """The snapshot's live DATA entries (content == 0), LRU-cached
-        as a pointer list into the live-file entries: warm plan_files
-        must not re-filter O(files) per call — at 10^6 files that scan
-        dominates the steady-state indexed plan. Treat as READ-ONLY."""
+        """The snapshot's live DATA entries (content == 0), cached as a
+        pointer list into the live-file entries. Treat as READ-ONLY."""
         if snapshot_id is None:
             return []
-        key = (os.path.abspath(self.meta_dir), snapshot_id)
-        hit = _DATA_FILES_CACHE.get(key)
-        if hit is not None:
-            _DATA_FILES_CACHE.move_to_end(key)
-            return hit
-        data = [
-            e for e in self.live_files(snapshot_id) if e.get("content", 0) == 0
-        ]
-        _DATA_FILES_CACHE[key] = data
-        _evict_lru(
-            _DATA_FILES_CACHE,
-            _DATA_FILES_CACHE_MAX,
-            _DATA_FILES_CACHE_MAX_ENTRIES,
-            len,
-        )
-        return data
+        return self._snapshot_files(snapshot_id).data
 
-    def _eq_index(
-        self, snapshot_id: int | None, files: list[dict], col: str
-    ) -> tuple[dict, list, type | None]:
+    def _eq_index(self, sid: int, col: str) -> tuple[dict, list, type | None]:
         """(constant-value -> entries, varying entries, stats type) for
-        one column of one snapshot's data files — built once per
-        (table, snapshot, column) and LRU-cached (immutable per
-        snapshot id, like the live-file list). ``vtype`` is None when
-        no file carries usable stats (index not applicable). Entries
-        whose min != max — or with no stats — land in ``varying`` and
-        are always candidates, so narrowing drops only files the
-        residual pruner would provably drop anyway.
-
-        ``snapshot_id`` must be the RESOLVED id the caller planned
-        ``files`` from (plan_files resolves the head exactly once) —
-        re-resolving here could cache an index built from a stale file
-        list under a newer snapshot's key."""
-        sid = snapshot_id
-        key = (os.path.abspath(self.meta_dir), sid, col)
-        hit = _EQ_INDEX_CACHE.get(key)
+        one column of snapshot ``sid``'s data files — built once per
+        (table, snapshot, column) and cached in the snapshot's entry.
+        ``vtype`` is None when no file carries usable stats (index not
+        applicable). Entries whose min != max — or with no stats — land
+        in ``varying`` and are always candidates, so narrowing drops
+        only files the residual pruner would provably drop anyway."""
+        snap = self._snapshot_files(sid)
+        hit = snap.eq.get(col)
         if hit is not None:
-            _EQ_INDEX_CACHE.move_to_end(key)
             return hit
         const: dict = {}
         varying: list[dict] = []
         vtype: type | None = None
-        for e in files:
+        for e in snap.data:
             rng = (e.get("column_stats") or {}).get(col)
             if (
                 rng is None
@@ -2780,10 +2801,7 @@ class LedgerTable:
             if vtype is None:
                 vtype = type(rng[0])
             const.setdefault(rng[0], []).append(e)
-        out = (const, varying, vtype)
-        _EQ_INDEX_CACHE[key] = out
-        while len(_EQ_INDEX_CACHE) > _EQ_INDEX_CACHE_MAX:
-            _EQ_INDEX_CACHE.popitem(last=False)
+        out = snap.eq[col] = (const, varying, vtype)
         return out
 
     @staticmethod
@@ -2886,9 +2904,8 @@ class LedgerTable:
         import pyarrow.compute as pc
 
         path = os.path.abspath(self._segment_path(name))
-        hit = _SEGMENT_CACHE.get(path)
+        hit = _SEGMENT_CACHE.peek(path)
         if hit is not None:
-            _SEGMENT_CACHE.move_to_end(path)
             return (
                 [
                     e
@@ -2978,13 +2995,11 @@ class LedgerTable:
         )
         if sid is None:
             return [], []
-        key = (os.path.abspath(self.meta_dir), sid)
-        hit = _LIVE_FILES_CACHE.get(key)
+        hit = _SNAPSHOT_CACHE.peek((os.path.abspath(self.meta_dir), sid))
         if hit is not None:
-            _LIVE_FILES_CACHE.move_to_end(key)
             return (
-                [e for e in hit if e.get("content", 0) == 1],
-                [e for e in hit if e.get("content", 0) == 2],
+                [e for e in hit.live if e.get("content", 0) == 1],
+                [e for e in hit.live if e.get("content", 0) == 2],
             )
         snap = self.snapshot(sid)
         if not snap.is_segmented:
@@ -3037,9 +3052,8 @@ class LedgerTable:
         import pyarrow.compute as pc
 
         path = os.path.abspath(self._segment_path(name))
-        hit = _SEGMENT_CACHE.get(path)
+        hit = _SEGMENT_CACHE.peek(path)
         if hit is not None:
-            _SEGMENT_CACHE.move_to_end(path)
             return (
                 [
                     e
@@ -3076,7 +3090,7 @@ class LedgerTable:
         return added, removed
 
     def _range_index(
-        self, snapshot_id: int | None, files: list[dict], col: str
+        self, sid: int, col: str
     ) -> tuple[list, list, list, list, list, type | None]:
         """Sorted interval index over one column of one snapshot's data
         files: (lo_keys, by_lo_entries, hi_keys, by_hi_entries,
@@ -3084,22 +3098,20 @@ class LedgerTable:
         by their stats MAX, so a range predicate selects a contiguous
         prefix/suffix by binary search: O(log files + selected) per
         plan instead of the O(files) residual stats scan. Built once
-        per (table, snapshot, column) and LRU-cached (immutable per
-        snapshot id). Entries with no usable stats — or whose stats
-        type differs from the first one seen — land in ``nostats`` and
-        are ALWAYS candidates, mirroring :meth:`_eq_index`'s keep rule,
-        so narrowing drops only files the residual pruner would
-        provably drop anyway. ``snapshot_id`` must be the resolved id
-        the caller planned ``files`` from (see :meth:`_eq_index`)."""
-        key = (os.path.abspath(self.meta_dir), snapshot_id, col)
-        hit = _RANGE_INDEX_CACHE.get(key)
+        per (table, snapshot, column) and cached in the snapshot's
+        entry. Entries with no usable stats — or whose stats type
+        differs from the first one seen — land in ``nostats`` and are
+        ALWAYS candidates, mirroring :meth:`_eq_index`'s keep rule, so
+        narrowing drops only files the residual pruner would provably
+        drop anyway."""
+        snap = self._snapshot_files(sid)
+        hit = snap.range.get(col)
         if hit is not None:
-            _RANGE_INDEX_CACHE.move_to_end(key)
             return hit
         spans: list[tuple] = []
         nostats: list[dict] = []
         vtype: type | None = None
-        for e in files:
+        for e in snap.data:
             rng = (e.get("column_stats") or {}).get(col)
             if (
                 rng is None
@@ -3115,7 +3127,7 @@ class LedgerTable:
             spans.append((rng[0], rng[1], e))
         by_lo = sorted(spans, key=lambda t: t[0])
         by_hi = sorted(spans, key=lambda t: t[1])
-        out = (
+        out = snap.range[col] = (
             [t[0] for t in by_lo],
             [t[2] for t in by_lo],
             [t[1] for t in by_hi],
@@ -3123,9 +3135,6 @@ class LedgerTable:
             nostats,
             vtype,
         )
-        _RANGE_INDEX_CACHE[key] = out
-        while len(_RANGE_INDEX_CACHE) > _RANGE_INDEX_CACHE_MAX:
-            _RANGE_INDEX_CACHE.popitem(last=False)
         return out
 
     def plan_files(
@@ -3146,11 +3155,9 @@ class LedgerTable:
 
         Plans DATA files only (content = 0) — position-delete files are
         not scannable data; :meth:`read` applies them separately."""
-        # Resolve the head ONCE: live_files and the lookup indexes must
-        # key off the same snapshot id, or a commit landing between two
-        # independent resolutions caches an index built from the OLD
-        # file list under the NEW id (silently dropping that commit's
-        # files from `col = v` plans until the LRU entry evicts).
+        # Resolve the head ONCE: the file list and the lookup indexes
+        # narrowing it must describe the same snapshot even when a
+        # commit lands mid-plan.
         sid = (
             snapshot_id
             if snapshot_id is not None
@@ -3167,8 +3174,7 @@ class LedgerTable:
         # full list + indexes as before.
         full_list = True
         if predicates and sid is not None:
-            key = (os.path.abspath(self.meta_dir), sid)
-            if key not in _LIVE_FILES_CACHE:
+            if _SNAPSHOT_CACHE.peek((os.path.abspath(self.meta_dir), sid)) is None:
                 pruned = self._segment_pruned_entries(sid, predicates)
                 if pruned is not None:
                     files = [e for e in pruned if e.get("content", 0) == 0]
@@ -3203,14 +3209,14 @@ class LedgerTable:
 
         for c, op, v in predicates if full_list else ():
             if op == "=":
-                const, varying, vtype = self._eq_index(sid, files, c)
+                const, varying, vtype = self._eq_index(sid, c)
                 if vtype is None or not _probe_ok(v, vtype):
                     continue
                 files = const.get(v, []) + varying
                 break
             if op in ("<", "<=", ">", ">="):
                 lo_keys, by_lo, hi_keys, by_hi, nostats, vtype = (
-                    self._range_index(sid, files, c)
+                    self._range_index(sid, c)
                 )
                 if vtype is None or not _probe_ok(v, vtype):
                     continue

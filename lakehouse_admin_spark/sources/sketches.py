@@ -48,7 +48,6 @@ import fcntl
 import json
 import os
 import struct
-from collections import OrderedDict
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -59,7 +58,7 @@ from pyspark.sql.types import (
     StringType,
 )
 
-from lakehouse_admin_spark.sources.ledger import file_uri_to_path
+from lakehouse_admin_spark.sources.ledger import LRU, file_uri_to_path
 
 # default Bloom geometry: m=4096 bits, k=5 hashes → ~1% false-positive
 # rate at ~420 distinct values/file; callers size m to their file NDV
@@ -68,18 +67,16 @@ BLOOM_K = 5
 
 # sidecar JSON cache, bounded to the LATEST sidecar per table (keyed by
 # the table's metadata dir; a new sketch pass REPLACES the table's
-# entry) AND to _CACHE_MAX tables total (LRU) — a long-lived server
-# planning over many tables must not accumulate one sidecar per table
-# forever
-_SIDECAR_CACHE: OrderedDict[str, tuple[str, float, dict]] = OrderedDict()
-_CACHE_MAX = 64
+# entry) AND to 64 tables total — a long-lived server planning over
+# many tables must not accumulate one sidecar per table forever.
+# Values: (sidecar path, mtime, sidecar).
+_SIDECAR_CACHE = LRU(64)
 
 # memoized probe positions keyed by (type, value, m, k) — planning for
 # the same key never recomputes, and never re-launches the Spark-job
 # fallback path. LRU-bounded: a scan workload probing millions of
 # distinct keys must not grow driver memory without bound.
-_POSITIONS_CACHE: OrderedDict[tuple, list[int]] = OrderedDict()
-_POSITIONS_MAX = 4096
+_POSITIONS_CACHE = LRU(4096)
 _FALLBACK_LOGGED: set[str] = set()  # key types logged once on fallback
 
 
@@ -193,20 +190,20 @@ def load_sketches(tbl) -> tuple[dict, dict] | None:
         mtime = os.path.getmtime(path)
     except OSError:
         return None
-    cached = _SIDECAR_CACHE.get(tbl.meta_dir)
-    if cached is not None and cached[0] == path and cached[1] == mtime:
-        return desc, cached[2]
-    with open(path) as fh:
-        sidecar = json.load(fh)
-    # bits → sets for O(1) membership at probe time
-    for fstats in sidecar.values():
-        for cstats in fstats.values():
-            cstats["bits"] = set(cstats["bits"])
-    _SIDECAR_CACHE[tbl.meta_dir] = (path, mtime, sidecar)
-    _SIDECAR_CACHE.move_to_end(tbl.meta_dir)
-    while len(_SIDECAR_CACHE) > _CACHE_MAX:
-        _SIDECAR_CACHE.popitem(last=False)
-    return desc, sidecar
+
+    def load() -> tuple[str, float, dict]:
+        with open(path) as fh:
+            sidecar = json.load(fh)
+        # bits → sets for O(1) membership at probe time
+        for fstats in sidecar.values():
+            for cstats in fstats.values():
+                cstats["bits"] = set(cstats["bits"])
+        return path, mtime, sidecar
+
+    cached = _SIDECAR_CACHE.peek(tbl.meta_dir)
+    if cached is not None and cached[:2] != (path, mtime):
+        _SIDECAR_CACHE.pop(tbl.meta_dir)  # a newer sketch pass replaces it
+    return desc, _SIDECAR_CACHE.get(tbl.meta_dir, load)[2]
 
 
 # ---------------------------------------------------------------------------
@@ -387,43 +384,40 @@ def key_positions(tbl, col: str, value, m: int, k: int) -> list[int]:
     DISTINCT (type, value, m, k), memoized."""
     key_type = {f.name: f.dataType for f in tbl.unified_schema().fields}[col]
     ck = (key_type.simpleString(), value, m, k)
-    pos = _POSITIONS_CACHE.get(ck)
-    if pos is not None:
-        _POSITIONS_CACHE.move_to_end(ck)
-        return pos
-    try:
-        tz_name = tbl.spark.conf.get("spark.sql.session.timeZone")
-    except Exception:
-        tz_name = None
-    pos = _driver_positions(key_type, value, m, k, tz_name)
-    if pos is None:
-        ts = key_type.simpleString()
-        if ts not in _FALLBACK_LOGGED:  # log ONCE per type: the probe
-            # leaves the metadata-only planning path (1-row Spark job)
-            _FALLBACK_LOGGED.add(ts)
-            import logging
 
-            logging.getLogger(__name__).warning(
-                "sketch probe for %s key type %s has no driver-side "
-                "Murmur3 — falling back to a memoized 1-row Spark job",
-                col,
-                ts,
+    def compute() -> list[int]:
+        try:
+            tz_name = tbl.spark.conf.get("spark.sql.session.timeZone")
+        except Exception:
+            tz_name = None
+        pos = _driver_positions(key_type, value, m, k, tz_name)
+        if pos is None:
+            ts = key_type.simpleString()
+            if ts not in _FALLBACK_LOGGED:  # log ONCE per type: the probe
+                # leaves the metadata-only planning path (1-row Spark job)
+                _FALLBACK_LOGGED.add(ts)
+                import logging
+
+                logging.getLogger(__name__).warning(
+                    "sketch probe for %s key type %s has no driver-side "
+                    "Murmur3 — falling back to a memoized 1-row Spark job",
+                    col,
+                    ts,
+                )
+            lit = F.lit(value).cast(key_type)
+            row = (
+                tbl.spark.range(1)
+                .select(
+                    F.array(
+                        *[F.pmod(F.hash(lit, F.lit(i)), F.lit(m)) for i in range(k)]
+                    ).alias("p")
+                )
+                .collect()
             )
-        lit = F.lit(value).cast(key_type)
-        row = (
-            tbl.spark.range(1)
-            .select(
-                F.array(
-                    *[F.pmod(F.hash(lit, F.lit(i)), F.lit(m)) for i in range(k)]
-                ).alias("p")
-            )
-            .collect()
-        )
-        pos = [int(x) for x in row[0]["p"]]
-    _POSITIONS_CACHE[ck] = pos
-    while len(_POSITIONS_CACHE) > _POSITIONS_MAX:
-        _POSITIONS_CACHE.popitem(last=False)
-    return pos
+            pos = [int(x) for x in row[0]["p"]]
+        return pos
+
+    return _POSITIONS_CACHE.get(ck, compute)
 
 
 def prunable_by_sketch(

@@ -156,6 +156,31 @@ def test_refresh_single_table_overwrites_only_its_slice(env):
     assert before == after  # idempotent refresh, no duplication
 
 
+def test_metadata_cache_sets_no_session_conf(env, spark, tmp_path):
+    """Constructing a MetadataCache leaves the shared session's overwrite
+    semantics alone; a refresh under a static session still replaces
+    only its own table's slice (dynamic overwrite is an option of that
+    one write)."""
+    catalog, _ = env
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        cache = MetadataCache(spark, str(tmp_path / "cache"))
+        assert spark.conf.get(key) == "static"
+        for t in ("events_ledger", "lineitem_ledger"):
+            cache.refresh_table(catalog, "main", t)
+        n = {e: cache.read(e).count() for e in ("partitions", "snapshots")}
+        cache.refresh_table(catalog, "main", "events_ledger")
+        for entity in ("partitions", "snapshots"):
+            assert cache.read(entity).count() == n[entity], entity
+            tables = {r["table"] for r in cache.read(entity).select("table").distinct().collect()}
+            assert tables == {"events_ledger", "lineitem_ledger"}, entity
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_stale_table_cleanup(env, spark):
     catalog, cache = env
     # simulate a dropped table: live list without nested_ledger

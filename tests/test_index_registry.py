@@ -172,3 +172,63 @@ def test_application_id_only_in_the_registry():
                     if "sparkContext.applicationId" in fh.read():
                         offenders.append(os.path.relpath(path, PKG))
     assert offenders == []
+
+
+def _tier(tmp_path, parent: str, target: str) -> str:
+    """A tier path ``<tmp>/<parent>/sf`` linked to ``target``: tiers
+    made this way share the basename ``sf``."""
+    d = tmp_path / parent
+    d.mkdir()
+    os.symlink(target, d / "sf")
+    return str(d / "sf")
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(
+        tuple(round(v, 2) if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def test_persisted_bases_are_keyed_by_the_full_tier_path(spark, tmp_path):
+    """Two tiers sharing a basename each get their own persisted LSH
+    base (incremental_near_dup) and their own bucketed fact copies
+    (revenue_by_nation): the second tier answers exactly like the same
+    data under a path of its own."""
+    from lakehouse_admin_spark.operators import dedup, relational
+    from tests.conftest import SF_CORRECTNESS
+
+    a = _tier(tmp_path, "a", SF_SMOKE)
+    b = _tier(tmp_path, "b", SF_CORRECTNESS)
+    try:
+        for q in (dedup.incremental_near_dup, relational.revenue_by_nation):
+            q(spark, a).collect()
+            assert _rows(q(spark, b)) == _rows(q(spark, SF_CORRECTNESS)), q.__name__
+    finally:
+        ir.invalidate(a)
+        ir.invalidate(b)
+
+
+def test_invalidation_removes_persisted_bases(spark, tmp_path):
+    """The persisted LSH and IVF bases are registry entries: invalidating
+    their tier drops them from entries() and removes their directories,
+    and the next call rebuilds."""
+    from urllib.parse import urlparse
+
+    from lakehouse_admin_spark.operators import dedup, similarity
+
+    tier = _tier(tmp_path, "inv", SF_SMOKE)
+    norm = os.path.abspath(tier)
+    lsh_file = urlparse(dedup._persisted_bucket_index(spark, tier).inputFiles()[0]).path
+    cells, _ = similarity._persisted_ivf_index(spark, tier)
+    dirs = [os.path.dirname(os.path.dirname(lsh_file)), os.path.dirname(cells)]
+    assert all(os.path.isdir(d) for d in dirs)
+    try:
+        assert {"lsh_base", "ivf_base"} <= {e["name"] for e in ir.entries() if e["tier"] == norm}
+    finally:
+        ir.invalidate(tier)
+    assert not [e for e in ir.entries() if e["tier"] == norm]
+    assert not [d for d in dirs if os.path.exists(d)]
+    rebuilt, _ = similarity._persisted_ivf_index(spark, tier)
+    assert os.path.isdir(os.path.dirname(rebuilt))
+    ir.invalidate(tier)

@@ -24,9 +24,17 @@ from lakehouse_admin_spark.sources.fixtures import (
     build_lineitem_ledger,
     build_nested_ledger,
 )
+from lakehouse_admin_spark.sources import ledger as ledger_mod
 from lakehouse_admin_spark.sources.ledger import LedgerCatalog, PartitionField
 from lakehouse_admin_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
+
+
+def _snapshot_entry(tbl):
+    """The ledger's cached file views of ``tbl``'s current snapshot."""
+    return ledger_mod._SNAPSHOT_CACHE.peek(
+        (os.path.abspath(tbl.meta_dir), tbl.current_snapshot_id())
+    )
 
 
 @pytest.fixture(scope="module")
@@ -2132,7 +2140,6 @@ def test_append_commit_never_reads_large_segments(spark, catalog, monkeypatch):
     segment must not READ it (merge decisions use descriptor weights;
     the segment bodies are only opened when actually merged) — so
     commit latency and lock-hold stay flat in table size."""
-    from lakehouse_admin_spark.sources import ledger as ledger_mod
 
     df = spark.range(64).selectExpr("id", "id AS v")
     tbl = catalog.create_table("main", "seg_read_tbl", df.schema, [])
@@ -2243,7 +2250,6 @@ def test_eq_index_plan_matches_full_scan(spark, catalog):
     """The equality-lookup plan index must select exactly what the
     O(files) stats scan selects — including the keep-on-type-mismatch
     rule — while grouping constant-stat files once per snapshot."""
-    from lakehouse_admin_spark.sources import ledger as ledger_mod
 
     schema = spark.range(1).selectExpr(
         "id AS k", "CAST(id AS STRING) AS day", "CAST(id AS DOUBLE) AS v"
@@ -2278,7 +2284,7 @@ def test_eq_index_plan_matches_full_scan(spark, catalog):
     # caches the index — the COLD first plan goes through manifest
     # skipping instead and bypasses the full-list-keyed indexes
     assert len(tbl.plan_files([("k", "=", 3)])) == 2
-    assert any(k[2] == "k" for k in ledger_mod._EQ_INDEX_CACHE)
+    assert "k" in _snapshot_entry(tbl).eq
     # type mismatch (date object vs ISO-string stats) must KEEP files:
     # the probe falls back to the residual pruner's TypeError branch
     import datetime as _dt
@@ -2377,7 +2383,6 @@ def test_plan_files_resolves_head_exactly_once(spark, catalog, monkeypatch):
     """plan_files must resolve the current snapshot id ONCE and key the
     live-file list and the equality index off that same id — a second
     resolution racing a commit caches a stale index under the new id."""
-    from lakehouse_admin_spark.sources import ledger as ledger_mod
 
     df = spark.range(20).selectExpr("id % 4 AS k", "id AS v")
     tbl = catalog.create_table("main", "resolve_once_tbl", df.schema, [])
@@ -2545,7 +2550,6 @@ def test_range_index_plan_matches_full_scan(spark, catalog):
     must select exactly what the O(files) residual stats scan selects
     for every op in < <= > >= and for between (two predicates) —
     including the keep-on-type-mismatch rule."""
-    from lakehouse_admin_spark.sources import ledger as ledger_mod
 
     schema = spark.range(1).selectExpr(
         "id AS k", "CAST(id AS STRING) AS day", "CAST(id AS DOUBLE) AS v"
@@ -2605,7 +2609,7 @@ def test_range_index_plan_matches_full_scan(spark, catalog):
         for r in tbl.read().filter((F.col("k") >= 23) & (F.col("k") <= 41)).collect()
     )
     # index built and cached per (snapshot, column)
-    assert any(k[2] == "k" for k in ledger_mod._RANGE_INDEX_CACHE)
+    assert "k" in _snapshot_entry(tbl).range
     # type mismatch (date object vs ISO-string stats) keeps ALL files
     import datetime as _dt
 
@@ -2625,7 +2629,6 @@ def test_ledger_range_scan_prunes_files(spark):
     import datetime as _dt
 
     from lakehouse_admin_spark.operators.ledger_ops import _events_tbl
-    from lakehouse_admin_spark.sources import ledger as ledger_mod
 
     tbl = _events_tbl(spark, SF_SMOKE)
     live = [e for e in tbl.live_files() if e.get("content", 0) == 0]
@@ -2639,7 +2642,7 @@ def test_ledger_range_scan_prunes_files(spark):
         e["file_path"] for e in expected
     }
     assert len(planned) < len(live)
-    assert any(k[2] == "ts" for k in ledger_mod._RANGE_INDEX_CACHE)
+    assert "ts" in _snapshot_entry(tbl).range
 
 
 def test_expire_racing_commits_keeps_ancestry_intact(spark, catalog):

@@ -87,7 +87,7 @@ def test_head_materialization_does_no_segment_json_load(spark, catalog, monkeypa
 
     monkeypatch.setattr(ledger_mod.json, "load", spy)
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
     head = tbl.snapshot(tbl.current_snapshot_id())
     files = head.files
     assert len(files) >= 6
@@ -111,7 +111,7 @@ def test_mixed_json_parquet_chain_time_travel_exact(spark, catalog, monkeypatch)
     assert all(s.own_segment["path"].endswith(".parquet") for s in pq_snaps)
     # head merged across formats (merge read .json bodies, wrote .parquet)
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
     assert tbl.read().count() == 30
     # time travel to each historical snapshot is exact
     for i, s in enumerate(json_snaps + pq_snaps):
@@ -192,7 +192,7 @@ def test_legacy_fold_parent_base_segment(spark, catalog):
     fold = snap.fold()
     tbl._write_snapshot(fold)
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
     assert tbl.snapshot(snap.snapshot_id).is_fold
 
     # (a) first segmented commit folds the parent into a parquet base
@@ -215,7 +215,7 @@ def test_legacy_fold_parent_base_segment(spark, catalog):
     with open(tbl2._segment_path(json_base), "w") as fh:
         _json.dump({"added": fold2.files, "removed": []}, fh)
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
     tbl2.append(spark.range(100, 105).selectExpr("id", "id AS v").coalesce(1))
     head2 = tbl2.snapshot(tbl2.current_snapshot_id())
     paths = [d["path"] for d in head2.manifest_list]
@@ -297,7 +297,7 @@ def test_metadata_caches_are_weight_bounded(spark, catalog, monkeypatch):
     inventories would be a multi-GB driver heap at 10 TB-class tables.
     A single over-weight item may remain alone (its caller holds it),
     but evicts as soon as anything newer lands."""
-    monkeypatch.setattr(ledger_mod, "_SEGMENT_CACHE_MAX_ENTRIES", 100)
+    monkeypatch.setattr(ledger_mod._SEGMENT_CACHE, "max_weight", 100)
     df = spark.range(1).selectExpr("id", "id AS v")
     tbl = catalog.create_table("main", "pseg_weight", df.schema, [])
 
@@ -319,10 +319,59 @@ def test_metadata_caches_are_weight_bounded(spark, catalog, monkeypatch):
     tbl._read_segment("mseg-3-dsmall.parquet")  # 90 <= 100 -> both stay
     assert len(ledger_mod._SEGMENT_CACHE) == 2
     # an over-weight single item is admitted (caller needs it now)
-    monkeypatch.setattr(ledger_mod, "_SEGMENT_CACHE_MAX_ENTRIES", 5)
+    monkeypatch.setattr(ledger_mod._SEGMENT_CACHE, "max_weight", 5)
     ledger_mod._SEGMENT_CACHE.clear()
     seg = tbl._read_segment("mseg-1-dbig.parquet")
     assert len(seg["added"]) == 80 and len(ledger_mod._SEGMENT_CACHE) == 1
+
+
+def test_metadata_caches_are_thread_safe(spark, catalog):
+    """The admin server reads ledger metadata from many threads at once.
+    Six threads asking for random snapshots of a table with more
+    snapshots than the live-list bound keep evicting each other's
+    entries; every call must return exactly the serial answer. The
+    lowered switch interval makes the interpreter interleave threads
+    inside cache bookkeeping (at the default 5 ms the race rarely
+    shows)."""
+    import random
+    import sys
+    import threading
+    import time
+
+    df = spark.range(2).selectExpr("id", "id AS v")
+    tbl = catalog.create_table("main", "pseg_threads", df.schema, [])
+    for _ in range(20):  # more snapshots than the live-list bound (8)
+        tbl.append(df)
+    sids = [s.snapshot_id for s in tbl.snapshots()]
+    serial = {sid: [e["file_path"] for e in tbl.live_files(sid)] for sid in sids}
+
+    errors: list[BaseException] = []
+    calls = [0] * 6
+    stop = time.monotonic() + 3
+
+    def worker(i):
+        rng = random.Random(i)
+        try:
+            while time.monotonic() < stop:
+                sid = rng.choice(sids)
+                got = [e["file_path"] for e in tbl.live_files(sid)]
+                assert got == serial[sid], sid
+                calls[i] += 1
+        except BaseException as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors, f"{len(errors)} failures, first: {errors[0]!r}"
+    assert sum(calls) > 1000
 
 
 def test_manifest_skipping_cold_plan(spark, catalog, monkeypatch):
@@ -360,9 +409,7 @@ def test_manifest_skipping_cold_plan(spark, catalog, monkeypatch):
 
     monkeypatch.setattr(ledger_mod.LedgerTable, "_read_segment", spy)
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
-    ledger_mod._EQ_INDEX_CACHE.clear()
-    ledger_mod._RANGE_INDEX_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
     cold = {e["file_path"] for e in tbl.plan_files(preds)}
     assert cold == warm
     n_total = len(tbl.snapshot(tbl.current_snapshot_id()).manifest_list)
@@ -397,7 +444,7 @@ def test_manifest_skipping_respects_tombstones(spark, catalog):
     assert victim
     tbl.commit_rewrite(victim, [], operation="delete")
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
     cold = tbl.plan_files([("k", "<", 10)])
     assert victim[0] not in {e["file_path"] for e in cold}
     rows = [r["k"] for r in tbl.read(predicates=[("k", "<", 10)]).collect()] if cold else []
@@ -416,7 +463,7 @@ def test_gc_reference_sweeps_never_decode_entries(spark, catalog, monkeypatch):
     for fn in _segments(tbl):
         os.utime(os.path.join(tbl.meta_dir, fn), (1, 1))
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
 
     def boom(path):
         raise AssertionError(f"entry-document decode during GC: {path}")
@@ -496,9 +543,7 @@ def test_append_only_read_skips_delete_materialization(spark, catalog, monkeypat
 
     monkeypatch.setattr(ledger_mod.LedgerTable, "_read_segment", spy)
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
-    ledger_mod._EQ_INDEX_CACHE.clear()
-    ledger_mod._RANGE_INDEX_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
     n = tbl.read(predicates=[("k", ">=", 300)]).count()
     assert n == 30
     assert base_seg not in reads, (
@@ -522,7 +567,7 @@ def test_delete_entries_exact_on_mor_table(spark, catalog):
         )
     tbl.delete_where(F.col("k") % 7 == 0)
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
     pos, eq = tbl._delete_entries(None)
     live = tbl.live_files()
     assert {e["file_path"] for e in pos} == {
@@ -576,9 +621,7 @@ def test_cold_plan_respects_readd_override(spark, catalog):
     warm = {e["file_path"] for e in tbl.plan_files([("k", "<", 10)])}
     assert victim["file_path"] not in warm
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
-    ledger_mod._EQ_INDEX_CACHE.clear()
-    ledger_mod._RANGE_INDEX_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
     cold = {e["file_path"] for e in tbl.plan_files([("k", "<", 10)])}
     assert cold == warm
 
@@ -610,9 +653,7 @@ def test_metadata_plane_heap_bound(tmp_path):
 
     def peak_of(fn):
         ledger_mod._SEGMENT_CACHE.clear()
-        ledger_mod._LIVE_FILES_CACHE.clear()
-        ledger_mod._EQ_INDEX_CACHE.clear()
-        ledger_mod._RANGE_INDEX_CACHE.clear()
+        ledger_mod._SNAPSHOT_CACHE.clear()
         tracemalloc.start()
         out = fn()
         _, peak = tracemalloc.get_traced_memory()
@@ -659,7 +700,7 @@ def test_integrity_and_snapshot_cache_never_decode_entries(
     for i in range(4):
         tbl.append(spark.range(i * 5, i * 5 + 5).selectExpr("id", "id AS v"))
     ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._LIVE_FILES_CACHE.clear()
+    ledger_mod._SNAPSHOT_CACHE.clear()
 
     def boom(path):
         raise AssertionError(f"entry-document decode on a stat-free path: {path}")

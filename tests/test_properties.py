@@ -350,9 +350,7 @@ def test_cold_plan_and_delete_lookup_equal_full_materialization(chain_preds):
         want_eq = {e["file_path"] for e in live if e.get("content", 0) == 2}
 
         ledger_mod._SEGMENT_CACHE.clear()
-        ledger_mod._LIVE_FILES_CACHE.clear()
-        ledger_mod._EQ_INDEX_CACHE.clear()
-        ledger_mod._RANGE_INDEX_CACHE.clear()
+        ledger_mod._SNAPSHOT_CACHE.clear()
         cold = tbl.plan_files(preds)
         assert {e["file_path"] for e in cold} == want_plan
         # the COLD plan must also carry the SUPERSEDING entry version
@@ -363,7 +361,7 @@ def test_cold_plan_and_delete_lookup_equal_full_materialization(chain_preds):
             assert e["sequence_number"] == latest[e["file_path"]]
 
         ledger_mod._SEGMENT_CACHE.clear()
-        ledger_mod._LIVE_FILES_CACHE.clear()
+        ledger_mod._SNAPSHOT_CACHE.clear()
         pos, eq = tbl._delete_entries(None)
         assert {e["file_path"] for e in pos} == want_pos
         assert {e["file_path"] for e in eq} == want_eq

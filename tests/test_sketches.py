@@ -169,7 +169,7 @@ def test_key_positions_memoized_no_spark_job(spark, striped_tbl):
     from lakehouse_admin_spark.sources import sketches
 
     p1 = sketches.key_positions(striped_tbl, "k", 42, 4096, 5)
-    assert ("bigint", 42, 4096, 5) in sketches._POSITIONS_CACHE
+    assert sketches._POSITIONS_CACHE.peek(("bigint", 42, 4096, 5)) == p1
     p2 = sketches.key_positions(striped_tbl, "k", 42, 4096, 5)
     assert p1 == p2 and len(p1) == 5
 
@@ -180,12 +180,12 @@ def test_sidecar_cache_bounded_per_table(spark, striped_tbl):
     from lakehouse_admin_spark.sources import sketches
 
     desc1, _ = load_sketches(striped_tbl)
-    first_path = sketches._SIDECAR_CACHE[striped_tbl.meta_dir][0]
+    first_path = sketches._SIDECAR_CACHE.peek(striped_tbl.meta_dir)[0]
     assert desc1["file"] in first_path
     compute_file_sketches(striped_tbl, ["k"])
     desc2, _ = load_sketches(striped_tbl)
     # one entry per table (dict keyed by meta_dir), now the LATEST file
-    latest_path = sketches._SIDECAR_CACHE[striped_tbl.meta_dir][0]
+    latest_path = sketches._SIDECAR_CACHE.peek(striped_tbl.meta_dir)[0]
     assert desc2["file"] in latest_path
 
 

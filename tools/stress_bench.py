@@ -347,10 +347,7 @@ def run_metadata(root: str, n_files: int = 1_000_000, batch: int = 10_000) -> No
 
     def clear_caches():
         ledger_mod._SEGMENT_CACHE.clear()
-        ledger_mod._LIVE_FILES_CACHE.clear()
-        ledger_mod._DATA_FILES_CACHE.clear()
-        ledger_mod._EQ_INDEX_CACHE.clear()
-        ledger_mod._RANGE_INDEX_CACHE.clear()
+        ledger_mod._SNAPSHOT_CACHE.clear()
 
     n_segments = len(tbl.snapshot(tbl.current_snapshot_id()).manifest_list)
 
