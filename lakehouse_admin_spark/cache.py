@@ -1,35 +1,145 @@
-"""Metadata cache: Spark-managed tables replacing the reference's MySQL
-cache (reference: backend/internal/service_refresh.go, migrations
-20251120183135_add_tables.sql).
+"""Metadata cache: driver-held Arrow tables replacing the reference's
+MySQL cache (reference: backend/internal/service_refresh.go, migrations
+20251120183135_add_tables.sql), written through to a Hive-partitioned
+parquet layout.
 
-The reference refreshes per-table with DELETE + chunked INSERTs of 100
-rows (service_refresh.go:121-199); here each refresh is one dynamic
-partition overwrite (the cache parquet is partitioned by
-(database, table), so refreshing one table replaces exactly its
-partition — M5). Stale-table cleanup (J1) is the cached-minus-live
-anti-join instead of `funk.Difference` over Go slices
-(service_refresh.go:82-89,234-239).
+Each entity (``partitions``, ``snapshots``) lives on disk as
+``<cache_dir>/<entity>/database=<db>/table=<t>/*.parquet`` — the layout
+Spark's partitioned writer produces, so caches written by earlier
+versions load unchanged and Spark can still read the directory — and on
+the driver as one Arrow table per cached (database, table) slice. A
+refresh (M5) writes one table's slice to a temporary directory and
+renames it into place, then swaps the held slice (the reference's
+DELETE + chunked INSERTs of service_refresh.go:121-199 as one directory
+swap). A slice is reloaded from disk only when its directory's listing
+fingerprint changed, so a second cache over the same directory, or
+another process, sees every refresh.
 
-The cache exists for the same reason as the reference's: summaries over
-many tables become ONE aggregation over the cached partitions table
-instead of N metadata round-trips (the reference's N+1 pattern,
-service_metadata.go:36-66 — SURVEY §3.1)."""
+The cache exists for the same reason as the reference's: browse reads
+answer from a small local copy instead of N metadata round-trips (the
+reference's N+1 pattern, service_metadata.go:36-66 — SURVEY §3.1). Here
+the summaries, cached listings and stale-table cleanup (J1, the
+``funk.Difference`` of service_refresh.go:82-89,234-239) fold the held
+slices on the driver and hand Spark only the answer, as a
+``LocalRelation``: none of them starts a Spark job."""
 
 from __future__ import annotations
 
 import os
+import shutil
+import threading
+import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import BooleanType, LongType, StringType, StructField, StructType
 
-from lakehouse_admin_spark.metadata import local_frame, partitions_df, snapshots_df
+from lakehouse_admin_spark.metadata import (
+    arrow_table,
+    local_frame,
+    partitions_df,
+    rollup_totals,
+    snapshots_df,
+)
 from lakehouse_admin_spark.operators.analyze import OptimizeSettings
 from lakehouse_admin_spark.sources.ledger import LedgerCatalog
 
-_TABLE_KEY_SCHEMA = StructType(
-    [StructField("database", StringType()), StructField("table", StringType())]
+
+def _fields(*cols: tuple[str, object]) -> list[StructField]:
+    return [StructField(name, dtype) for name, dtype in cols]
+
+
+# the columns stored in each slice's parquet files; the key columns are
+# the directory names
+_STORED_SCHEMAS = {
+    "partitions": StructType(
+        _fields(
+            ("spec_id", LongType()),
+            ("file_count", LongType()),
+            ("record_count", LongType()),
+            ("total_data_file_size_in_bytes", LongType()),
+            ("small_files", LongType()),
+            ("needs_optimize", BooleanType()),
+            ("partition_json", StringType()),
+            ("browse_json", StringType()),
+        )
+    ),
+    "snapshots": StructType(
+        _fields(
+            ("snapshot_id", LongType()),
+            ("parent_id", LongType()),
+            ("committed_at_ms", LongType()),
+            ("operation", StringType()),
+            ("summary_json", StringType()),
+        )
+    ),
+}
+_KEY_FIELDS = _fields(("database", StringType()), ("table", StringType()))
+# a Spark read of the layout: stored columns, then the partition columns,
+# every column nullable
+ENTITY_SCHEMAS = {e: StructType(list(s) + _KEY_FIELDS) for e, s in _STORED_SCHEMAS.items()}
+_STORED = {e: to_arrow_schema(s) for e, s in _STORED_SCHEMAS.items()}
+_ARROW = {e: to_arrow_schema(s) for e, s in ENTITY_SCHEMAS.items()}
+
+SUMMARY_SCHEMA = StructType(
+    _KEY_FIELDS
+    + [
+        StructField("partition_count", LongType(), nullable=False),
+        StructField("file_count", LongType(), nullable=False),
+        StructField("record_count", LongType(), nullable=False),
+        StructField("total_data_file_size_in_bytes", LongType(), nullable=False),
+        StructField("needs_optimize", BooleanType(), nullable=False),
+        StructField("snapshot_count", LongType()),
+        StructField("latest_snapshot_id", LongType()),
+    ]
 )
+
+# one lock per cache directory, shared by every MetadataCache over it:
+# in one process, a refresh's slice swaps and a reader's listing never
+# interleave, so a read sees a table's cache before or after a refresh
+_DIR_LOCKS: dict[str, threading.RLock] = {}
+_DIR_LOCKS_GUARD = threading.Lock()
+
+
+def _dir_lock(path: str) -> threading.RLock:
+    with _DIR_LOCKS_GUARD:
+        return _DIR_LOCKS.setdefault(os.path.abspath(path), threading.RLock())
+
+
+def _is_data_file(name: str) -> bool:
+    return name.endswith(".parquet") and not name.startswith((".", "_"))
+
+
+def _subdirs(path: str, prefix: str) -> list[str]:
+    """Values of the ``<prefix><value>`` directories under ``path``."""
+    try:
+        with os.scandir(path) as it:
+            return sorted(
+                e.name[len(prefix):] for e in it if e.name.startswith(prefix) and e.is_dir()
+            )
+    except FileNotFoundError:
+        return []
+
+
+def _fingerprint(path: str) -> tuple:
+    """(name, size, mtime, inode) of each data file under ``path``;
+    empty when the directory is gone."""
+    try:
+        with os.scandir(path) as it:
+            entries = [e for e in it if _is_data_file(e.name)]
+            return tuple(
+                sorted(
+                    (e.name, st.st_size, st.st_mtime_ns, st.st_ino)
+                    for e in entries
+                    for st in (e.stat(),)
+                )
+            )
+    except FileNotFoundError:
+        return ()
 
 
 class MetadataCache:
@@ -37,9 +147,17 @@ class MetadataCache:
         self.spark = spark
         self.cache_dir = cache_dir
         os.makedirs(cache_dir, exist_ok=True)
+        self._lock = _dir_lock(cache_dir)
+        # entity -> {(database, table): (fingerprint, slice)}
+        self._held: dict[str, dict[tuple[str, str], tuple[tuple, pa.Table]]] = {
+            e: {} for e in ENTITY_SCHEMAS
+        }
 
     def _path(self, entity: str) -> str:
         return os.path.join(self.cache_dir, entity)
+
+    def _slice_dir(self, entity: str, database: str, table: str) -> str:
+        return os.path.join(self._path(entity), f"database={database}", f"table={table}")
 
     def _exists(self, entity: str) -> bool:
         p = self._path(entity)
@@ -47,10 +165,97 @@ class MetadataCache:
             f.endswith(".parquet") or f.startswith("database=") for f in os.listdir(p)
         )
 
+    def _frame(self, entity: str, table: pa.Table) -> DataFrame:
+        return self.spark.createDataFrame(table, ENTITY_SCHEMAS[entity])
+
+    # ------------------------------------------------------------------
+    # driver-held slices
+    # ------------------------------------------------------------------
+    @staticmethod
+    def _slice(entity: str, key: tuple[str, str], data: pa.Table) -> pa.Table:
+        """Stored columns + the (database, table) key columns."""
+        keys = [pa.array([k] * data.num_rows, pa.string()) for k in key]
+        return pa.Table.from_arrays(data.columns + keys, schema=_ARROW[entity])
+
+    def _load(self, entity: str, key: tuple[str, str], fingerprint: tuple) -> pa.Table:
+        path = self._slice_dir(entity, *key)
+        stored = _STORED[entity]
+        parts = [
+            pq.ParquetFile(os.path.join(path, name)).read(columns=stored.names).cast(stored)
+            for name, *_ in fingerprint
+        ]
+        return self._slice(entity, key, pa.concat_tables(parts))
+
+    def _sync(
+        self, entity: str, database: str | None = None, table: str | None = None
+    ) -> dict[tuple[str, str], pa.Table]:
+        """The held slices of ``entity`` (optionally of one database or
+        one table), in (database, table) order, each first reloaded if
+        its directory changed on disk since it was loaded."""
+        root = self._path(entity)
+        held = self._held[entity]
+        with self._lock:
+            dbs = [database] if database is not None else _subdirs(root, "database=")
+            keys = [
+                (db, t)
+                for db in dbs
+                for t in ([table] if table is not None else
+                          _subdirs(os.path.join(root, f"database={db}"), "table="))
+            ]
+            out = {}
+            for key in keys:
+                fp = _fingerprint(self._slice_dir(entity, *key))
+                if fp and (key not in held or held[key][0] != fp):
+                    held[key] = (fp, self._load(entity, key, fp))
+                if fp:
+                    out[key] = held[key][1]
+            for key in [k for k in held if k[0] in dbs and table in (None, k[1])]:
+                if key not in out:  # its directory is gone
+                    del held[key]
+            return out
+
+    def _replace(
+        self, database: str, table: str, data: dict[str, pa.Table | None]
+    ) -> dict[str, pa.Table]:
+        """Swap one table's slices, on disk and on the driver, for each
+        entity in ``data`` (stored columns; None or no rows removes the
+        slice). Each slice is written to a temporary directory, then all
+        are renamed into place under one lock hold. Returns the new
+        slices."""
+        key = (database, table)
+        fresh = {}
+        for entity, rows in data.items():
+            if rows is not None and rows.num_rows:
+                tmp = os.path.join(self._path(entity), f".tmp-{uuid.uuid4().hex}")
+                os.makedirs(tmp)
+                pq.write_table(rows, os.path.join(tmp, f"part-{uuid.uuid4().hex}.parquet"))
+                fresh[entity] = tmp
+        out, trash = {}, []
+        with self._lock:
+            for entity, rows in data.items():
+                final = self._slice_dir(entity, *key)
+                if os.path.isdir(final):
+                    trash.append(os.path.join(self._path(entity), f".old-{uuid.uuid4().hex}"))
+                    os.rename(final, trash[-1])
+                if entity not in fresh:
+                    self._held[entity].pop(key, None)
+                    out[entity] = _ARROW[entity].empty_table()
+                    continue
+                os.makedirs(os.path.dirname(final), exist_ok=True)
+                os.rename(fresh[entity], final)
+                out[entity] = self._slice(entity, key, rows)
+                self._held[entity][key] = (_fingerprint(final), out[entity])
+        for path in trash:
+            shutil.rmtree(path, ignore_errors=True)
+        return out
+
     def read(self, entity: str) -> DataFrame:
         if not self._exists(entity):
             raise KeyError(f"cache entity {entity!r} is empty — refresh first")
-        return self.spark.read.parquet(self._path(entity))
+        slices = list(self._sync(entity).values())
+        return self._frame(
+            entity, pa.concat_tables(slices) if slices else _ARROW[entity].empty_table()
+        )
 
     # ------------------------------------------------------------------
     # refresh (M5)
@@ -62,10 +267,12 @@ class MetadataCache:
         name: str,
         entity: str,
         settings: OptimizeSettings | None = None,
-    ) -> DataFrame:
+    ) -> pa.Table:
         """One table's fresh cache rows for ``partitions`` or
         ``snapshots`` (JSON-flattened so the cache parquet schema is
-        stable across tables with different partition specs).
+        stable across tables with different partition specs). Both
+        sources are driver-held frames, so the projection is folded and
+        the collect starts no Spark job.
 
         Decode-cost audit (r9): the SNAPSHOTS entity reads snapshot
         JSON summaries only — zero segment-body decodes (pinned in
@@ -76,23 +283,25 @@ class MetadataCache:
         manifest when one exists (files_df's distributed tier)."""
         tbl = catalog.table(database, name)
         if entity == "partitions":
-            return (
-                partitions_df(tbl, settings)
-                .withColumn("database", F.lit(database))
-                .withColumn("table", F.lit(name))
-                .withColumn("partition_json", F.to_json(F.col("partition")))
-                .withColumn("browse_json", F.to_json(F.col("partition_browse")))
-                .drop("partition", "partition_browse", "partition_key")
+            df = partitions_df(tbl, settings).withColumns(
+                {
+                    "partition_json": F.to_json(F.col("partition")),
+                    "browse_json": F.to_json(F.col("partition_browse")),
+                }
             )
-        if entity == "snapshots":
-            return (
-                snapshots_df(tbl)
-                .withColumn("database", F.lit(database))
-                .withColumn("table", F.lit(name))
-                .withColumn("summary_json", F.to_json(F.col("summary")))
-                .drop("summary", "committed_at")
-            )
-        raise KeyError(f"unknown cache entity {entity!r}")
+        elif entity == "snapshots":
+            df = snapshots_df(tbl).withColumn("summary_json", F.to_json(F.col("summary")))
+        else:
+            raise KeyError(f"unknown cache entity {entity!r}")
+        stored = _STORED_SCHEMAS[entity]
+        return arrow_table(df.select(*stored.names).collect(), stored)
+
+    def _refresh(self, catalog, database, name, entities, settings=None) -> dict[str, pa.Table]:
+        return self._replace(
+            database,
+            name,
+            {e: self._build_entity(catalog, database, name, e, settings) for e in entities},
+        )
 
     def refresh_entity(
         self,
@@ -104,14 +313,12 @@ class MetadataCache:
     ) -> DataFrame:
         """Partial refresh of ONE entity for one table (reference:
         service_refresh.go RefreshPartitions/RefreshSnapshots behind
-        GET /api/refresh/:db/:table/partitions|snapshots). Dynamic
-        partition overwrite replaces exactly this table's slice; returns
-        the refreshed rows (the handlers echo them back)."""
-        df = self._build_entity(catalog, database, name, entity, settings)
-        df.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("database", "table").parquet(self._path(entity))
-        return self.cached(entity, database, name)
+        GET /api/refresh/:db/:table/partitions|snapshots). Replaces
+        exactly this table's slice; returns the refreshed rows (the
+        handlers echo them back)."""
+        return self._frame(
+            entity, self._refresh(catalog, database, name, [entity], settings)[entity]
+        )
 
     def refresh_table(
         self,
@@ -120,16 +327,12 @@ class MetadataCache:
         name: str,
         settings: OptimizeSettings | None = None,
     ) -> dict[str, int]:
-        """Refresh one table's cached partitions + snapshots: dynamic
-        partition overwrite replaces exactly this table's cache slice
-        (the DELETE+INSERT of service_refresh.go:121-199 as one
-        distributed write)."""
-        counts = {}
-        for entity in ("partitions", "snapshots"):
-            counts[entity] = self.refresh_entity(
-                catalog, database, name, entity, settings
-            ).count()
-        return counts
+        """Refresh one table's cached partitions + snapshots, replacing
+        exactly this table's cache slices (the DELETE+INSERT of
+        service_refresh.go:121-199); the counts are those of the rows
+        just written."""
+        new = self._refresh(catalog, database, name, ENTITY_SCHEMAS, settings)
+        return {entity: new[entity].num_rows for entity in ENTITY_SCHEMAS}
 
     # ------------------------------------------------------------------
     # cached reads (the /api/metadata listings)
@@ -137,12 +340,11 @@ class MetadataCache:
     def cached(self, entity: str, database: str, table: str) -> DataFrame:
         """Cached rows for one (database, table) without touching the
         live catalog (reference: handler_metadata.go:36-54 — SELECT from
-        the MySQL cache). The cache parquet is Hive-partitioned on
-        (database, table), so this read partition-prunes to exactly one
-        directory regardless of catalog size."""
-        return self.read(entity).filter(
-            (F.col("database") == database) & (F.col("table") == table)
-        )
+        the MySQL cache): the held slice, whatever the catalog's size."""
+        if not self._exists(entity):
+            raise KeyError(f"cache entity {entity!r} is empty — refresh first")
+        held = self._sync(entity, database, table).get((database, table))
+        return self._frame(entity, held if held is not None else _ARROW[entity].empty_table())
 
     def refresh_all(
         self, catalog: LedgerCatalog, settings: OptimizeSettings | None = None
@@ -164,52 +366,52 @@ class MetadataCache:
     # ------------------------------------------------------------------
     def stale_tables(self, live: list[tuple[str, str]]) -> list[tuple[str, str]]:
         """Cached (database, table) pairs no longer in the live catalog —
-        left_anti join, the Spark form of funk.Difference."""
-        if not self._exists("partitions"):
-            return []
-        cached = self.read("partitions").select("database", "table").distinct()
-        live_df = local_frame(self.spark, live, _TABLE_KEY_SCHEMA)
-        stale = cached.join(live_df, ["database", "table"], "left_anti")
-        return sorted((r["database"], r["table"]) for r in stale.collect())
+        the set difference of funk.Difference over the held keys."""
+        return sorted(set(self._sync("partitions")) - {tuple(k) for k in live})
 
     def remove_stale(self, live: list[tuple[str, str]]) -> int:
         """Cascade-delete stale tables' cache slices (M6; the reference
         deletes partitions/snapshots/tasks rows per table,
-        service_refresh.go:297-316). Hive-layout cache → drop the
-        partition directories."""
-        import shutil
-
+        service_refresh.go:297-316)."""
         stale = self.stale_tables(live)
         for db, t in stale:
-            for entity in ("partitions", "snapshots"):
-                p = os.path.join(self._path(entity), f"database={db}", f"table={t}")
-                if os.path.isdir(p):
-                    shutil.rmtree(p)
+            self._replace(db, t, dict.fromkeys(ENTITY_SCHEMAS))
         return len(stale)
 
     # ------------------------------------------------------------------
     # cached summaries (3.1 without the N+1)
     # ------------------------------------------------------------------
+    def _summaries(self, database: str | None, table: str | None = None) -> list[tuple]:
+        """Per-table totals of the held partitions slices, with each
+        table's snapshot count (left join: a table with no cached
+        snapshots gets nulls), in (database, table) order."""
+        for entity in ENTITY_SCHEMAS:
+            if not self._exists(entity):
+                raise KeyError(f"cache entity {entity!r} is empty — refresh first")
+        with self._lock:  # both entities from one moment
+            parts = self._sync("partitions", database, table)
+            snaps = self._sync("snapshots", database, table)
+        out = []
+        for key, p in parts.items():
+            s = snaps.get(key)
+            out.append(
+                (
+                    *key,
+                    *rollup_totals(p),
+                    None if s is None else s.num_rows,
+                    None if s is None else pc.max(s["snapshot_id"]).as_py(),
+                )
+            )
+        return out
+
     def table_summaries(self, database: str | None = None) -> DataFrame:
-        """Per-table summary in ONE aggregation over cached partitions
-        joined with snapshot counts — replaces the reference's
-        two-queries-per-table pattern."""
-        parts = self.read("partitions")
-        snaps = self.read("snapshots")
-        if database is not None:
-            parts = parts.filter(F.col("database") == database)
-            snaps = snaps.filter(F.col("database") == database)
-        psum = parts.groupBy("database", "table").agg(
-            F.count(F.lit(1)).alias("partition_count"),
-            F.coalesce(F.sum("file_count"), F.lit(0)).alias("file_count"),
-            F.coalesce(F.sum("record_count"), F.lit(0)).alias("record_count"),
-            F.coalesce(F.sum("total_data_file_size_in_bytes"), F.lit(0)).alias(
-                "total_data_file_size_in_bytes"
-            ),
-            F.coalesce(F.max("needs_optimize"), F.lit(False)).alias("needs_optimize"),
-        )
-        ssum = snaps.groupBy("database", "table").agg(
-            F.count(F.lit(1)).alias("snapshot_count"),
-            F.max("snapshot_id").alias("latest_snapshot_id"),
-        )
-        return psum.join(ssum, ["database", "table"], "left").orderBy("database", "table")
+        """Per-table summary of every cached table (of one database),
+        folded on the driver — replaces the reference's
+        two-queries-per-table pattern without starting a Spark job."""
+        return local_frame(self.spark, self._summaries(database), SUMMARY_SCHEMA)
+
+    def table_summary(self, database: str, table: str) -> dict | None:
+        """One table's :meth:`table_summaries` row as a dict, from that
+        table's slices alone; None when it is not cached."""
+        rows = self._summaries(database, table)
+        return dict(zip(SUMMARY_SCHEMA.names, rows[0])) if rows else None

@@ -44,7 +44,6 @@ import datetime as dt
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from lakehouse_admin_spark import maintenance as mnt
 from lakehouse_admin_spark import metadata as md
@@ -75,8 +74,8 @@ class LakehouseAdmin:
         return self.catalog.list_databases()
 
     def list_tables_with_summaries(self, database: str) -> DataFrame:
-        """§3.1 without the N+1: one aggregation over the cached
-        partitions table."""
+        """§3.1 without the N+1: per-table totals folded on the driver
+        over the cached partitions."""
         return self.cache.table_summaries(database)
 
     def describe(self, database: str, table: str) -> dict:
@@ -160,16 +159,12 @@ class LakehouseAdmin:
 
     def table_summary(self, database: str, table: str) -> dict:
         """Single-table summary from the cache (reference:
-        handler_browse.go:101-115 TableSummary)."""
-        rows = (
-            self.list_tables_with_summaries(database)
-            .filter(F.col("table") == table)
-            .limit(1)
-            .collect()
-        )
-        if not rows:
+        handler_browse.go:101-115 TableSummary): that table's cached
+        totals, summed on the driver."""
+        row = self.cache.table_summary(database, table)
+        if row is None:
             raise KeyError(f"table {database}.{table} not in cache — refresh first")
-        return rows[0].asDict(recursive=True)
+        return row
 
     # -- metadata tables ----------------------------------------------
     def snapshots(self, database: str, table: str) -> DataFrame:

@@ -103,7 +103,9 @@ def normalize_map_expr(spec: list[PartitionField], partition: Column) -> Column:
             entries += [F.lit("year"), F.lpad(v, 4, "0")]
         else:
             entries += [F.lit(f.source), v]
-    return F.create_map(*entries) if entries else F.create_map()
+    # an unpartitioned spec's empty map is typed like the others: an
+    # untyped map() is map<void,void>, which has no Arrow form
+    return F.create_map(*entries) if entries else F.create_map().cast("map<string,string>")
 
 
 def synth_partition_filters(

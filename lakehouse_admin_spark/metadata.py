@@ -14,21 +14,26 @@ The file/snapshot inventories are small (O(files), O(snapshots)) and
 held on the driver, so :func:`local_frame` hands them to Spark as one
 Arrow table: the plan leaf is a ``LocalRelation``, the optimizer folds
 the Filter/Project above it (``ConvertToLocalRelation``), and a browse
-read that filters down to a few rows runs no Spark job at all. Above
+read that filters down to a few rows runs no Spark job at all. Spark
+does not fold a Sort or an Aggregate, so listings are sorted and
+roll-ups folded on the driver before they become a frame. Above
 ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by default)
 Spark itself turns the Arrow batches into an RDD scan, so a large
 inventory plans as a distributed scan with no change here. Tables with a
-parquet manifest skip the driver entirely (:func:`files_df`); every
-aggregation below is shaped for either leaf (no collect before
-aggregation).
+parquet manifest skip the driver for the file inventory
+(:func:`files_df`); the per-partition roll-up over it is one Spark
+aggregate per snapshot, whose result (one row per partition) is kept on
+the driver (:func:`partition_rollup`) and serves every later read of
+that snapshot.
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -65,6 +70,17 @@ FILE_SCHEMA = StructType(
 
 PATH_SCHEMA = StructType([StructField("file_path", StringType())])
 
+DRILLDOWN_SCHEMA = StructType(
+    [
+        StructField("name", StringType()),
+        StructField("file_count", LongType()),
+        StructField("record_count", LongType()),
+        StructField("total_data_file_size_in_bytes", LongType()),
+        StructField("needs_optimize", BooleanType(), nullable=False),
+        StructField("needs_optimize_count", LongType()),
+    ]
+)
+
 HISTORY_SCHEMA = StructType(
     [
         StructField("made_current_at_ms", LongType()),
@@ -82,12 +98,16 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> D
     ``schema``, so no pickled-RDD scan is built and a Filter/Project
     over the frame is folded at optimization time. Empty ``rows`` give
     an empty frame of the same schema."""
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
+def arrow_table(rows: list[tuple], schema: StructType) -> pa.Table:
+    """Driver-held ``rows`` as one Arrow table typed by ``schema``."""
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) or [()] * len(arrow_schema)
-    table = pa.table(
+    return pa.table(
         [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
     )
-    return spark.createDataFrame(table, schema)
 
 
 def snapshots_df(table: LedgerTable) -> DataFrame:
@@ -123,7 +143,12 @@ def files_df(table: LedgerTable, snapshot_id: int | None = None) -> DataFrame:
     sid = snapshot_id if snapshot_id is not None else table.current_snapshot_id()
     if sid is not None and table.has_manifest(sid):
         return table.spark.read.schema(FILE_SCHEMA).parquet(table.manifest_path(sid))
-    rows = [
+    return local_frame(table.spark, _file_rows(table, sid), FILE_SCHEMA)
+
+
+def _file_rows(table: LedgerTable, sid: int | None) -> list[tuple]:
+    """The snapshot's live entries as :data:`FILE_SCHEMA` tuples."""
+    return [
         (
             e.get("content", 0),
             e["file_path"],
@@ -135,22 +160,53 @@ def files_df(table: LedgerTable, snapshot_id: int | None = None) -> DataFrame:
         )
         for e in table.live_files(sid)
     ]
-    return local_frame(table.spark, rows, FILE_SCHEMA)
 
 
 def partitions_df(
     table: LedgerTable, settings: OptimizeSettings | None = None
 ) -> DataFrame:
-    """Per-partition stats: the `$partitions` scan + needs_optimize.
+    """Per-partition stats: the `$partitions` scan + needs_optimize,
+    served from the current snapshot's driver-held
+    :func:`partition_rollup` as a ``LocalRelation``."""
+    rollup = partition_rollup(table, settings)
+    return table.spark.createDataFrame(rollup, from_arrow_schema(rollup.schema))
 
-    One conditional aggregation over the file inventory (A1+A7+§2.9) —
-    replaces the reference's per-file Go map fold
+
+def partition_rollup(
+    table: LedgerTable, settings: OptimizeSettings | None = None
+) -> pa.Table:
+    """The current snapshot's per-partition stats as one Arrow table.
+
+    A snapshot never changes, so its roll-up is computed once per
+    (table, snapshot, settings, spec versions) by :func:`_rollup_frame`
+    — one Spark aggregate over :func:`files_df`, which keeps its
+    manifest tier, so a large table still aggregates distributed — and
+    then held in the ledger's per-snapshot cache. At most one row per
+    partition reaches the driver."""
+    settings = settings or OptimizeSettings()
+    sid = table.current_snapshot_id()
+    specs = table.all_specs()
+    key = ("partitions", settings, tuple((k, tuple(v)) for k, v in sorted(specs.items())))
+    # toArrow, not collect(): a collected map comes back as a dict that
+    # has lost its entry order, which the cached browse JSON keeps
+    return table.snapshot_derived(
+        sid, key, lambda: _rollup_frame(table, sid, specs, settings).toArrow()
+    )
+
+
+def _rollup_frame(
+    table: LedgerTable,
+    sid: int | None,
+    specs: dict[int, list],
+    settings: OptimizeSettings,
+) -> DataFrame:
+    """One conditional aggregation over the file inventory (A1+A7+§2.9)
+    — replaces the reference's per-file Go map fold
     (iceberg_client.go:188-219) with a hash aggregate keyed on the
     partition map."""
     from lakehouse_admin_spark.functions.partitions import normalize_map_expr
 
-    files = files_df(table).filter(F.col("content") == 0)
-    specs = table.all_specs()
+    files = files_df(table, sid).filter(F.col("content") == 0)
     keyed = files.withColumn(
         "partition_key",
         F.to_json(F.col("partition")) if any(specs.values()) else F.lit("{}"),
@@ -171,38 +227,51 @@ def partitions_df(
     # raw map + browse-normalized map (hidden transforms expanded to
     # zero-padded year/month/day), normalized PER SPEC VERSION
     browse = None
-    for sid, spec in sorted(specs.items()):
+    for spec_id, spec in sorted(specs.items()):
         expr = normalize_map_expr(spec, F.col("partition"))
-        branch = (F.col("spec_id") == sid, expr)
+        branch = (F.col("spec_id") == spec_id, expr)
         browse = F.when(*branch) if browse is None else browse.when(*branch)
     return rolled.withColumn("partition_browse", browse)
 
 
+def rollup_totals(rollup: pa.Table) -> tuple[int, int, int, int, bool]:
+    """(partition_count, file_count, record_count,
+    total_data_file_size_in_bytes, needs_optimize) over partition rows:
+    sums of nothing are 0, needs_optimize is whether any row needs it."""
+    def total(column: str) -> int:
+        return pc.sum(rollup[column]).as_py() or 0
+
+    return (
+        rollup.num_rows,
+        total("file_count"),
+        total("record_count"),
+        total("total_data_file_size_in_bytes"),
+        bool(pc.any(rollup["needs_optimize"]).as_py()),
+    )
+
+
 def table_summary(table: LedgerTable, settings: OptimizeSettings | None = None) -> dict:
-    """A3+A4 merged: one aggregation over partitions + snapshot count
-    (reference runs these as two SQL queries per table,
-    service_metadata.go:36-66; here it is one job + one len())."""
-    parts = partitions_df(table, settings)
-    agg = parts.agg(
-        F.count(F.lit(1)).alias("partition_count"),
-        F.coalesce(F.sum("file_count"), F.lit(0)).alias("file_count"),
-        F.coalesce(F.sum("record_count"), F.lit(0)).alias("record_count"),
-        F.coalesce(F.sum("total_data_file_size_in_bytes"), F.lit(0)).alias(
-            "total_data_file_size_in_bytes"
-        ),
-        F.coalesce(F.max("needs_optimize"), F.lit(False)).alias("needs_optimize"),
-    ).collect()[0]
+    """A3+A4 merged: totals of the driver-held partition roll-up plus
+    the snapshot count (the reference runs these as two SQL queries per
+    table, service_metadata.go:36-66); no Spark job once the snapshot's
+    roll-up is held."""
+    parts, files, records, size, needs = rollup_totals(partition_rollup(table, settings))
     return {
         "database": table.database,
         "name": table.name,
-        "partition_count": agg["partition_count"],
-        "file_count": agg["file_count"],
-        "record_count": agg["record_count"],
-        "total_data_file_size_in_bytes": agg["total_data_file_size_in_bytes"],
-        "needs_optimize": bool(agg["needs_optimize"]),
+        "partition_count": parts,
+        "file_count": files,
+        "record_count": records,
+        "total_data_file_size_in_bytes": size,
+        "needs_optimize": needs,
         "snapshot_count": len(table.snapshots()),
         "current_snapshot_id": table.current_snapshot_id(),
     }
+
+
+def _add(acc, value):
+    """SQL ``sum`` step: nulls are skipped, all-null stays null."""
+    return acc if value is None else value if acc is None else acc + value
 
 
 def drilldown(
@@ -212,7 +281,9 @@ def drilldown(
 ) -> DataFrame:
     """Partition drill-down: aggregate the *next* partition level under
     the selected prefix — `GROUP BY 1 ORDER BY 1` with roll-up sums and
-    needs-optimize counts (reference: handler_browse.go:137-178).
+    needs-optimize counts (reference: handler_browse.go:137-178). The
+    fold runs on the driver over the snapshot's roll-up (at most one
+    row per partition) and the sorted groups become a ``LocalRelation``.
     """
     from lakehouse_admin_spark.functions.partitions import browse_fields
 
@@ -224,20 +295,26 @@ def drilldown(
             f"{table.database}.{table.name}"
         )
     next_field = fields[depth]
-    parts = partitions_df(table, settings)
-    for k, v in selected.items():
-        parts = parts.filter(F.col("partition_browse")[k] == v)
-    return (
-        parts.groupBy(F.col("partition_browse")[next_field].alias("name"))
-        .agg(
-            F.sum("file_count").alias("file_count"),
-            F.sum("record_count").alias("record_count"),
-            F.sum("total_data_file_size_in_bytes").alias("total_data_file_size_in_bytes"),
-            F.coalesce(F.max("needs_optimize"), F.lit(False)).alias("needs_optimize"),
-            F.sum(F.col("needs_optimize").cast("int")).alias("needs_optimize_count"),
+    parts = partition_rollup(table, settings)
+    cols = ("partition_browse", "file_count", "record_count",
+            "total_data_file_size_in_bytes", "needs_optimize")
+    groups: dict = {}
+    for browse, files, records, size, flag in zip(*(parts[c].to_pylist() for c in cols)):
+        browse = dict(browse or ())
+        if not _matches(browse, selected):
+            continue
+        g = groups.setdefault(browse.get(next_field), [None] * 4)
+        for i, value in enumerate((files, records, size, None if flag is None else int(flag))):
+            g[i] = _add(g[i], value)
+    # max(needs_optimize) is whether the count of flagged rows is > 0;
+    # groups sort by name, null first (SQL ORDER BY name ASC)
+    rows = [
+        (name, files, records, size, bool(flagged), flagged)
+        for name, (files, records, size, flagged) in sorted(
+            groups.items(), key=lambda kv: (kv[0] is not None, kv[0] or "")
         )
-        .orderBy(F.asc("name"))
-    )
+    ]
+    return local_frame(table.spark, rows, DRILLDOWN_SCHEMA)
 
 
 def list_files(
@@ -247,19 +324,29 @@ def list_files(
     """Data files of one (possibly fully-specified) partition, largest
     first — the `$files` listing `WHERE content = 0 AND CAST(
     partition.<k> AS VARCHAR)='<v>' ORDER BY file_size_in_bytes DESC,
-    file_path ASC` (reference: service_browse_files.go:193-215)."""
-    df = files_df(table).filter(F.col("content") == 0)
-    for k, v in (partition_filters or {}).items():
-        df = df.filter(F.col("partition")[k] == v)
-    return df.select(
-        "content",
-        "file_path",
-        "file_format",
-        "spec_id",
-        "partition",
-        "record_count",
-        "file_size_in_bytes",
-    ).orderBy(F.desc("file_size_in_bytes"), F.asc("file_path"))
+    file_path ASC` (reference: service_browse_files.go:193-215).
+    Driver-held entries are filtered and sorted on the driver, so the
+    listing is a ``LocalRelation`` of its own rows; the manifest tier
+    filters and sorts in Spark."""
+    filters = partition_filters or {}
+    sid = table.current_snapshot_id()
+    if sid is not None and table.has_manifest(sid):
+        df = files_df(table, sid).filter(F.col("content") == 0)
+        for k, v in filters.items():
+            df = df.filter(F.col("partition")[k] == v)
+        return df.select(*FILE_SCHEMA.names).orderBy(
+            F.desc("file_size_in_bytes"), F.asc("file_path")
+        )
+    rows = [r for r in _file_rows(table, sid) if r[0] == 0 and _matches(r[4], filters)]
+    rows.sort(key=lambda r: (-r[6], r[1]))
+    return local_frame(table.spark, rows, FILE_SCHEMA)
+
+
+def _matches(values: dict | None, selected: dict) -> bool:
+    """SQL ``values[k] = v`` for every selection, values compared as
+    strings: a missing key or a null on either side never matches."""
+    values = values or {}
+    return all(v is not None and values.get(k) == str(v) for k, v in selected.items())
 
 
 def history_df(table: LedgerTable) -> DataFrame:

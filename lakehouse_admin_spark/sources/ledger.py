@@ -226,6 +226,12 @@ class LRU:
             if key in self._items:
                 self._discard(key)
 
+    def pop_where(self, pred) -> None:
+        """Drop every entry whose key satisfies ``pred``."""
+        with self._lock:
+            for key in [k for k in self._items if pred(k)]:
+                self._discard(key)
+
     def clear(self) -> None:
         with self._lock:
             self._items.clear()
@@ -276,13 +282,23 @@ class _SnapshotFiles:
 
 _SNAPSHOT_CACHE = LRU(8, 2_000_000, lambda s: len(s.live))
 
+# (meta_dir, snapshot_id, key) -> an Arrow table derived from that one
+# snapshot (the partition rollup, keyed by its settings); immutable like
+# the snapshot, bounded like the file views. Kept apart from
+# _SNAPSHOT_CACHE so a manifest-backed table never decodes its entries
+# onto the driver just to hold its rollup.
+_DERIVED_CACHE = LRU(8, 2_000_000, lambda t: t.num_rows)
+
 
 def invalidate_live_files_cache(meta_dir: str, snapshot_id: int) -> None:
-    """Drop one snapshot's cached file views. Required when a snapshot
-    JSON is DELETED and its id may be re-assigned — an aborted
-    transaction's staged snapshot is the one such path (expired
-    snapshots keep the current head, so their ids never recycle)."""
-    _SNAPSHOT_CACHE.pop((os.path.abspath(meta_dir), snapshot_id))
+    """Drop one snapshot's cached file views and derived tables.
+    Required when a snapshot JSON is DELETED and its id may be
+    re-assigned — an aborted transaction's staged snapshot is the one
+    such path (expired snapshots keep the current head, so their ids
+    never recycle)."""
+    key = (os.path.abspath(meta_dir), snapshot_id)
+    _SNAPSHOT_CACHE.pop(key)
+    _DERIVED_CACHE.pop_where(lambda k: k[:2] == key)
 
 
 class Snapshot:
@@ -2757,6 +2773,12 @@ class LedgerTable:
             (os.path.abspath(self.meta_dir), sid),
             lambda: _SnapshotFiles(self.snapshot(sid).files),
         )
+
+    def snapshot_derived(self, sid: int | None, key, build):
+        """``build()``'s Arrow table, cached under (this table,
+        snapshot ``sid``, ``key``): a value computed from one immutable
+        snapshot is computed once, however often it is read."""
+        return _DERIVED_CACHE.get((os.path.abspath(self.meta_dir), sid, key), build)
 
     def live_files(self, snapshot_id: int | None = None) -> list[dict]:
         """The snapshot's live manifest entries (cached per snapshot).

@@ -486,10 +486,8 @@ def plan_optimize_tasks(
     """Plan optimize tasks: needs_optimize partitions in range → dates →
     chunks → clamp → dedup → one task per chunk
     (reference: service_tasks.go:190-296)."""
-    from pyspark.sql import functions as F
-
     from lakehouse_admin_spark.functions.partitions import get_date
-    from lakehouse_admin_spark.metadata import partitions_df
+    from lakehouse_admin_spark.metadata import partition_rollup
 
     now = now or dt.datetime.now()
     cutoff = latest_optimizable_date(now, delay_hours)
@@ -498,16 +496,14 @@ def plan_optimize_tasks(
         return []
     date_from, date_until = clamped
 
-    tbl = catalog.table(database, table_name)
-    parts = (
-        partitions_df(tbl, settings)
-        .filter(F.col("needs_optimize"))
-        .select("partition_browse")
-        .collect()
-    )
+    parts = partition_rollup(catalog.table(database, table_name), settings)
     dates: set[dt.date] = set()
-    for r in parts:
-        browse = dict(r["partition_browse"])
+    for flag, browse in zip(
+        parts["needs_optimize"].to_pylist(), parts["partition_browse"].to_pylist()
+    ):
+        if not flag:
+            continue
+        browse = dict(browse)
         if not {"year", "month", "day"} <= set(browse):
             continue  # undated partitions aren't date-chunkable
         d = get_date(browse)

@@ -159,8 +159,7 @@ def test_refresh_single_table_overwrites_only_its_slice(env):
 def test_metadata_cache_sets_no_session_conf(env, spark, tmp_path):
     """Constructing a MetadataCache leaves the shared session's overwrite
     semantics alone; a refresh under a static session still replaces
-    only its own table's slice (dynamic overwrite is an option of that
-    one write)."""
+    only its own table's slice (it swaps that slice's directory)."""
     catalog, _ = env
     key = "spark.sql.sources.partitionOverwriteMode"
     old = spark.conf.get(key)

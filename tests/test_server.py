@@ -314,9 +314,10 @@ def test_task_list_query_params(served):
 
 @pytest.fixture(scope="module")
 def one_file_served(spark, tmp_path_factory):
-    """A day-partitioned ledger with one file per partition and no
-    parquet manifest, so its browse reads use the driver-held inventory,
-    plus a table that was never written to."""
+    """A day-partitioned ledger with no parquet manifest, so its browse
+    reads use the driver-held inventory: one file in each of three day
+    partitions, then five one-file appends to a fourth day. Plus a
+    table that was never written to."""
     wh = str(tmp_path_factory.mktemp("wh_http_one_file"))
     admin = LakehouseAdmin(spark, wh)
     rows = spark.range(0, 30).selectExpr(
@@ -325,6 +326,12 @@ def one_file_served(spark, tmp_path_factory):
     spec = [PartitionField(source="ts", transform="day", name="ts_day")]
     tbl = admin.catalog.create_table("main", "daily", rows.schema, spec)
     tbl.append(rows.coalesce(1))
+    for i in range(5):
+        tbl.append(
+            spark.range(0, 1 + i % 2).selectExpr(
+                "timestamp_seconds(1704067200 + 3 * 86400) AS ts", "id AS v"
+            ).coalesce(1)
+        )
     empty = admin.catalog.create_table("main", "never_written", rows.schema, spec)
     with AdminHTTPServer(admin) as srv:
         yield f"http://127.0.0.1:{srv.port}", tbl, empty
@@ -339,22 +346,48 @@ def _new_jobs(spark, fn):
 
 
 def test_small_browse_reads_start_no_spark_job(spark, one_file_served):
-    """A one-file partition listing and the snapshot list are answered
-    from the optimizer-folded local relation: no Spark job at all."""
+    """Every browse read route of a small refreshed table is answered
+    from driver-held state through an optimizer-folded local relation:
+    after one warm call, no Spark job at all."""
     base, tbl, _ = one_file_served
     assert not tbl.has_manifest(tbl.current_snapshot_id())
-    sel = {"partitions": {"year": "2024", "month": "01", "day": "02"}}
-    (_, files), jobs = _new_jobs(
-        spark, lambda: _req(base, "POST", "/api/browse/main/daily/files", sel)
-    )
-    assert [f["record_count"] for f in files["files"]] == [10]
-    assert files["files"][0]["partition"] == {"ts_day": "2024-01-02"}
-    assert not jobs, f"file listing started Spark jobs {sorted(jobs)}"
-    (_, snaps), jobs = _new_jobs(
-        spark, lambda: _req(base, "GET", "/api/iceberg/main/daily/snapshots")
-    )
-    assert [s["snapshot_id"] for s in snaps["snapshots"]] == [tbl.current_snapshot_id()]
-    assert not jobs, f"snapshot list started Spark jobs {sorted(jobs)}"
+    _req(base, "GET", "/api/refresh/main/daily")
+    day = lambda d: {"partitions": {"year": "2024", "month": "01", "day": d}}  # noqa: E731
+    reads = {
+        "tables": ("GET", "/api/browse/main/tables", None),
+        "summary": ("GET", "/api/browse/main/daily", None),
+        "drill_year": ("POST", "/api/browse/main/daily/partitions", {"partitions": {}}),
+        "drill_month": ("POST", "/api/browse/main/daily/partitions",
+                        {"partitions": {"year": "2024"}}),
+        "drill_day": ("POST", "/api/browse/main/daily/partitions",
+                      {"partitions": {"year": "2024", "month": "01"}}),
+        "one_file": ("POST", "/api/browse/main/daily/files", day("02")),
+        "five_files": ("POST", "/api/browse/main/daily/files", day("04")),
+        "cached_partitions": ("GET", "/api/metadata/main/daily/partitions", None),
+        "cached_snapshots": ("GET", "/api/metadata/main/daily/snapshots", None),
+        "live_snapshots": ("GET", "/api/iceberg/main/daily/snapshots", None),
+        "live_partitions": ("GET", "/api/iceberg/main/daily/partitions", None),
+    }
+    got = {}
+    for name, (method, path, body) in reads.items():
+        _req(base, method, path, body)  # warm: a new snapshot's roll-up
+        (_, got[name]), jobs = _new_jobs(spark, lambda: _req(base, method, path, body))
+        assert not jobs, f"{name} started Spark jobs {sorted(jobs)}"
+    assert [f["record_count"] for f in got["one_file"]["files"]] == [10]
+    assert got["one_file"]["files"][0]["partition"] == {"ts_day": "2024-01-02"}
+    # the parent's Spark order: file_size_in_bytes DESC, file_path ASC
+    five = [e for e in tbl.live_files() if e["partition"]["ts_day"] == "2024-01-04"]
+    want = sorted(five, key=lambda e: (-e["file_size_in_bytes"], e["file_path"]))
+    assert len(want) == 5
+    assert [f["file_path"] for f in got["five_files"]["files"]] == [
+        e["file_path"] for e in want
+    ]
+    assert [s["snapshot_id"] for s in got["live_snapshots"]["snapshots"]] == [
+        s.snapshot_id for s in tbl.snapshots()
+    ]
+    assert [d["name"] for d in got["drill_day"]["partitions"]] == ["01", "02", "03", "04"]
+    assert got["summary"]["file_count"] == len(tbl.live_files()) == 8
+    assert got["summary"]["partition_count"] == len(got["cached_partitions"]) == 4
 
 
 def test_driver_held_frames_are_local_relations(spark, one_file_served):
