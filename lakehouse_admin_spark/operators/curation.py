@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_admin_spark import index_registry
 from lakehouse_admin_spark.index_registry import free_checkpoint
-from lakehouse_admin_spark.operators.dedup import shingles_expr, tokens_expr
+from lakehouse_admin_spark.operators.dedup import doc_tokens, shingles_expr, tokens_expr
 from lakehouse_admin_spark.registry import query
 from lakehouse_admin_spark.sources.tables import load_table
 
@@ -740,15 +740,15 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row dataset card — the summary block of a corpus datasheet:
     doc/token/lang/source counts, average length, language share, and
-    the exact-duplicate count (md5 fingerprints). One tokenizing pass +
-    one fingerprint aggregate; every number is replayed by the oracle
-    from raw rows."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = docs.repartition(spark.sparkContext.defaultParallelism).select(
+    the exact-duplicate count (md5 fingerprints). Reads the tier's
+    token corpus (``dedup.doc_tokens``), so a serve never tokenizes:
+    one scan of the cached corpus + one fingerprint aggregate; every
+    number is replayed by the oracle from raw rows."""
+    t = doc_tokens(spark, sf_dir).select(
         "doc_id",
         "lang",
         "source",
-        F.size(tokens_expr(F.col("text"))).alias("n_tokens"),
+        F.size("w").alias("n_tokens"),
         F.md5("text").alias("fp"),
     )
     dup_docs = (
@@ -1334,8 +1334,8 @@ def dsir_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = docs.filter(F.expr(_DSIR_DELTA) & ~F.expr(_DSIR_TARGET))
     toks = tokens_expr(F.col("text"))
     # repartition BEFORE tokenizing: the parquet is a handful of row
-    # groups, and the regex tokenizer is the CPU cost (the _doc_tokens
-    # rule) — without this the delta scan runs ~single-task
+    # groups, and the regex tokenizer is the CPU cost — without this
+    # the delta scan runs ~single-task
     t = delta.repartition(spark.sparkContext.defaultParallelism).select(
         "doc_id", toks.alias("toks")
     )

@@ -69,6 +69,40 @@ def tokens_expr(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"\s+"), lambda x: x != "")
 
 
+def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``documents`` with its token array ``w``: the tier's one token
+    corpus, tokenized once per (session, tier) and held as the
+    registry's ``"doc_tokens"`` entry. Every text, card, BM25 and
+    shingle consumer reads it, so no serve tokenizes again.
+
+    Layout: range-partitioned on ``doc_id`` (``defaultParallelism``
+    ranges) and sorted within each range. The cached scan reports that
+    partitioning and ordering, so an ``orderBy("doc_id")`` needs no
+    exchange, sampling job or sort, and any aggregate or window keyed
+    on a superset of ``doc_id`` (or an alias of it) needs no shuffle.
+    The range boundaries come from a sample seeded per RDD, so they may
+    differ between sessions; no consumer's output depends on them.
+    Consumers filter above the cached relation, so a filter never
+    re-inlines the tokenizer below the exchange.
+    """
+
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        return (
+            docs.repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
+            .select(
+                "doc_id", "lang", "source", "n_chars", "text",
+                tokens_expr(F.col("text")).alias("w"),
+            )
+            .sortWithinPartitions("doc_id")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+
+    return index_registry.get(
+        spark, sf_dir, "doc_tokens", build, release=lambda df: df.unpersist()
+    )
+
+
 def shingles_expr(toks: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles (space-joined). Docs shorter than
     n tokens produce an empty array (guard needed: Spark's sequence(1, 0)
@@ -88,26 +122,21 @@ def exploded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     set sizes) reads it, and plain (long, string) columns cache far
     cheaper than array<string> batches.
 
-    Plan-shape notes (measured at sf0.1):
-    - repartition FIRST, on raw rows: the fixture is one parquet row
-      group -> one task; the regex tokenizer + shingle construction is
-      the CPU cost, so spread it before computing (19s -> 3s).
-    - tokenize in its OWN projection: inlining tokens_expr into the
-      shingle lambda makes codegen re-run the regex split per
-      element_at (~3x n_tokens times per row).
-    - explode in the SAME select as the shingle construction: routing
-      the array through another projection/alias lets the Generate-
-      inferred size()>0 predicate re-inline the whole expression below
-      the exchange.
+    Built from the tier's token corpus (:func:`doc_tokens`, its base in
+    the registry, so invalidating the corpus drops it too): the
+    tokenizer never runs here, and the posting rows keep the corpus's
+    ``doc_id`` range layout, so doc-keyed aggregates over them (set
+    sizes, minhash signatures) need no shuffle. Explode in the SAME
+    select as the shingle construction: routing the array through
+    another projection/alias lets the Generate-inferred size() > 0
+    predicate re-inline it, so every row builds its shingles twice.
     At 100 TB this index would be a materialized table; the shape is
     identical. Built once per (session, tier) in the index registry.
     """
 
     def build():
-        docs = load_table(spark, sf_dir, "documents")
         return (
-            docs.repartition(spark.sparkContext.defaultParallelism)
-            .select("doc_id", tokens_expr(F.col("text")).alias("w"))
+            doc_tokens(spark, sf_dir)
             .filter(F.size("w") >= 3)
             .select("doc_id", F.explode(shingles_expr(F.col("w"))).alias("shingle"))
             .persist(StorageLevel.MEMORY_AND_DISK)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_admin_spark import index_registry
 from lakehouse_admin_spark.operators import similarity as _sim
-from lakehouse_admin_spark.operators.dedup import tokens_expr
+from lakehouse_admin_spark.operators.dedup import doc_tokens, tokens_expr
 from lakehouse_admin_spark.operators.similarity import QUERY_STRIDE
 
 # NOTE: oracle SQL strings bake QUERY_STRIDE in at import (the graded
@@ -139,10 +139,15 @@ def _bm25_corpus(
     spark: SparkSession, sf_dir: str, base_only: bool = False
 ) -> tuple[DataFrame, DataFrame, float, float]:
     """(tf frame incl. per-doc length, df frame, N, avgdl) for the
-    corpus — one tokenize scan per (session, corpus, scope), persisted
-    once and shared by both consumers as the registry's "bm25" entry
-    (a per-invocation persist used to leak one cached frame per
-    bm25_topk / rrf_hybrid_topk call). The document length rides ON the
+    corpus — built per (session, corpus, scope) from the tier's token
+    corpus (``dedup.doc_tokens``, its registry base: invalidating the
+    corpus drops both scopes), persisted once and shared by both
+    consumers as the registry's "bm25" entry (a per-invocation persist
+    used to leak one cached frame per bm25_topk / rrf_hybrid_topk
+    call). The postings keep the corpus's ``doc_id`` range layout, so
+    neither their (doc, term, dl) aggregate nor a serve's
+    (query_id, doc_id) scoring aggregate shuffles: query_id is an alias
+    of doc_id, and both keys contain it. The document length rides ON the
     posting rows (``dl`` is constant per doc, so it joins into the
     grouping keys for free at build), which removes a corpus-wide
     doc_id-keyed join from EVERY serve; the vocabulary-sized df frame
@@ -169,17 +174,14 @@ def _bm25_corpus_build(
 ) -> tuple[DataFrame, DataFrame, float, float]:
     from pyspark.storagelevel import StorageLevel
 
-    docs = load_table(spark, sf_dir, "documents")
+    tok = doc_tokens(spark, sf_dir)
     if base_only:
-        docs = docs.filter(~F.expr(BM25_DELTA))
-    tok = docs.repartition(spark.sparkContext.defaultParallelism).select(
-        "doc_id", tokens_expr(F.col("text")).alias("toks")
-    )
+        tok = tok.filter(~F.expr(BM25_DELTA))
     tf = (
         tok.select(
             "doc_id",
-            F.explode("toks").alias("tok"),
-            F.size("toks").alias("dl"),
+            F.explode("w").alias("tok"),
+            F.size("w").alias("dl"),
         )
         .groupBy("doc_id", "tok", "dl")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -190,9 +192,10 @@ def _bm25_corpus_build(
         .agg(F.count(F.lit(1)).alias("df"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    # N and avgdl count every document, empty token arrays included
     row = tok.agg(
         F.count(F.lit(1)).alias("n"),
-        F.avg(F.size("toks").cast("double")).alias("avgdl"),
+        F.avg(F.size("w").cast("double")).alias("avgdl"),
     ).collect()[0]  # two scalars of corpus stats
     return tf, dfr, float(row["n"]), float(row["avgdl"])
 
@@ -261,10 +264,11 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     always keeping each query's 3 rarest terms so the bag never empties
     on a skewed vocabulary.
 
-    Scale shape: one tokenize pass builds the (doc, term, tf) inverted
-    frame; the broadcast (query, term) frame joins on the TERM key, so
-    shuffle volume is posting mass, never |queries|×|corpus|; scoring
-    is a map-side-combinable sum over matched postings. 4dp-rounded
+    Scale shape: the session's (doc, term, tf) inverted frame is built
+    once from the token corpus; the broadcast (query, term) frame joins
+    on the TERM key, so cost is posting mass, never |queries|×|corpus|;
+    scoring sums matched postings inside their doc_id ranges, and only
+    each query's partial top-10 shuffles. 4dp-rounded
     scores + doc_id tiebreak make the ranking engine-exact."""
     return _bm25_ranked(spark, sf_dir, BM25_TOP).orderBy("query_id", "rank")
 

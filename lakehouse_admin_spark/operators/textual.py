@@ -16,21 +16,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from lakehouse_admin_spark import index_registry
 from lakehouse_admin_spark.index_registry import free_checkpoint
-from lakehouse_admin_spark.operators.dedup import tokens_expr
+from lakehouse_admin_spark.operators.dedup import doc_tokens, tokens_expr
 from lakehouse_admin_spark.registry import query
 from lakehouse_admin_spark.sources.tables import load_table
 
-
-def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with a materialized token array column `w`.
-
-    repartition BEFORE tokenizing: the fixture is one parquet row group
-    (one task); the regex tokenizer is the CPU cost, so spread it first
-    (same plan-shape reasoning as dedup.exploded_shingles)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.repartition(spark.sparkContext.defaultParallelism).select(
-        "doc_id", "lang", "n_chars", "text", tokens_expr(F.col("text")).alias("w")
-    )
 
 # Tiny per-language marker lexicons for the n-gram/stopword language
 # heuristic. Deliberately minimal — the operator shape (token join against
@@ -55,7 +44,7 @@ EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token statistics: char count, token count, vocabulary
     size. One narrow projection per row."""
-    t = _doc_tokens(spark, sf_dir)
+    t = doc_tokens(spark, sf_dir)
     return t.select(
         "doc_id",
         "n_chars",
@@ -88,7 +77,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     length — the standard cheap filters of a pretraining data pipeline.
     All array expressions, vectorized JVM-side."""
     stop_arr = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    tagged = _doc_tokens(spark, sf_dir).filter(F.size("w") > 0)
+    tagged = doc_tokens(spark, sf_dir).filter(F.size("w") > 0)
     return tagged.select(
         "doc_id",
         "lang",
@@ -135,7 +124,7 @@ def lang_stopword_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     English-stopword hit-rate. (Real lang-ID = argmax over per-language
     lexicons; the per-language score column is the building block.)"""
     stop_arr = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    tagged = _doc_tokens(spark, sf_dir).filter(F.size("w") > 0)
+    tagged = doc_tokens(spark, sf_dir).filter(F.size("w") > 0)
     score = F.size(F.filter(F.col("w"), lambda x: F.array_contains(stop_arr, x))) / F.size(
         "w"
     ).cast("double")
@@ -543,7 +532,7 @@ def token_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: explode + two-level hash aggregate; partial aggregation
     collapses each executor's token counts before the shuffle."""
-    tok = _doc_tokens(spark, sf_dir).select("doc_id", F.explode("w").alias("tok"))
+    tok = doc_tokens(spark, sf_dir).select("doc_id", F.explode("w").alias("tok"))
     return (
         tok.groupBy("tok")
         .agg(
@@ -863,7 +852,7 @@ def tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the document count; the per-term document frequencies join back
     on the token — all partial-aggregatable, no n² anywhere."""
     tok = (
-        _doc_tokens(spark, sf_dir)
+        doc_tokens(spark, sf_dir)
         .filter(F.col("doc_id") < 100)
         .select("doc_id", F.explode("w").alias("tok"))
     )
@@ -936,7 +925,7 @@ LANG_LEXICONS = {
 def lang_id_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID by argmax over per-lexicon hit-rates (ties broken by
     lexicon order, exactly mirrored in the oracle CASE)."""
-    t = _doc_tokens(spark, sf_dir).filter(F.size("w") > 0)
+    t = doc_tokens(spark, sf_dir).filter(F.size("w") > 0)
     def hit_rate(words):
         # single-arg lambda factory — a two-parameter lambda would be
         # interpreted by PySpark as (element, index)
@@ -1102,7 +1091,7 @@ def bigram_lm_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange via ReuseExchange. The vocabulary size rides as a one-row
     broadcast aggregate instead of a separate ``.count()`` driver
     action (which re-executed the tokenize subplan as its own job)."""
-    toks = _doc_tokens(spark, sf_dir).select("doc_id", "w")
+    toks = doc_tokens(spark, sf_dir).select("doc_id", "w")
     big = (
         toks.filter(F.size("w") >= 2)
         .select(
@@ -1171,7 +1160,7 @@ def repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     miss. All JVM array expressions over one scan: tokens once, n-gram
     arrays derived in-expression, no shuffle until the final sort.
     Docs under 3 tokens are excluded (their trigram set is empty)."""
-    t = _doc_tokens(spark, sf_dir).filter(F.size("w") >= 3)
+    t = doc_tokens(spark, sf_dir).filter(F.size("w") >= 3)
 
     def ngrams(n: int):
         # 0-based Spark array indexing: w[i] ... w[i+n-1]
@@ -1255,7 +1244,7 @@ def lang_id_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACCURACY on the NL corpus in tests/test_nl_textual.py."""
     lex = _nl_lexicons()
     langs = list(lex)
-    t = _doc_tokens(spark, sf_dir).filter(F.size("w") > 0)
+    t = doc_tokens(spark, sf_dir).filter(F.size("w") > 0)
 
     def hit_rate(words):
         arr = F.array(*[F.lit(x) for x in words])
@@ -1331,7 +1320,7 @@ def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     long documents (a per-distinct filter-count would be O(V·N)). The
     sum over distinct tokens is order-invariant, so Spark's run order
     and DuckDB's distinct order agree at the pinned rounding."""
-    t = _doc_tokens(spark, sf_dir).filter(F.size("w") > 0)
+    t = doc_tokens(spark, sf_dir).filter(F.size("w") > 0)
     n = F.size("w").cast("double")
 
     def term(run):
@@ -1834,7 +1823,7 @@ def token_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (streaming/heavy_hitters.py) answers the same question with
     O(k) state per partition and no second pass — its candidate set is
     law-pinned as a superset of exactly these rows."""
-    tok = _doc_tokens(spark, sf_dir).select(F.explode("w").alias("tok"))
+    tok = doc_tokens(spark, sf_dir).select(F.explode("w").alias("tok"))
     c = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     n = c.agg(F.sum("cnt").cast("double").alias("n"))
     return (

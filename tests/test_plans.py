@@ -159,6 +159,28 @@ def test_plan_sweep_counts_rdd_scans():
     assert flags["n_scans"] == 5
 
 
+def test_plan_sweep_counts_cache_scans_and_range_exchanges():
+    """Committed sf0.1 sweep plans of the token-corpus change. Before it,
+    ``text_quality`` range-sorted a parquet scan (one sampling
+    exchange); after it, the query reads one cached scan and sorts
+    nothing. ``bm25_topk`` reads four cached scans per call; the ten in
+    its tree include the scans inside the caches' stored plans, and the
+    two range exchanges of the token corpus's stored plan do not count
+    either: they ran once, when the cache was built. Its one per-call
+    range exchange is the final ``orderBy``."""
+    from pathlib import Path
+
+    from tools.plan_sweep import analyze
+
+    root = Path(__file__).resolve().parent.parent / "plans/doc_tokens"
+    before = analyze((root / "before/text_quality.txt").read_text())
+    after = analyze((root / "after/text_quality.txt").read_text())
+    assert (before["n_cache_scan"], before["n_range_exchange"]) == (0, 1)
+    assert (after["n_cache_scan"], after["n_range_exchange"]) == (1, 0)
+    bm25 = analyze((root / "after/bm25_topk.txt").read_text())
+    assert (bm25["n_cache_scan"], bm25["n_range_exchange"]) == (4, 1)
+
+
 def test_bucketed_star_join_no_fact_exchange(spark):
     """The DEFAULT revenue_by_nation plan (r9: bucketed fact layout)
     must plan the fact-fact join with NO Exchange on either orderkey

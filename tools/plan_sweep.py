@@ -6,9 +6,14 @@ Emits one JSON line per query to stdout (redirect to a file) with:
   n_window_group_limit, n_partitionless_window, n_python
   (BatchEvalPython/ArrowEvalPython/MapInArrow/MapInPandas/
   FlatMapGroupsInPandas), n_scans, n_rdd_scan (Scan ExistingRDD),
-  n_local_scan (LocalTableScan), pushedfilters_empty, plan_len
+  n_local_scan (LocalTableScan), n_cache_scan (InMemoryTableScan),
+  n_range_exchange (rangepartitioning Exchanges: each costs a sampling
+  job), pushedfilters_empty, plan_len
 Operator counts read the numbered tree only, so each node counts once
-(the details section below the tree repeats every node).
+(the details section below the tree repeats every node). The tree also
+shows each cached relation's stored plan; n_cache_scan and
+n_range_exchange skip those nodes, which ran once, when the cache was
+built, so they count what every call runs.
 
 Usage: python tools/plan_sweep.py [--only name1,name2] [--dir OUTDIR]
 With --dir, also writes each query's formatted plan to OUTDIR/<name>.txt.
@@ -37,6 +42,29 @@ PYTHON_NODES = (
     "MapInPandas",
     "FlatMapGroupsInPandas",
 )
+
+
+def per_call_nodes(plan: str) -> list[tuple[int, str]]:
+    """``(id, operator)`` for the numbered tree's nodes outside every
+    cached relation's stored plan, top down. Spark numbers a cached
+    scan's stored plan right after the scan, bottom-up, so its root,
+    the line under ``InMemoryRelation``, carries the subtree's highest
+    id; every node printed after the subtree is numbered later still.
+    (Columns cannot delimit the subtree: a nested adaptive plan prints
+    its sections at the wrong depth.)"""
+    tree = []
+    for line in plan.split("\n\n")[0].splitlines():
+        m = re.match(r"[ :|+\-]*(?:\* )?([A-Za-z]\w*)[^(]*\((\d+)\)", line)
+        if m:
+            tree.append((int(m.group(2)), m.group(1)))
+    nodes, cached_to = [], 0
+    for i, (nid, name) in enumerate(tree):
+        if name == "InMemoryRelation":
+            below = tree[i + 1][0] if i + 1 < len(tree) else nid
+            cached_to = max(cached_to, nid, below)
+        elif nid > cached_to:
+            nodes.append((nid, name))
+    return nodes
 
 
 def analyze(plan: str) -> dict:
@@ -73,6 +101,14 @@ def analyze(plan: str) -> dict:
     tree = plan.split("\n\n")[0]
     flags["n_rdd_scan"] = tree.count("Scan ExistingRDD")
     flags["n_local_scan"] = tree.count("LocalTableScan")
+    per_call = per_call_nodes(plan)
+    flags["n_cache_scan"] = sum(1 for _id, name in per_call if name == "InMemoryTableScan")
+    flags["n_range_exchange"] = sum(
+        1
+        for i, name in per_call
+        if name == "Exchange"
+        and re.search(rf"^\({i}\) Exchange\n(?:.+\n)*?Arguments: rangepartitioning", plan, re.M)
+    )
     flags["pushedfilters_empty"] = sum(1 for s in scans if not s.strip())
     flags["plan_len"] = len(plan)
     return flags
