@@ -40,15 +40,15 @@ def test_invalidation_frees_checkpointed_blocks(spark):
 
     ir.invalidate(SF_SMOKE)
     before = persistent_ids()
-    dd._session_band_buckets(spark, SF_SMOKE)  # + the posting list
+    dd._session_band_buckets(spark, SF_SMOKE)  # + posting list + token corpus
     dd._cdc_chunk_hashes(spark, SF_SMOKE)
     tex._session_lang_profile(spark, SF_SMOKE)
     tex._winnow_capped_posts(spark, SF_SMOKE)  # + the fingerprints
     mm._session_features(spark, SF_SMOKE)
     cur._dsir_gram_counts(spark, SF_SMOKE)
     built = persistent_ids() - before
-    assert len(built) == 8
-    assert ir.invalidate(SF_SMOKE) == 8
+    assert len(built) == 9
+    assert ir.invalidate(SF_SMOKE) == 9
     assert not built & persistent_ids()
 
 
