@@ -447,6 +447,34 @@ def expire_snapshots(
         return _expire_locked(table, older_than_ms, retain_last)
 
 
+def _live_paths(
+    table: LedgerTable,
+    snap: Snapshot,
+    memo: dict[str, tuple[list[str], list[str]]],
+) -> set[str]:
+    """The snapshot's live data-file PATHS for a GC reference sweep:
+    projected segment reads (kind + file_path columns), never the entry
+    documents, memoized per segment across the snapshots sharing it."""
+    live: set[str] = set()
+    for d in snap.manifest_list:
+        if d["path"] not in memo:
+            memo[d["path"]] = table._segment_path_delta(d["path"])
+        added, removed = memo[d["path"]]
+        live.difference_update(removed)
+        live.update(added)
+    return live
+
+
+def _referenced_segments(snaps: list[Snapshot]) -> set[str]:
+    """Names of every manifest segment the snapshots point at."""
+    names: set[str] = set()
+    for s in snaps:
+        names.update(d["path"] for d in s.manifest_list)
+        if s.own_segment is not None:
+            names.add(s.own_segment["path"])
+    return names
+
+
 def _expire_locked(
     table: LedgerTable, older_than_ms: int, retain_last: int
 ) -> dict[str, int]:
@@ -475,50 +503,16 @@ def _expire_locked(
             expired.remove(s)
             keep.append(s)
 
-    # kept LEGACY delta commits materialize by walking soon-to-be-
-    # deleted ancestors: fold them (full list inline) BEFORE the
-    # ancestry is destroyed. Segmented snapshots are self-contained —
-    # their segments are protected below instead.
-    expired_ids = {s.snapshot_id for s in expired}
-    if expired_ids:
-        for s in keep:
-            if not s.is_fold and not s.is_segmented:
-                table._write_snapshot(s.fold())
-    # reference sweeps need PATHS only — projected segment reads (kind
-    # + file_path columns), never the entry documents, memoized per
-    # segment across the snapshots sharing it
-    _delta_memo: dict[str, tuple[list[str], list[str]]] = {}
-
-    def _live_paths(s: Snapshot) -> set[str]:
-        if not s.is_segmented:
-            return {e["file_path"] for e in s.files}
-        live: set[str] = set()
-        for d in s.manifest_list:
-            if d["path"] not in _delta_memo:
-                _delta_memo[d["path"]] = table._segment_path_delta(d["path"])
-            added, removed = _delta_memo[d["path"]]
-            live.difference_update(removed)
-            live.update(added)
-        return live
-
+    memo: dict[str, tuple[list[str], list[str]]] = {}
     live_paths = set()
     for s in keep:
-        live_paths |= _live_paths(s)
+        live_paths |= _live_paths(table, s, memo)
     # manifest segments still referenced by any KEPT snapshot survive;
     # the rest (only expired snapshots pointed at them) are reclaimed
-    kept_segments: set[str] = set()
-    for s in keep:
-        for d in s.manifest_list or []:
-            kept_segments.add(d["path"])
-        if s.own_segment is not None:
-            kept_segments.add(s.own_segment["path"])
-    # materialize every expired snapshot's PATH set BEFORE deleting any
-    # snapshot JSON — a delta snapshot's materialization walks ancestors
-    # that may themselves be expired
-    expired_paths = {s.snapshot_id: _live_paths(s) for s in expired}
+    kept_segments = _referenced_segments(keep)
     deleted_files = 0
     for s in expired:
-        for p in expired_paths[s.snapshot_id]:
+        for p in _live_paths(table, s, memo):
             if p not in live_paths and os.path.exists(p):
                 os.remove(p)
                 deleted_files += 1
@@ -535,11 +529,11 @@ def _expire_locked(
     seg_cutoff_ms = min(
         older_than_ms, int(time.time() * 1000) - SEGMENT_GC_GRACE_MS
     )
-    if expired_ids:
+    if expired:
         for fn in os.listdir(table.meta_dir):
             if (
                 fn.startswith("mseg-")
-                and fn.endswith((".json", ".parquet"))
+                and fn.endswith(".parquet")
                 and fn not in kept_segments
             ):
                 p = os.path.join(table.meta_dir, fn)
@@ -582,22 +576,10 @@ def remove_orphan_files(
     if older_than_ms is None:
         older_than_ms = int(time.time() * 1000) - MIN_RETENTION_DAYS * MS_PER_DAY
     snaps = table.snapshots()
-    # paths only, projected segment reads (no entry-document decode),
-    # per-segment deltas memoized across the snapshots sharing them
-    _delta_memo: dict[str, tuple[list[str], list[str]]] = {}
+    memo: dict[str, tuple[list[str], list[str]]] = {}
     referenced: set[str] = set()
     for s in snaps:
-        if not s.is_segmented:
-            referenced |= {e["file_path"] for e in s.files}
-            continue
-        live: set[str] = set()
-        for d in s.manifest_list:
-            if d["path"] not in _delta_memo:
-                _delta_memo[d["path"]] = table._segment_path_delta(d["path"])
-            added, removed = _delta_memo[d["path"]]
-            live.difference_update(removed)
-            live.update(added)
-        referenced |= live
+        referenced |= _live_paths(table, s, memo)
     orphans: list[str] = []
     for f in lister.list(table.data_dir):
         if f.path in referenced:
@@ -607,18 +589,13 @@ def remove_orphan_files(
         orphans.append(f.path)
     # manifest segments from aborted/raced commits (written before the
     # commit lock, never referenced by a snapshot) are metadata orphans
-    ref_segments: set[str] = set()
-    for s in snaps:
-        for d in s.manifest_list or []:
-            ref_segments.add(d["path"])
-        if s.own_segment is not None:
-            ref_segments.add(s.own_segment["path"])
+    ref_segments = _referenced_segments(snaps)
     for f in lister.list(table.meta_dir):
         # top-level meta files only (the pre-lister os.listdir scope)
         if os.path.dirname(f.path) != table.meta_dir.rstrip("/"):
             continue
         fn = os.path.basename(f.path)
-        is_segment = fn.startswith("mseg-") and fn.endswith((".json", ".parquet"))
+        is_segment = fn.startswith("mseg-") and fn.endswith(".parquet")
         # crashed atomic-rename leftovers: segment bodies and
         # next-snapshot-id write <name>.tmp-<uuid> then os.replace;
         # a crash in between strands the tmp file forever

@@ -11,10 +11,17 @@ same observable semantics:
         metadata/
             table.json            table-level metadata (schema string,
                                   partition spec, current snapshot id)
-            snap-<id>.json        one manifest per snapshot: operation,
-                                  parent, summary, full live-file list
-                                  with per-file partition values,
-                                  record_count, file_size_in_bytes
+            snap-<id>.json        one per snapshot: operation, parent,
+                                  summary (running totals), the
+                                  manifest list (ordered descriptors
+                                  of the segments whose replay is the
+                                  live-file set) and the own segment
+                                  (this commit's delta)
+            mseg-*.parquet        immutable manifest segments shared
+                                  across snapshots: one row per added
+                                  entry (partition values,
+                                  record_count, file_size_in_bytes,
+                                  footer stats) or removed path
         data/<k=v dirs>/*.parquet hive-layout data files
 
 Division of labor mirrors Iceberg-on-Spark exactly:
@@ -129,22 +136,11 @@ def transform_expr(f: PartitionField) -> Column:
     raise ValueError(f"unknown transform {t!r}")
 
 
-FOLD_EVERY = 32  # LEGACY delta-chain length bound (reading old tables)
-
 # Segmented commit log: merge the two TRAILING manifest segments while
 # the earlier one is at most MERGE_FACTOR x the later one's weight —
 # the size-tiered (LSM-style) policy that keeps the manifest list at
 # O(log files) segments with O(log files) amortized rewrites per entry.
 MERGE_FACTOR = 2
-
-# Manifest-segment BODY format for NEW segments. "parquet" (default)
-# streams entries as typed columns via pyarrow — a merged head segment
-# with 10^6 entries is read row-group by row-group instead of one
-# multi-GB json.load (the reason Iceberg manifests are avro, not JSON;
-# reference context: backend/internal/types.go:27). "json" is the
-# legacy body, still fully readable (and writable, for tests that pin
-# mixed-format chains).
-SEGMENT_FORMAT = "parquet"
 
 # row-group size for parquet segment bodies: bounds the driver's peak
 # per-batch materialization when streaming a large segment
@@ -302,31 +298,25 @@ def invalidate_live_files_cache(meta_dir: str, snapshot_id: int) -> None:
 
 
 class Snapshot:
-    """One commit. Three storage forms (newest first):
+    """One commit, in the Iceberg manifest-list form (reference:
+    backend/internal/types.go:27 ``Snapshot.ManifestList``) — the
+    ledger's only snapshot form.
 
-    - SEGMENTED (the Iceberg ``manifest_list`` design,
-      reference: backend/internal/types.go:27 ``Snapshot.ManifestList``):
-      the snapshot JSON holds ``manifest_list`` — an ordered list of
-      descriptors pointing at IMMUTABLE segment files
-      (``mseg-*.parquet``, typed columns + per-entry extras; legacy
-      ``mseg-*.json`` bodies still read — each decodes to
-      ``{"added": [entries], "removed":
-      [paths]}``) shared across snapshots — plus ``own_segment``, the
-      commit's own delta record (the CDC/incremental-scan source).
-      A commit writes one O(delta) segment and an
-      O(log files) manifest list; it NEVER serializes the table's
-      file inventory. Size-tiered merging (factor
-      :data:`MERGE_FACTOR`) bounds the list at O(log files) segments
-      with O(log files) amortized entry rewrites.
-    - FOLD (legacy): ``files`` holds the complete live-file list
-      inline.
-    - DELTA (legacy): ``added``/``removed`` relative to the parent,
-      chains bounded by :data:`FOLD_EVERY`.
+    The snapshot JSON holds ``manifest_list``, an ordered list of
+    descriptors of IMMUTABLE ``mseg-*.parquet`` segments shared across
+    snapshots; each segment decodes to ``{"added": [entries],
+    "removed": [paths]}`` and replaying them in order yields the live
+    file set. ``own_segment`` is the commit's own delta (the
+    CDC/incremental-scan source; None for a rollback, whose delta
+    against its lineage parent is empty). A commit writes one O(delta)
+    segment and an O(log files) manifest list; it never serializes
+    the table's file inventory. Size-tiered merging (factor
+    :data:`MERGE_FACTOR`) bounds the list at O(log files) segments with
+    O(log files) amortized entry rewrites.
 
-    Legacy forms are still read (and folded by expire_snapshots when
-    their ancestry is about to be destroyed); all new commits write
-    the segmented form. A legacy parent's inventory is folded into a
-    single base segment ONCE at the first segmented commit.
+    A snapshot JSON without ``manifest_list`` (the inline ``files`` or
+    ``added``/``removed`` forms of older ledgers) is rejected with
+    ValueError, never read as something else.
     """
 
     def __init__(
@@ -336,44 +326,28 @@ class Snapshot:
         committed_at_ms: int,
         operation: str,  # append | overwrite | delete | replace | rollback
         summary: dict[str, str],
-        files: list[dict] | None = None,
         *,
+        manifest_list: list[dict],
+        own_segment: dict | None = None,
         added: list[dict] | None = None,
         removed: list[str] | None = None,
-        delta_depth: int = 0,
-        manifest_list: list[dict] | None = None,
-        own_segment: dict | None = None,
     ):
         self.snapshot_id = snapshot_id
         self.parent_id = parent_id
         self.committed_at_ms = committed_at_ms
         self.operation = operation
         self.summary = summary
-        self._files = files
-        self._added = added
-        self._removed = removed
-        self.delta_depth = delta_depth
         self.manifest_list = manifest_list
         self.own_segment = own_segment
+        self._added = added
+        self._removed = removed
         self._table: "LedgerTable | None" = None
         self._materialized: list[dict] | None = None
 
     @property
-    def is_fold(self) -> bool:
-        return self._files is not None
-
-    @property
-    def is_segmented(self) -> bool:
-        return self.manifest_list is not None
-
-    @property
-    def depth(self) -> int:
-        return 0 if (self.is_fold or self.is_segmented) else self.delta_depth
-
-    @property
     def added(self) -> list[dict]:
         """This commit's added manifest entries (O(delta), lazy-loaded
-        from the own segment for segmented snapshots)."""
+        from the own segment)."""
         if self._added is None:
             self._load_own_delta()
         return self._added
@@ -385,81 +359,35 @@ class Snapshot:
             self._load_own_delta()
         return self._removed
 
+    def _require_table(self) -> "LedgerTable":
+        if self._table is None:
+            raise ValueError(f"snapshot {self.snapshot_id} requires table context")
+        return self._table
+
     def _load_own_delta(self) -> None:
-        if self.is_segmented and self.own_segment is not None:
-            if self._table is None:
-                raise ValueError(
-                    f"segmented snapshot {self.snapshot_id} requires table context"
-                )
-            seg = self._table._read_segment(self.own_segment["path"])
-            self._added = list(seg.get("added", []))
-            self._removed = list(seg.get("removed", []))
-        else:
-            self._added = self._added or []
-            self._removed = self._removed or []
+        if self.own_segment is None:
+            self._added, self._removed = [], []
+            return
+        seg = self._require_table()._read_segment(self.own_segment["path"])
+        self._added = list(seg["added"])
+        self._removed = list(seg["removed"])
 
     @property
     def files(self) -> list[dict]:
-        """The complete live-file list AT this snapshot (materialized
-        on demand; cached per instance). Segmented form streams the
-        manifest list's segments in order; legacy delta form replays
-        ancestry to the nearest fold."""
-        if self._files is not None:
-            return self._files
+        """The complete live-file list AT this snapshot: the manifest
+        list's segments replayed in order (materialized on demand,
+        cached per instance)."""
         if self._materialized is None:
-            if self._table is None:
-                raise ValueError(
-                    f"snapshot {self.snapshot_id} requires table context"
-                )
-            if self.is_segmented:
-                entries: dict[str, dict] = {}
-                for desc in self.manifest_list:
-                    seg = self._table._read_segment(desc["path"])
-                    for p in seg.get("removed", []):
-                        entries.pop(p, None)
-                    for e in seg.get("added", []):
-                        entries[e["file_path"]] = e
-                self._materialized = list(entries.values())
-                return self._materialized
-            chain: list[Snapshot] = [self]
-            cur: Snapshot = self
-            while (
-                not cur.is_fold
-                and not cur.is_segmented
-                and cur.parent_id is not None
-            ):
-                cur = self._table.snapshot(cur.parent_id)
-                chain.append(cur)
-            base = chain[-1]
-            if base.is_fold:
-                entries = {e["file_path"]: e for e in base._files}
-                deltas = chain[:-1]
-            elif base.is_segmented:
-                entries = {e["file_path"]: e for e in base.files}
-                deltas = chain[:-1]
-            else:  # parentless delta: empty base
-                entries = {}
-                deltas = chain
-            for s in reversed(deltas):
-                for p in s.removed:
+            table = self._require_table()
+            entries: dict[str, dict] = {}
+            for desc in self.manifest_list:
+                seg = table._read_segment(desc["path"])
+                for p in seg["removed"]:
                     entries.pop(p, None)
-                for e in s.added:
+                for e in seg["added"]:
                     entries[e["file_path"]] = e
             self._materialized = list(entries.values())
         return self._materialized
-
-    def fold(self) -> "Snapshot":
-        """A fold-form copy of this snapshot (full file list inline)."""
-        out = Snapshot(
-            self.snapshot_id,
-            self.parent_id,
-            self.committed_at_ms,
-            self.operation,
-            self.summary,
-            files=list(self.files),
-        )
-        out._table = self._table
-        return out
 
     def to_json(self) -> dict:
         d = {
@@ -468,32 +396,26 @@ class Snapshot:
             "committed_at_ms": self.committed_at_ms,
             "operation": self.operation,
             "summary": self.summary,
+            "manifest_list": self.manifest_list,
         }
-        if self.manifest_list is not None:
-            d["manifest_list"] = self.manifest_list
-            if self.own_segment is not None:
-                d["own_segment"] = self.own_segment
-        elif self._files is not None:
-            d["files"] = self._files
-        else:
-            d["added"] = self._added or []
-            d["removed"] = self._removed or []
-            d["delta_depth"] = self.delta_depth
+        if self.own_segment is not None:
+            d["own_segment"] = self.own_segment
         return d
 
     @staticmethod
     def from_json(d: dict) -> "Snapshot":
+        if "manifest_list" not in d:
+            raise ValueError(
+                f"snapshot {d.get('snapshot_id')} has no manifest_list: "
+                "only the manifest-list snapshot form is readable"
+            )
         return Snapshot(
             d["snapshot_id"],
             d.get("parent_id"),
             d["committed_at_ms"],
             d["operation"],
             d.get("summary", {}),
-            files=d.get("files"),
-            added=d.get("added"),
-            removed=d.get("removed"),
-            delta_depth=int(d.get("delta_depth", 0)),
-            manifest_list=d.get("manifest_list"),
+            manifest_list=d["manifest_list"],
             own_segment=d.get("own_segment"),
         )
 
@@ -502,6 +424,19 @@ def _data_files(entries: list[dict]) -> list[dict]:
     """DATA entries only (content = 0) — summary totals describe data
     files, never position deletes (Iceberg snapshot-summary semantics)."""
     return [e for e in entries if e.get("content", 0) == 0]
+
+
+def _running_totals(parent: "Snapshot | None", data_added: list[dict]) -> dict[str, str]:
+    """The summary's ``total-data-files`` / ``total-records`` for a
+    commit that only ADDS (data or delete) entries: the parent's
+    running totals plus ``data_added`` — O(delta), never a recount of
+    the live list."""
+    files = int(parent.summary.get("total-data-files", 0)) if parent else 0
+    records = int(parent.summary.get("total-records", 0)) if parent else 0
+    return {
+        "total-data-files": str(files + len(data_added)),
+        "total-records": str(records + sum(e["record_count"] for e in data_added)),
+    }
 
 
 _SEGMENT_SCALAR_KEYS = frozenset(k for k, _t in _SEGMENT_SCALARS)
@@ -555,8 +490,8 @@ def _combine_summaries(a: dict | None, b: dict | None) -> dict | None:
     segment: ranges widen, counts add (an upper bound — removals and
     overrides only shrink the true count, and skippability only needs
     'can anything match'), and a column absent from either side is
-    omitted. ``None`` (a legacy descriptor without a summary) poisons
-    the result to None: unskippable."""
+    omitted. ``None`` (a descriptor without a summary) poisons the
+    result to None: unskippable."""
     if a is None or b is None:
         return None
     if a.get("n_data", 1) == 0:
@@ -611,17 +546,12 @@ def _entry_may_match(entry: dict, predicates: list[tuple]) -> bool:
     return True
 
 
-def _combine_readds(a_desc: dict, b_desc: dict) -> int | None:
+def _combine_readds(a_desc: dict, b_desc: dict) -> int:
     """Upper bound on a merged segment's re-add count: the merged adds
     are a subset of the inputs' adds, and merging can only COLLAPSE
     re-adds (b's override of a's entry becomes one row), so the sum is
-    a valid bound. A descriptor missing the field (pre-r9 legacy)
-    poisons the result to None = unknown → the merged segment is never
-    skipped on cold plans."""
-    ra, rb = a_desc.get("readds"), b_desc.get("readds")
-    if ra is None or rb is None:
-        return None
-    return int(ra) + int(rb)
+    a valid bound."""
+    return int(a_desc["readds"]) + int(b_desc["readds"])
 
 
 def _write_parquet_segment(
@@ -648,7 +578,7 @@ def _write_parquet_segment(
       :data:`_SEGMENT_ROW_GROUP` rows, never the whole inventory.
 
     Measured at 10^6 entries (BASELINE.md r8): on-disk body 22 MB vs
-    429 MB legacy JSON (~20x), write ~1.5x faster, decode CPU ~1.4x
+    429 MB as a JSON body (~20x), write ~1.5x faster, decode CPU ~1.4x
     the monolithic parse (same logical bytes, batched) — the right
     trade at scale, where segment reads are object-store I/O-bound
     (20x fewer bytes) and the 429 MB text blob + full parse-tree
@@ -1125,16 +1055,12 @@ class LedgerTable:
         parent = self.snapshot(int(refs[branch]["snapshot_id"]))
         self._validate_constraints(df)
         new_files = self._stage_write(df)
-        added_records = sum(e["record_count"] for e in new_files)
-        prev_files = int(parent.summary.get("total-data-files", 0))
-        prev_records = int(parent.summary.get("total-records", 0))
         snap = self._commit_delta(
             operation="append",
             summary={
                 "added-data-files": str(len(new_files)),
-                "added-records": str(added_records),
-                "total-data-files": str(prev_files + len(new_files)),
-                "total-records": str(prev_records + added_records),
+                "added-records": str(sum(e["record_count"] for e in new_files)),
+                **_running_totals(parent, new_files),
                 "branch": branch,
             },
             added=new_files,
@@ -1230,6 +1156,17 @@ class LedgerTable:
     def _segment_path(self, name: str) -> str:
         return os.path.join(self.meta_dir, name)
 
+    def _body_path(self, name: str) -> str:
+        """Absolute path of segment ``name``'s parquet body (the cache
+        key). Any other name — an older ledger's ``.json`` body — raises
+        ValueError, so it is never read or written as a segment."""
+        if not name.endswith(".parquet"):
+            raise ValueError(
+                f"manifest segment {name!r} is not a parquet body "
+                "(segments are mseg-*.parquet)"
+            )
+        return os.path.abspath(self._segment_path(name))
+
     def _read_segment(self, name: str) -> dict:
         """Load one immutable manifest segment ({"added": [...],
         "removed": [...]}) through a small process-wide LRU —
@@ -1237,75 +1174,54 @@ class LedgerTable:
         re-materializing the same snapshot's live set touches each
         segment file once per process, not once per plan.
 
-        Bodies dispatch on extension: ``.parquet`` (current) streams
-        typed columns row-group by row-group via pyarrow — no
-        whole-file ``json.load``, driver peak bounded by
-        :data:`_SEGMENT_ROW_GROUP` rows per batch; ``.json`` (legacy)
-        keeps reading, so time travel across a mixed-format chain is
-        exact."""
-        path = os.path.abspath(self._segment_path(name))
-
-        def load() -> dict:
-            if name.endswith(".parquet"):
-                return _read_parquet_segment(path)
-            with open(path) as fh:
-                return json.load(fh)
-
-        return _SEGMENT_CACHE.get(path, load)
+        Bodies are parquet, streamed row-group by row-group via pyarrow
+        — no whole-file parse, driver peak bounded by
+        :data:`_SEGMENT_ROW_GROUP` rows per batch. Any other segment
+        name (an older ledger's ``.json`` body) raises ValueError."""
+        path = self._body_path(name)
+        return _SEGMENT_CACHE.get(path, lambda: _read_parquet_segment(path))
 
     def _segment_path_delta(self, name: str) -> tuple[list[str], list[str]]:
         """(added file paths, removed paths) of one segment — the
         PROJECTED read for consumers that never look at entry stats
-        (GC reference sweeps). Parquet bodies read only the kind and
-        file_path columns (a few MB for 10^6 entries, no entry-document
-        decode); JSON bodies and already-cached segments derive from
-        the full form."""
-        path = os.path.abspath(self._segment_path(name))
+        (GC reference sweeps): only the kind and file_path columns (a
+        few MB for 10^6 entries, no entry-document decode). An
+        already-cached segment derives from its full form."""
+        path = self._body_path(name)
         hit = _SEGMENT_CACHE.peek(path)
-        if hit is None and name.endswith(".parquet"):
-            added: list[str] = []
-            removed: list[str] = []
-            pf = pq.ParquetFile(path)
-            try:
-                for batch in pf.iter_batches(
-                    batch_size=_SEGMENT_ROW_GROUP, columns=["kind", "file_path"]
-                ):
-                    kinds = batch.column("kind").to_pylist()
-                    paths = batch.column("file_path").to_pylist()
-                    if 1 in kinds:
-                        for k, p in zip(kinds, paths):
-                            (removed if k == 1 else added).append(p)
-                    else:
-                        added.extend(paths)
-            finally:
-                pf.close()
-            return added, removed
-        seg = hit if hit is not None else self._read_segment(name)
-        return (
-            [e["file_path"] for e in seg.get("added", [])],
-            list(seg.get("removed", [])),
-        )
+        if hit is not None:
+            return [e["file_path"] for e in hit["added"]], list(hit["removed"])
+        added: list[str] = []
+        removed: list[str] = []
+        pf = pq.ParquetFile(path)
+        try:
+            for batch in pf.iter_batches(
+                batch_size=_SEGMENT_ROW_GROUP, columns=["kind", "file_path"]
+            ):
+                kinds = batch.column("kind").to_pylist()
+                paths = batch.column("file_path").to_pylist()
+                if 1 in kinds:
+                    for k, p in zip(kinds, paths):
+                        (removed if k == 1 else added).append(p)
+                else:
+                    added.extend(paths)
+        finally:
+            pf.close()
+        return added, removed
 
     def snapshot_live_paths(self, snap: "Snapshot") -> set[str]:
         """The snapshot's live FILE PATHS without materializing entry
-        documents: segmented snapshots replay per-segment path deltas
-        (projected parquet reads); legacy forms fall back to
-        :attr:`Snapshot.files`. GC sweeps over many snapshots memoize
-        the per-segment deltas across calls within a process via the
-        parquet page cache — deltas are cheap enough not to pin."""
-        if not snap.is_segmented:
-            return {e["file_path"] for e in snap.files}
+        documents: the manifest list's per-segment path deltas
+        (projected parquet reads) replayed in order. GC sweeps over many
+        snapshots memoize the per-segment deltas across calls within a
+        process via the parquet page cache — deltas are cheap enough
+        not to pin."""
         live: set[str] = set()
         for desc in snap.manifest_list:
             added, removed = self._segment_path_delta(desc["path"])
             live.difference_update(removed)
             live.update(added)
         return live
-
-    @staticmethod
-    def _segment_ext() -> str:
-        """Extension for NEW segment bodies (module-level switch)."""
-        return ".parquet" if SEGMENT_FORMAT == "parquet" else ".json"
 
     _NUM_STAT_TYPES = frozenset(
         ("tinyint", "smallint", "int", "bigint", "float", "double")
@@ -1341,27 +1257,22 @@ class LedgerTable:
         name: str,
         added: list[dict],
         removed: list[str],
-        readds: int | None = 0,
+        readds: int = 0,
     ) -> dict:
-        """Write one immutable segment file; returns its manifest-list
-        descriptor. Atomic (tmp + rename) so a concurrent reader never
-        sees a torn segment. Body format follows the extension the
-        caller chose via :meth:`_segment_ext`.
+        """Write one immutable parquet segment (``name`` must end in
+        ``.parquet``); returns its manifest-list descriptor. Atomic
+        (tmp + rename) so a concurrent reader never sees a torn
+        segment.
 
         ``readds`` must be an UPPER BOUND on how many of ``added``'s
         paths already appear as added paths in earlier segments of the
         manifest list this descriptor will join (0 — the default — is
-        correct for every commit path: staged files are uuid-fresh and
-        the base fold is the list's first segment)."""
-        path = self._segment_path(name)
+        correct for every commit path: staged files are uuid-fresh)."""
+        path = self._body_path(name)
         tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-        if name.endswith(".parquet"):
-            _write_parquet_segment(
-                tmp, added, removed, stat_cols=self._stat_columns_for_schema()
-            )
-        else:
-            with open(tmp, "w") as fh:
-                json.dump({"added": added, "removed": removed}, fh)
+        _write_parquet_segment(
+            tmp, added, removed, stat_cols=self._stat_columns_for_schema()
+        )
         os.replace(tmp, path)
         return {
             "path": name,
@@ -1373,13 +1284,12 @@ class LedgerTable:
             "n_deletes": sum(1 for e in added if e.get("content", 0) != 0),
             # readds: how many added paths RE-ADD a path an earlier
             # segment of the same manifest list already added (the
-            # format's override semantics). Every current writer stages
-            # fresh uuid-named files (and the base fold is the list's
-            # first segment), so direct writes are always 0; merges
+            # format's override semantics). Every writer stages fresh
+            # uuid-named files, so direct writes are always 0; merges
             # carry an upper bound. Cold-plan segment skipping requires
             # readds == 0 — skipping a re-adding segment would leave
             # the superseded earlier entry in the plan.
-            **({} if readds is None else {"readds": int(readds)}),
+            "readds": int(readds),
             "summary": _segment_summary(added),
         }
 
@@ -1390,10 +1300,10 @@ class LedgerTable:
         out_name: str,
         at_head: bool,
         summary: dict | None = None,
-        readds: int | None = 0,
+        readds: int = 0,
     ) -> dict:
-        """Merge two PARQUET segment bodies column-wise (a earlier, b
-        later): keep a's added rows whose file_path b neither removed
+        """Merge two segment bodies that share ONE parquet schema
+        column-wise (a earlier, b later): keep a's added rows whose file_path b neither removed
         nor re-added, append b's added rows, union the removed lists
         (dropped entirely at the list head). Semantically identical to
         the decoded merge — pinned by a fast==slow equivalence test —
@@ -1405,8 +1315,6 @@ class LedgerTable:
 
         ta = pq.read_table(self._segment_path(name_a))
         tb = pq.read_table(self._segment_path(name_b))
-        if ta.schema != tb.schema:
-            raise ValueError("segment schema drift")
         a_add = ta.filter(pc.equal(ta.column("kind"), 0))
         b_add = tb.filter(pc.equal(tb.column("kind"), 0))
         a_rem = ta.filter(pc.equal(ta.column("kind"), 1)).column("file_path")
@@ -1425,9 +1333,8 @@ class LedgerTable:
         if removed:
             n = len(removed)
             # null-fill EVERY schema field generically (typed stat
-            # columns vary per segment) — a hand-kept field list here
-            # would silently knock the fast path back to the decoded
-            # merge whenever the schema grows
+            # columns vary per table schema) — a hand-kept field list
+            # here would break whenever the segment schema grows
             rem_cols: dict[str, pa.Array] = {}
             for f in added.schema:
                 if f.name == "kind":
@@ -1458,52 +1365,18 @@ class LedgerTable:
             "added": len(added),
             "removed": len(removed),
             "n_deletes": int(n_del),
+            "readds": int(readds),
         }
-        if readds is not None:
-            desc["readds"] = int(readds)
         if summary is not None:
             desc["summary"] = summary
         return desc
 
-    def _base_segment_for(self, parent: "Snapshot") -> list[dict]:
-        """Manifest list for a LEGACY (fold/delta) parent: fold its
-        full inventory into one base segment, written once and reused
-        by every later commit (the one-time O(files) migration cost of
-        moving an old table onto the segmented log)."""
-        # reuse a base segment written under EITHER body format — an
-        # old table may already carry mseg-<id>-base.json
-        name = None
-        for ext in (self._segment_ext(), ".json", ".parquet"):
-            cand = f"mseg-{parent.snapshot_id}-base{ext}"
-            if os.path.exists(self._segment_path(cand)):
-                name = cand
-                break
-        if name is None:
-            name = f"mseg-{parent.snapshot_id}-base{self._segment_ext()}"
-            files = list(parent.files)
-            desc = self._write_segment(name, files, [])
-        else:
-            seg = self._read_segment(name)
-            desc = {
-                "path": name,
-                "added": len(seg.get("added", [])),
-                "removed": len(seg.get("removed", [])),
-                "n_deletes": sum(
-                    1
-                    for e in seg.get("added", [])
-                    if e.get("content", 0) != 0
-                ),
-                "readds": 0,  # the base fold is the list's first segment
-                "summary": _segment_summary(seg.get("added", [])),
-            }
-        return [desc]
-
-    def _parent_manifest_list(self, parent: "Snapshot | None") -> list[dict]:
-        if parent is None:
-            return []
-        if parent.is_segmented:
-            return list(parent.manifest_list)
-        return self._base_segment_for(parent)
+    def _same_body_schema(self, name_a: str, name_b: str) -> bool:
+        """True when two segment bodies share one parquet schema (footer
+        reads only) — the condition for :meth:`_merge_parquet_pair`."""
+        return pq.read_schema(self._body_path(name_a)) == pq.read_schema(
+            self._body_path(name_b)
+        )
 
     def _merge_segments(self, mlist: list[dict], new_id: int) -> list[dict]:
         """Size-tiered manifest merging: while the second-to-last
@@ -1523,55 +1396,47 @@ class LedgerTable:
             1, weight(mlist[-1])
         ):
             at_head = len(mlist) == 2
-            name = f"mseg-{new_id}-m{uuid.uuid4().hex[:8]}{self._segment_ext()}"
-            # Arrow-native fast path for parquet x parquet merges: the
-            # amortized O(log files) rewrite never decodes or re-encodes
-            # entry documents — rows move column-wise between files.
-            if (
-                name.endswith(".parquet")
-                and mlist[-2]["path"].endswith(".parquet")
-                and mlist[-1]["path"].endswith(".parquet")
-            ):
-                try:
-                    desc = self._merge_parquet_pair(
-                        mlist[-2]["path"],
-                        mlist[-1]["path"],
-                        name,
-                        at_head,
-                        # conservative union (ranges widen, count is an
-                        # upper bound) — the fast path never decodes
-                        # entries, so it can't recompute exactly
-                        summary=_combine_summaries(
-                            mlist[-2].get("summary"), mlist[-1].get("summary")
-                        ),
-                        readds=_combine_readds(mlist[-2], mlist[-1]),
-                    )
-                    created.append(desc)
-                    mlist[-2:] = [desc]
-                    continue
-                except Exception:  # schema drift etc. → decoded path
-                    pass
-            a = self._read_segment(mlist[-2]["path"])  # earlier
-            b = self._read_segment(mlist[-1]["path"])  # later
-            rem_b = set(b.get("removed", []))
-            merged_entries: dict[str, dict] = {
-                e["file_path"]: e
-                for e in a.get("added", [])
-                if e["file_path"] not in rem_b
-            }
-            for e in b.get("added", []):
-                merged_entries[e["file_path"]] = e
-            merged_removed = (
-                []
-                if at_head
-                else sorted(set(a.get("removed", [])) | rem_b)
-            )
-            desc = self._write_segment(
-                name,
-                list(merged_entries.values()),
-                merged_removed,
-                readds=_combine_readds(mlist[-2], mlist[-1]),
-            )
+            name = f"mseg-{new_id}-m{uuid.uuid4().hex[:8]}.parquet"
+            readds = _combine_readds(mlist[-2], mlist[-1])
+            if self._same_body_schema(mlist[-2]["path"], mlist[-1]["path"]):
+                # Arrow-native path: the amortized O(log files) rewrite
+                # never decodes or re-encodes entry documents — rows
+                # move column-wise between files. The summary is the
+                # conservative union (ranges widen, count is an upper
+                # bound): without decoding it can't be recomputed.
+                desc = self._merge_parquet_pair(
+                    mlist[-2]["path"],
+                    mlist[-1]["path"],
+                    name,
+                    at_head,
+                    summary=_combine_summaries(
+                        mlist[-2].get("summary"), mlist[-1].get("summary")
+                    ),
+                    readds=readds,
+                )
+            else:
+                # the typed stat columns differ (segments written
+                # before and after a schema change): decode both and
+                # rewrite under the current table schema
+                a = self._read_segment(mlist[-2]["path"])  # earlier
+                b = self._read_segment(mlist[-1]["path"])  # later
+                rem_b = set(b["removed"])
+                merged_entries: dict[str, dict] = {
+                    e["file_path"]: e
+                    for e in a["added"]
+                    if e["file_path"] not in rem_b
+                }
+                for e in b["added"]:
+                    merged_entries[e["file_path"]] = e
+                merged_removed = (
+                    [] if at_head else sorted(set(a["removed"]) | rem_b)
+                )
+                desc = self._write_segment(
+                    name,
+                    list(merged_entries.values()),
+                    merged_removed,
+                    readds=readds,
+                )
             created.append(desc)
             mlist[-2:] = [desc]
         # a CASCADE consumes its own earlier outputs: every merge
@@ -1586,7 +1451,7 @@ class LedgerTable:
                     os.remove(self._segment_path(d["path"]))
                 except OSError:
                     pass
-                _SEGMENT_CACHE.pop(os.path.abspath(self._segment_path(d["path"])))
+                _SEGMENT_CACHE.pop(self._body_path(d["path"]))
         return mlist
 
     def _commit(self, snap: Snapshot, expected_parent: object = "__FROM_SNAP__") -> None:
@@ -1687,9 +1552,9 @@ class LedgerTable:
         # the uuid suffix keeps concurrent writers racing for the same
         # id from clobbering each other's segment (the loser's file
         # becomes an orphan; remove_orphan_files reclaims it)
-        own_name = f"mseg-{next_id}-d{uuid.uuid4().hex[:8]}{self._segment_ext()}"
+        own_name = f"mseg-{next_id}-d{uuid.uuid4().hex[:8]}.parquet"
         own = self._write_segment(own_name, added, removed)
-        plist = [] if base_reset else self._parent_manifest_list(parent)
+        plist = [] if base_reset or parent is None else list(parent.manifest_list)
         mlist = self._merge_segments(plist + [own], next_id)
         snap = Snapshot(
             snapshot_id=next_id,
@@ -1724,7 +1589,7 @@ class LedgerTable:
                     os.remove(self._segment_path(name))
                 except OSError:
                     pass
-                _SEGMENT_CACHE.pop(os.path.abspath(self._segment_path(name)))
+                _SEGMENT_CACHE.pop(self._body_path(name))
             raise
         return snap
 
@@ -2219,12 +2084,6 @@ class LedgerTable:
         for _attempt in range(5):  # staged files are parent-independent
             cur = self.current_snapshot_id()
             parent = self.snapshot(cur) if cur else None
-            prev_files = int(parent.summary.get("total-data-files", -1)) if parent else 0
-            prev_records = int(parent.summary.get("total-records", -1)) if parent else 0
-            if prev_files < 0 or prev_records < 0:  # legacy summary: recount once
-                base = _data_files(parent.files) if parent else []
-                prev_files = len(base)
-                prev_records = sum(e["record_count"] for e in base)
             try:
                 return self._commit_delta(
                     operation="append",
@@ -2232,8 +2091,7 @@ class LedgerTable:
                         **(extra_summary or {}),
                         "added-data-files": str(len(new_files)),
                         "added-records": str(added_records),
-                        "total-data-files": str(prev_files + len(new_files)),
-                        "total-records": str(prev_records + added_records),
+                        **_running_totals(parent, new_files),
                     },
                     added=new_files,
                     removed=[],
@@ -2443,8 +2301,6 @@ class LedgerTable:
         n_added = sum(e["record_count"] for e in new_data_entries)
         cur = self.current_snapshot_id()
         parent = self.snapshot(cur) if cur else None
-        prev_files = int(parent.summary.get("total-data-files", 0)) if parent else 0
-        prev_records = int(parent.summary.get("total-records", 0)) if parent else 0
         return self._commit_delta(
             operation="merge",
             summary={
@@ -2452,8 +2308,7 @@ class LedgerTable:
                 "added-records": str(n_added),
                 "added-delete-files": str(len(new_delete_entries)),
                 "added-position-deletes": str(n_deleted),
-                "total-data-files": str(prev_files + len(new_data_entries)),
-                "total-records": str(prev_records + n_added),
+                **_running_totals(parent, new_data_entries),
             },
             added=added,
             removed=[],
@@ -2493,15 +2348,12 @@ class LedgerTable:
         cur = self.current_snapshot_id()
         parent = self.snapshot(cur) if cur else None
         n_keys = sum(e["record_count"] for e in entries)
-        prev_files = int(parent.summary.get("total-data-files", 0)) if parent else 0
-        prev_records = int(parent.summary.get("total-records", 0)) if parent else 0
         return self._commit_delta(
             operation="delete",
             summary={
                 "added-delete-files": str(len(entries)),
                 "added-equality-deletes": str(n_keys),
-                "total-data-files": str(prev_files),
-                "total-records": str(prev_records),
+                **_running_totals(parent, []),
             },
             added=entries,
             removed=[],
@@ -2529,8 +2381,6 @@ class LedgerTable:
         n_added = sum(e["record_count"] for e in data_entries)
         cur = self.current_snapshot_id()
         parent = self.snapshot(cur) if cur else None
-        prev_files = int(parent.summary.get("total-data-files", 0)) if parent else 0
-        prev_records = int(parent.summary.get("total-records", 0)) if parent else 0
         return self._commit_delta(
             operation="merge",
             summary={
@@ -2539,8 +2389,7 @@ class LedgerTable:
                 "added-records": str(n_added),
                 "added-delete-files": str(len(eq_entries)),
                 "added-equality-deletes": str(n_keys),
-                "total-data-files": str(prev_files + len(data_entries)),
-                "total-records": str(prev_records + n_added),
+                **_running_totals(parent, data_entries),
             },
             added=eq_entries + data_entries,
             removed=[],
@@ -2655,8 +2504,6 @@ class LedgerTable:
         data_new = self._stage_write(updated) if n_updated else []
         cur = self.current_snapshot_id()
         parent = self.snapshot(cur) if cur else None
-        prev_files = int(parent.summary.get("total-data-files", 0)) if parent else 0
-        prev_records = int(parent.summary.get("total-records", 0)) if parent else 0
         return self._commit_delta(
             operation="merge",
             summary={
@@ -2665,8 +2512,7 @@ class LedgerTable:
                 "added-records": str(n_updated),
                 "added-delete-files": str(len(del_entries)),
                 "added-position-deletes": str(n_updated),
-                "total-data-files": str(prev_files + len(data_new)),
-                "total-records": str(prev_records + n_updated),
+                **_running_totals(parent, data_new),
             },
             added=del_entries + data_new,
             removed=[],
@@ -2710,15 +2556,12 @@ class LedgerTable:
         cur = self.current_snapshot_id()
         parent = self.snapshot(cur) if cur else None
         n_deleted = sum(e["record_count"] for e in new_entries)
-        prev_files = int(parent.summary.get("total-data-files", 0)) if parent else 0
-        prev_records = int(parent.summary.get("total-records", 0)) if parent else 0
         return self._commit_delta(
             operation="delete",
             summary={
                 "added-delete-files": str(len(new_entries)),
                 "added-position-deletes": str(n_deleted),
-                "total-data-files": str(prev_files),
-                "total-records": str(prev_records),
+                **_running_totals(parent, []),
             },
             added=new_entries,
             removed=[],
@@ -2741,21 +2584,15 @@ class LedgerTable:
             operation="rollback",
             summary={
                 "rolled-back-to": str(snapshot_id),
-                # running totals from the target's summary when present
-                # (O(1)); legacy snapshots without them recount once
-                "total-data-files": target.summary.get("total-data-files")
-                or str(len(_data_files(target.files))),
-                "total-records": target.summary.get("total-records")
-                or str(sum(e["record_count"] for e in _data_files(target.files))),
+                # running totals from the target's summary (O(1))
+                "total-data-files": target.summary["total-data-files"],
+                "total-records": target.summary["total-records"],
             },
             # manifest REUSE (the whole point of immutable segments): a
             # rollback shares the target's segment files — O(segments)
             # commit, zero entry rewrites. own_segment=None: its delta
             # vs its lineage parent (the target) is empty by definition.
-            added=[],
-            removed=[],
-            manifest_list=self._parent_manifest_list(target),
-            own_segment=None,
+            manifest_list=list(target.manifest_list),
         )
         snap._table = self
         self._commit(snap, expected_parent=cur_head)
@@ -2859,29 +2696,22 @@ class LedgerTable:
 
     def _segment_pruned_entries(
         self, snapshot_id: int, predicates: list[tuple]
-    ) -> list[dict] | None:
+    ) -> list[dict]:
         """Cold-plan materialization with MANIFEST SKIPPING: walk the
         snapshot's manifest list, reading only segments that (a) carry
         removals — a later segment's tombstones must always apply to
         earlier segments' files — or (b) may contain a matching data
         entry per their descriptor summary. Skipped segments contribute
         no entries, which is sound because none of their data entries
-        could match; tombstones aimed at them become no-ops. Returns
-        None for non-segmented snapshots (caller falls back to the full
-        materialization)."""
-        snap = self.snapshot(snapshot_id)
-        if not snap.is_segmented:
-            return None
+        could match; tombstones aimed at them become no-ops."""
         entries: dict[str, dict] = {}
-        for desc in snap.manifest_list:
+        for desc in self.snapshot(snapshot_id).manifest_list:
             # Skipping requires readds == 0 (proven, not assumed): the
             # format's merge semantics let a later segment RE-ADD a
             # path, superseding an earlier entry with different
             # stats/sequence_number — skipping such a segment would
-            # leave the superseded entry in the plan. Current writers
-            # never re-add (uuid-fresh staging), so this costs nothing;
-            # a legacy descriptor without the field is simply never
-            # skipped.
+            # leave the superseded entry in the plan. Writers never
+            # re-add (uuid-fresh staging), so this costs nothing.
             if (
                 int(desc.get("removed", 0)) == 0
                 and desc.get("readds") == 0
@@ -2892,13 +2722,13 @@ class LedgerTable:
             # an unskippable segment: dropped rows can't be superseding
             # a kept earlier entry, so filtering at decode time equals
             # filtering after the merge.
-            if desc["path"].endswith(".parquet") and desc.get("readds") == 0:
+            if desc.get("readds") == 0:
                 added, removed = self._segment_matching_entries(
                     desc["path"], predicates
                 )
             else:
                 seg = self._read_segment(desc["path"])
-                added, removed = seg.get("added", []), seg.get("removed", [])
+                added, removed = seg["added"], seg["removed"]
             for p in removed:
                 entries.pop(p, None)
             for e in added:
@@ -2925,7 +2755,7 @@ class LedgerTable:
         instead (no I/O beats a masked re-read)."""
         import pyarrow.compute as pc
 
-        path = os.path.abspath(self._segment_path(name))
+        path = self._body_path(name)
         hit = _SEGMENT_CACHE.peek(path)
         if hit is not None:
             return (
@@ -3023,14 +2853,7 @@ class LedgerTable:
                 [e for e in hit.live if e.get("content", 0) == 1],
                 [e for e in hit.live if e.get("content", 0) == 2],
             )
-        snap = self.snapshot(sid)
-        if not snap.is_segmented:
-            live = self.live_files(sid)
-            return (
-                [e for e in live if e.get("content", 0) == 1],
-                [e for e in live if e.get("content", 0) == 2],
-            )
-        descs = snap.manifest_list
+        descs = self.snapshot(sid).manifest_list
         if all(desc.get("n_deletes") == 0 for desc in descs):
             return [], []
         entries: dict[str, dict] = {}
@@ -3044,11 +2867,11 @@ class LedgerTable:
             # readds == 0 also proves a segment's DATA rows can't
             # supersede an earlier delete entry — so only its delete
             # rows and tombstones need decoding (typed content mask)
-            if desc["path"].endswith(".parquet") and desc.get("readds") == 0:
+            if desc.get("readds") == 0:
                 added, removed = self._segment_delete_rows(desc["path"])
             else:
                 seg = self._read_segment(desc["path"])
-                added, removed = seg.get("added", []), seg.get("removed", [])
+                added, removed = seg["added"], seg["removed"]
             for p in removed:
                 entries.pop(p, None)
             for e in added:
@@ -3073,7 +2896,7 @@ class LedgerTable:
         Python."""
         import pyarrow.compute as pc
 
-        path = os.path.abspath(self._segment_path(name))
+        path = self._body_path(name)
         hit = _SEGMENT_CACHE.peek(path)
         if hit is not None:
             return (
@@ -3198,9 +3021,8 @@ class LedgerTable:
         if predicates and sid is not None:
             if _SNAPSHOT_CACHE.peek((os.path.abspath(self.meta_dir), sid)) is None:
                 pruned = self._segment_pruned_entries(sid, predicates)
-                if pruned is not None:
-                    files = [e for e in pruned if e.get("content", 0) == 0]
-                    full_list = False
+                files = [e for e in pruned if e.get("content", 0) == 0]
+                full_list = False
         if full_list:
             files = self._data_files_for(sid)
         if not predicates or not files:
@@ -3298,22 +3120,6 @@ class LedgerTable:
         chain.reverse()
         return chain
 
-    def _snapshot_delta(self, snap: Snapshot) -> tuple[list[dict], list[str]]:
-        """(added entries, removed paths) of one snapshot — directly for
-        delta-form commits, by file-path diff against the parent for
-        fold-form ones (folds drop the delta record by design)."""
-        if not snap.is_fold:
-            return snap.added, snap.removed
-        parent_files = (
-            {e["file_path"]: e for e in self.snapshot(snap.parent_id).files}
-            if snap.parent_id is not None
-            else {}
-        )
-        cur_files = {e["file_path"]: e for e in snap.files}
-        added = [e for p, e in cur_files.items() if p not in parent_files]
-        removed = [p for p in parent_files if p not in cur_files]
-        return added, removed
-
     def incremental_scan(
         self, from_snapshot_id: int | None, to_snapshot_id: int
     ) -> DataFrame:
@@ -3327,13 +3133,12 @@ class LedgerTable:
         :meth:`changelog_scan` for ranges with deletes."""
         added_entries: list[dict] = []
         for snap in self._ancestry_range(from_snapshot_id, to_snapshot_id):
-            added, removed = self._snapshot_delta(snap)
-            if removed or snap.operation not in ("append",):
+            if snap.removed or snap.operation not in ("append",):
                 raise ValueError(
                     f"snapshot {snap.snapshot_id} ({snap.operation}) is not "
                     "append-only; incremental_scan requires an append-only range"
                 )
-            added_entries.extend(e for e in added if e.get("content", 0) == 0)
+            added_entries.extend(e for e in snap.added if e.get("content", 0) == 0)
         if not added_entries:
             return self.spark.createDataFrame([], self.unified_schema())
         return self._read_entries(added_entries)
@@ -3352,7 +3157,7 @@ class LedgerTable:
         for snap in self._ancestry_range(from_snapshot_id, to_snapshot_id):
             if snap.operation in ("replace",):
                 continue
-            added, removed = self._snapshot_delta(snap)
+            added, removed = snap.added, snap.removed
             data_added = [e for e in added if e.get("content", 0) == 0]
             pos_delete_added = [e for e in added if e.get("content", 0) == 1]
             eq_delete_added = [e for e in added if e.get("content", 0) == 2]

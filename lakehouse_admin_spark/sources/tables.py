@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,12 +40,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table as a DataFrame (lazy parquet scan).
 
     ``events.ts`` has drifted across testdata generations, so the load is
-    type-driven rather than generation-driven:
+    type-driven rather than generation-driven, decided once per call
+    from the parquet footer:
 
     - parquet TIMESTAMP(NANOS): Spark's vectorized reader rejects it
       (PARQUET_TYPE_ILLEGAL), so we read nanos as long
       (`spark.sql.legacy.parquet.nanosAsLong`) and rebuild a microsecond
-      timestamp — lossless (fixture timestamps are µs-aligned).
+      timestamp — lossless (fixture timestamps are µs-aligned). The
+      flag is session-global and changes every later parquet read, so
+      it is set only for this form.
     - parquet timestamp[us] without the UTC flag: Spark 4 infers
       TIMESTAMP_NTZ (`spark.sql.parquet.inferTimestampNTZ.enabled`
       defaults true), which event-time APIs (`unix_micros`, watermarks)
@@ -58,7 +63,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name != "events":
         return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ts = pq.ParquetDataset(path).schema.field("ts").type
+    if pa.types.is_timestamp(ts) and ts.unit == "ns":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":

@@ -213,7 +213,10 @@ def test_manifest_scan_100k_files_no_driver_list(spark, catalog, monkeypatch):
         }
         for i in range(n)
     ]
-    tbl._commit(Snapshot(1, None, 1, "append", {}, entries))
+    seg = tbl._write_segment("mseg-1-d100k.parquet", entries, [])
+    tbl._commit(
+        Snapshot(1, None, 1, "append", {}, manifest_list=[seg], own_segment=seg)
+    )
     tbl.write_manifest()
     monkeypatch.setattr(
         LedgerTable,
@@ -897,7 +900,7 @@ def test_commit_conflict_detection_and_append_retry(spark, catalog):
     tbl.append(df)
     head = tbl.current_snapshot_id()
     # hand-build a snapshot against a stale parent → conflict
-    stale = Snapshot(99, None, 1, "append", {}, files=[])
+    stale = Snapshot(99, None, 1, "append", {}, manifest_list=[])
     import pytest as _pytest
 
     with _pytest.raises(CommitConflictError):
@@ -2083,8 +2086,7 @@ def test_rollback_reuses_manifest_segments(spark, catalog):
     assert snap.own_segment is None
     assert tbl.read().count() == 10
     # CDC record of a rollback vs its lineage parent is empty
-    added, removed = tbl._snapshot_delta(snap)
-    assert added == [] and removed == []
+    assert snap.added == [] and snap.removed == []
 
 
 def test_expire_reclaims_unreferenced_segments(spark, catalog):
@@ -2124,9 +2126,8 @@ def test_orphan_gc_reclaims_aborted_segments(spark, catalog):
     df = spark.range(5).selectExpr("id", "id AS v")
     tbl = catalog.create_table("main", "seg_orphan_tbl", df.schema, [])
     tbl.append(df)
-    stray = os.path.join(tbl.meta_dir, "mseg-99-dabandoned.json")
-    with open(stray, "w") as fh:
-        fh.write('{"added": [], "removed": []}')
+    tbl._write_segment("mseg-99-dabandoned.parquet", [], [])
+    stray = os.path.join(tbl.meta_dir, "mseg-99-dabandoned.parquet")
     os.utime(stray, (1, 1))
     metrics = maintenance.remove_orphan_files(tbl)
     assert stray in metrics["deleted_files"]
@@ -2429,7 +2430,7 @@ def test_expire_spares_fresh_unreferenced_segments(spark, catalog):
     # simulate an in-flight writer: segment written, snapshot not yet
     # committed (fresh mtime, referenced by nothing)
     inflight = tbl._write_segment(
-        f"mseg-999-d{'f' * 8}.json",
+        f"mseg-999-d{'f' * 8}.parquet",
         [{"file_path": "/x/inflight.parquet", "partition": {},
           "record_count": 1, "file_size_in_bytes": 10, "content": 0}],
         [],

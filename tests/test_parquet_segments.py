@@ -3,15 +3,15 @@
 Segments (the Iceberg manifest analog; reference context:
 backend/internal/types.go:27 — Iceberg stores manifests as avro, not
 JSON, for exactly this reason) are written as typed parquet and read
-row-group by row-group. These tests pin the three properties the
-format exists for:
+row-group by row-group. These tests pin the properties the format
+exists for:
 
 1. materializing a head segment does NO whole-file ``json.load`` —
    the last O(F) monolithic-parse cost in the metadata plane is gone;
-2. a mixed JSON/parquet segment chain (old table migrated mid-life)
-   stays exact under time travel, merging, and GC;
-3. large segments carry multiple row groups, so the streamed read's
-   peak per-batch materialization is bounded.
+2. large segments carry multiple row groups, so the streamed read's
+   peak per-batch materialization is bounded;
+3. the Arrow-native merge equals the decoded merge, and cold plans
+   stay sound over the format's override semantics.
 """
 
 from __future__ import annotations
@@ -95,59 +95,6 @@ def test_head_materialization_does_no_segment_json_load(spark, catalog, monkeypa
     assert mseg_loads == [], f"segment bodies parsed via json.load: {mseg_loads}"
 
 
-def test_mixed_json_parquet_chain_time_travel_exact(spark, catalog, monkeypatch):
-    """A table whose early commits wrote legacy JSON segments and later
-    commits write parquet: every historical snapshot's live set stays
-    exact, merges read across formats, and the head is correct."""
-    df = spark.range(5).selectExpr("id", "id AS v")
-    monkeypatch.setattr(ledger_mod, "SEGMENT_FORMAT", "json")
-    tbl = catalog.create_table("main", "pseg_mixed", df.schema, [])
-    json_snaps = [tbl.append(spark.range(i * 5, i * 5 + 5).selectExpr("id", "id AS v"))
-                  for i in range(3)]
-    assert all(s.own_segment["path"].endswith(".json") for s in json_snaps)
-    monkeypatch.setattr(ledger_mod, "SEGMENT_FORMAT", "parquet")
-    pq_snaps = [tbl.append(spark.range(100 + i * 5, 105 + i * 5).selectExpr("id", "id AS v"))
-                for i in range(3)]
-    assert all(s.own_segment["path"].endswith(".parquet") for s in pq_snaps)
-    # head merged across formats (merge read .json bodies, wrote .parquet)
-    ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._SNAPSHOT_CACHE.clear()
-    assert tbl.read().count() == 30
-    # time travel to each historical snapshot is exact
-    for i, s in enumerate(json_snaps + pq_snaps):
-        assert tbl.read(snapshot_id=s.snapshot_id).count() == (i + 1) * 5
-    # MOR delete through the mixed chain still exact
-    from pyspark.sql import functions as F
-
-    tbl.delete_where(F.col("id") < 3)
-    assert tbl.read().count() == 27
-
-
-def test_mixed_chain_gc_and_expire(spark, catalog, monkeypatch):
-    """Segment GC (expire + orphan sweep) treats both body formats
-    uniformly: unreferenced old-format segments are reclaimed past the
-    cutoff, kept snapshots' segments of either format survive."""
-    df = spark.range(5).selectExpr("id", "id AS v")
-    monkeypatch.setattr(ledger_mod, "SEGMENT_FORMAT", "json")
-    tbl = catalog.create_table("main", "pseg_gc", df.schema, [])
-    for i in range(4):
-        tbl.append(spark.range(i * 5, i * 5 + 5).selectExpr("id", "id AS v"))
-    monkeypatch.setattr(ledger_mod, "SEGMENT_FORMAT", "parquet")
-    for i in range(4, 8):
-        tbl.append(spark.range(i * 5, i * 5 + 5).selectExpr("id", "id AS v"))
-    for fn in _segments(tbl):  # age past the segment-GC grace floor
-        os.utime(os.path.join(tbl.meta_dir, fn), (1, 1))
-    metrics = maintenance.expire_snapshots(tbl, older_than_ms=int(2e15))
-    assert metrics["deleted_snapshots_count"] > 0
-    head = tbl.snapshot(tbl.current_snapshot_id())
-    kept = {d["path"] for d in head.manifest_list}
-    if head.own_segment:
-        kept.add(head.own_segment["path"])
-    assert set(_segments(tbl)) == kept
-    ledger_mod._SEGMENT_CACHE.clear()
-    assert tbl.read().count() == 40
-
-
 def test_large_segment_has_bounded_row_groups(spark, catalog, monkeypatch):
     """Streamed-read bound: a segment holding more entries than the
     row-group size is written as MULTIPLE row groups, so iter_batches
@@ -174,58 +121,6 @@ def test_large_segment_has_bounded_row_groups(spark, catalog, monkeypatch):
     assert seg["removed"] == ["/x/gone.parquet"]
 
 
-def test_legacy_fold_parent_base_segment(spark, catalog):
-    """A LEGACY fold-form parent gets its inventory folded into a base
-    segment at the first segmented commit. Two pins: (a) the new base
-    is written in the current (parquet) format; (b) if a JSON base
-    from an older process already exists for that parent, it is REUSED
-    — never rewritten — so mixed-format tables don't duplicate their
-    inventory."""
-    import json as _json
-
-    from lakehouse_admin_spark.sources.ledger import Snapshot
-
-    df = spark.range(10).selectExpr("id", "id AS v")
-    tbl = catalog.create_table("main", "legacy_fold_tbl", df.schema, [])
-    snap = tbl.append(df)
-    # rewrite the head snapshot as a LEGACY FOLD (full file list inline)
-    fold = snap.fold()
-    tbl._write_snapshot(fold)
-    ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._SNAPSHOT_CACHE.clear()
-    assert tbl.snapshot(snap.snapshot_id).is_fold
-
-    # (a) first segmented commit folds the parent into a parquet base
-    # (coalesce(1): a wide own-segment would immediately size-tier-merge
-    # the fresh base away — legal, but here we pin the base itself)
-    tbl.append(spark.range(10, 20).selectExpr("id", "id AS v").coalesce(1))
-    head = tbl.snapshot(tbl.current_snapshot_id())
-    base = head.manifest_list[0]
-    assert base["path"] == f"mseg-{snap.snapshot_id}-base.parquet"
-    assert base["added"] == len(fold.files)
-    assert tbl.read().count() == 20
-
-    # (b) legacy JSON base present -> reused, parquet base not written
-    df2 = spark.range(5).selectExpr("id", "id AS v")
-    tbl2 = catalog.create_table("main", "legacy_json_base_tbl", df2.schema, [])
-    snap2 = tbl2.append(df2)
-    fold2 = snap2.fold()
-    tbl2._write_snapshot(fold2)
-    json_base = f"mseg-{snap2.snapshot_id}-base.json"
-    with open(tbl2._segment_path(json_base), "w") as fh:
-        _json.dump({"added": fold2.files, "removed": []}, fh)
-    ledger_mod._SEGMENT_CACHE.clear()
-    ledger_mod._SNAPSHOT_CACHE.clear()
-    tbl2.append(spark.range(100, 105).selectExpr("id", "id AS v").coalesce(1))
-    head2 = tbl2.snapshot(tbl2.current_snapshot_id())
-    paths = [d["path"] for d in head2.manifest_list]
-    assert not os.path.exists(
-        tbl2._segment_path(f"mseg-{snap2.snapshot_id}-base.parquet")
-    ), "JSON base must be reused, not rewritten as parquet"
-    assert json_base in paths, paths
-    assert tbl2.read().count() == 10
-
-
 def test_arrow_merge_equals_decoded_merge(spark, catalog, monkeypatch):
     """The Arrow-native parquet merge must produce EXACTLY the decoded
     (dict-based) merge's result — overrides (b re-adds a path with new
@@ -246,10 +141,9 @@ def test_arrow_merge_equals_decoded_merge(spark, catalog, monkeypatch):
     a_removed = ["/x/old1.parquet"]
     b_added = [entry(3, extra=99), entry(20), entry(21)]  # re-add f3
     b_removed = ["/x/f5.parquet", "/x/old2.parquet"]
-    tbl._write_segment("mseg-1-da.parquet", a_added, a_removed)
-    tbl._write_segment("mseg-2-db.parquet", b_added, b_removed)
-    da = {"path": "mseg-1-da.parquet", "added": 8, "removed": 1}
-    db = {"path": "mseg-2-db.parquet", "added": 3, "removed": 2}
+    da = tbl._write_segment("mseg-1-da.parquet", a_added, a_removed)
+    db = tbl._write_segment("mseg-2-db.parquet", b_added, b_removed)
+    assert (da["added"], da["removed"], db["added"], db["removed"]) == (8, 1, 3, 2)
 
     def decode(desc_list):
         ledger_mod._SEGMENT_CACHE.clear()
@@ -258,14 +152,13 @@ def test_arrow_merge_equals_decoded_merge(spark, catalog, monkeypatch):
         key = lambda e: e["file_path"]  # noqa: E731
         return sorted(segs[0]["added"], key=key), segs[0]["removed"]
 
-    # fast path (both parquet, current format)
+    # fast path (one table, so both bodies share one parquet schema)
+    assert tbl._same_body_schema(da["path"], db["path"])
     fast = tbl._merge_segments([dict(da), dict(db)], 9)
     fast_added, fast_removed = decode(fast)
-    # slow path: disable the arrow merge
-    def boom(*a, **kw):
-        raise RuntimeError("forced slow path")
 
-    monkeypatch.setattr(type(tbl), "_merge_parquet_pair", boom)
+    # slow path: the merge condition reports differing schemas
+    monkeypatch.setattr(type(tbl), "_same_body_schema", lambda *a: False)
     slow = tbl._merge_segments([dict(da), dict(db)], 11)
     slow_added, slow_removed = decode(slow)
     assert fast_added == slow_added
@@ -285,7 +178,7 @@ def test_arrow_merge_equals_decoded_merge(spark, catalog, monkeypatch):
     fast2 = tbl._merge_segments([head_pad, dict(da), dict(db)], 13)
     assert len(fast2) == 2
     _, rem2 = (lambda d: (None, tbl._read_segment(d["path"])["removed"]))(fast2[-1])
-    monkeypatch.setattr(type(tbl), "_merge_parquet_pair", boom)
+    monkeypatch.setattr(type(tbl), "_same_body_schema", lambda *a: False)
     slow2 = tbl._merge_segments([head_pad, dict(da), dict(db)], 15)
     rem3 = tbl._read_segment(slow2[-1]["path"])["removed"]
     assert rem2 == rem3 == sorted(set(a_removed) | set(b_removed))
@@ -506,8 +399,8 @@ def test_descriptor_delete_and_readd_counts(spark, catalog):
     snap = tbl.snapshot(tbl.current_snapshot_id())
     assert snap.own_segment["n_deletes"] == 1
     assert sum(d.get("n_deletes", 0) for d in snap.manifest_list) == 1
-    # decoded (JSON-path) merge carries the counts too
-    a = tbl._write_segment("mseg-90-a.json", list(snap.added), [])
+    # the decoded merge's writer carries the counts too
+    a = tbl._write_segment("mseg-90-a.parquet", list(snap.added), [])
     assert a["n_deletes"] == 1 and a["readds"] == 0
 
 
@@ -602,7 +495,7 @@ def test_cold_plan_respects_readd_override(spark, catalog):
     readd["sequence_number"] = victim["sequence_number"] + 1
     sid = tbl._allocate_snapshot_id()
     desc = tbl._write_segment(
-        f"mseg-{sid}-readd{tbl._segment_ext()}", [readd], [], readds=1
+        f"mseg-{sid}-readd.parquet", [readd], [], readds=1
     )
     snap = Snapshot(
         snapshot_id=sid,

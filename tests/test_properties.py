@@ -311,7 +311,7 @@ def test_cold_plan_and_delete_lookup_equal_full_materialization(chain_preds):
             seen_adds |= {e["file_path"] for e in added}
             descs.append(
                 tbl._write_segment(
-                    f"mseg-{i + 1}-prop{tbl._segment_ext()}",
+                    f"mseg-{i + 1}-prop.parquet",
                     added,
                     list(removed),
                     readds=readds,
