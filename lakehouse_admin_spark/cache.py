@@ -20,8 +20,13 @@ answer from a small local copy instead of N metadata round-trips (the
 reference's N+1 pattern, service_metadata.go:36-66 — SURVEY §3.1). Here
 the summaries, cached listings and stale-table cleanup (J1, the
 ``funk.Difference`` of service_refresh.go:82-89,234-239) fold the held
-slices on the driver and hand Spark only the answer, as a
-``LocalRelation``: none of them starts a Spark job."""
+slices on the driver. Each answer is an Arrow table
+(:meth:`MetadataCache.cached_table`, :meth:`~MetadataCache.summary_table`,
+:meth:`~MetadataCache.refresh_entity_table`) that the HTTP server writes
+out as JSON; the DataFrame methods wrap the same table in a
+``LocalRelation``. A refresh builds its rows on the driver too, from the
+snapshot's held roll-up and snapshot list, so neither a read nor a
+refresh of a driver-held table starts a Spark job."""
 
 from __future__ import annotations
 
@@ -34,16 +39,16 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import BooleanType, LongType, StringType, StructField, StructType
 
 from lakehouse_admin_spark.metadata import (
     arrow_table,
     local_frame,
-    partitions_df,
+    map_json,
+    partition_rollup,
     rollup_totals,
-    snapshots_df,
+    snapshot_table,
 )
 from lakehouse_admin_spark.operators.analyze import OptimizeSettings
 from lakehouse_admin_spark.sources.ledger import LedgerCatalog
@@ -78,6 +83,9 @@ _STORED_SCHEMAS = {
         )
     ),
 }
+# the stored JSON columns and the map column each is written from
+_JSON_OF = {"partition_json": "partition", "browse_json": "partition_browse",
+            "summary_json": "summary"}
 _KEY_FIELDS = _fields(("database", StringType()), ("table", StringType()))
 # a Spark read of the layout: stored columns, then the partition columns,
 # every column nullable
@@ -165,9 +173,6 @@ class MetadataCache:
             f.endswith(".parquet") or f.startswith("database=") for f in os.listdir(p)
         )
 
-    def _frame(self, entity: str, table: pa.Table) -> DataFrame:
-        return self.spark.createDataFrame(table, ENTITY_SCHEMAS[entity])
-
     # ------------------------------------------------------------------
     # driver-held slices
     # ------------------------------------------------------------------
@@ -253,8 +258,8 @@ class MetadataCache:
         if not self._exists(entity):
             raise KeyError(f"cache entity {entity!r} is empty — refresh first")
         slices = list(self._sync(entity).values())
-        return self._frame(
-            entity, pa.concat_tables(slices) if slices else _ARROW[entity].empty_table()
+        return local_frame(
+            self.spark, pa.concat_tables(slices) if slices else _ARROW[entity].empty_table()
         )
 
     # ------------------------------------------------------------------
@@ -270,9 +275,9 @@ class MetadataCache:
     ) -> pa.Table:
         """One table's fresh cache rows for ``partitions`` or
         ``snapshots`` (JSON-flattened so the cache parquet schema is
-        stable across tables with different partition specs). Both
-        sources are driver-held frames, so the projection is folded and
-        the collect starts no Spark job.
+        stable across tables with different partition specs), built on
+        the driver from the snapshot's held roll-up or the snapshot
+        list; each map is written as Spark's ``to_json`` writes it.
 
         Decode-cost audit (r9): the SNAPSHOTS entity reads snapshot
         JSON summaries only — zero segment-body decodes (pinned in
@@ -283,18 +288,18 @@ class MetadataCache:
         manifest when one exists (files_df's distributed tier)."""
         tbl = catalog.table(database, name)
         if entity == "partitions":
-            df = partitions_df(tbl, settings).withColumns(
-                {
-                    "partition_json": F.to_json(F.col("partition")),
-                    "browse_json": F.to_json(F.col("partition_browse")),
-                }
-            )
+            source = partition_rollup(tbl, settings)
         elif entity == "snapshots":
-            df = snapshots_df(tbl).withColumn("summary_json", F.to_json(F.col("summary")))
+            source = snapshot_table(tbl)
         else:
             raise KeyError(f"unknown cache entity {entity!r}")
-        stored = _STORED_SCHEMAS[entity]
-        return arrow_table(df.select(*stored.names).collect(), stored)
+        stored = _STORED[entity]
+        columns = [
+            pa.array([map_json(m) for m in source[_JSON_OF[n]].to_pylist()], pa.string())
+            if n in _JSON_OF else source[n]
+            for n in stored.names
+        ]
+        return pa.Table.from_arrays(columns, names=stored.names).cast(stored)
 
     def _refresh(self, catalog, database, name, entities, settings=None) -> dict[str, pa.Table]:
         return self._replace(
@@ -302,6 +307,21 @@ class MetadataCache:
             name,
             {e: self._build_entity(catalog, database, name, e, settings) for e in entities},
         )
+
+    def refresh_entity_table(
+        self,
+        catalog: LedgerCatalog,
+        database: str,
+        name: str,
+        entity: str,
+        settings: OptimizeSettings | None = None,
+    ) -> pa.Table:
+        """Partial refresh of ONE entity for one table (reference:
+        service_refresh.go RefreshPartitions/RefreshSnapshots behind
+        GET /api/refresh/:db/:table/partitions|snapshots). Replaces
+        exactly this table's slice; returns the refreshed slice (the
+        handlers echo it back)."""
+        return self._refresh(catalog, database, name, [entity], settings)[entity]
 
     def refresh_entity(
         self,
@@ -311,13 +331,9 @@ class MetadataCache:
         entity: str,
         settings: OptimizeSettings | None = None,
     ) -> DataFrame:
-        """Partial refresh of ONE entity for one table (reference:
-        service_refresh.go RefreshPartitions/RefreshSnapshots behind
-        GET /api/refresh/:db/:table/partitions|snapshots). Replaces
-        exactly this table's slice; returns the refreshed rows (the
-        handlers echo them back)."""
-        return self._frame(
-            entity, self._refresh(catalog, database, name, [entity], settings)[entity]
+        """:meth:`refresh_entity_table` as a DataFrame."""
+        return local_frame(
+            self.spark, self.refresh_entity_table(catalog, database, name, entity, settings)
         )
 
     def refresh_table(
@@ -337,14 +353,18 @@ class MetadataCache:
     # ------------------------------------------------------------------
     # cached reads (the /api/metadata listings)
     # ------------------------------------------------------------------
-    def cached(self, entity: str, database: str, table: str) -> DataFrame:
+    def cached_table(self, entity: str, database: str, table: str) -> pa.Table:
         """Cached rows for one (database, table) without touching the
         live catalog (reference: handler_metadata.go:36-54 — SELECT from
         the MySQL cache): the held slice, whatever the catalog's size."""
         if not self._exists(entity):
             raise KeyError(f"cache entity {entity!r} is empty — refresh first")
         held = self._sync(entity, database, table).get((database, table))
-        return self._frame(entity, held if held is not None else _ARROW[entity].empty_table())
+        return held if held is not None else _ARROW[entity].empty_table()
+
+    def cached(self, entity: str, database: str, table: str) -> DataFrame:
+        """:meth:`cached_table` as a DataFrame."""
+        return local_frame(self.spark, self.cached_table(entity, database, table))
 
     def refresh_all(
         self, catalog: LedgerCatalog, settings: OptimizeSettings | None = None
@@ -404,11 +424,15 @@ class MetadataCache:
             )
         return out
 
-    def table_summaries(self, database: str | None = None) -> DataFrame:
+    def summary_table(self, database: str | None = None) -> pa.Table:
         """Per-table summary of every cached table (of one database),
         folded on the driver — replaces the reference's
         two-queries-per-table pattern without starting a Spark job."""
-        return local_frame(self.spark, self._summaries(database), SUMMARY_SCHEMA)
+        return arrow_table(self._summaries(database), SUMMARY_SCHEMA)
+
+    def table_summaries(self, database: str | None = None) -> DataFrame:
+        """:meth:`summary_table` as a DataFrame."""
+        return local_frame(self.spark, self.summary_table(database))
 
     def table_summary(self, database: str, table: str) -> dict | None:
         """One table's :meth:`table_summaries` row as a dict, from that

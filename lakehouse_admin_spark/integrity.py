@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lakehouse_admin_spark.metadata import PATH_SCHEMA, local_frame
+from lakehouse_admin_spark.metadata import PATH_SCHEMA, arrow_table, local_frame
 from lakehouse_admin_spark.sources.ledger import LedgerTable
 
 
@@ -27,7 +27,7 @@ def expected_files_df(table: LedgerTable, snapshot_id: int | None = None) -> Dat
         rows: list[tuple[str]] = []
     else:
         rows = [(p,) for p in sorted(table.snapshot_live_paths(table.snapshot(sid)))]
-    return local_frame(table.spark, rows, PATH_SCHEMA)
+    return local_frame(table.spark, arrow_table(rows, PATH_SCHEMA))
 
 
 def listed_files_df(spark: SparkSession, data_dir: str) -> DataFrame:
@@ -39,7 +39,7 @@ def listed_files_df(spark: SparkSession, data_dir: str) -> DataFrame:
         for fn in filenames:
             if fn.endswith(".parquet"):
                 rows.append((os.path.join(dirpath, fn),))
-    return local_frame(spark, rows, PATH_SCHEMA)
+    return local_frame(spark, arrow_table(rows, PATH_SCHEMA))
 
 
 def missing_files(table: LedgerTable, snapshot_id: int | None = None) -> list[str]:

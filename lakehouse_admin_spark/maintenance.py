@@ -27,7 +27,7 @@ import math
 import os
 import time
 
-from lakehouse_admin_spark.metadata import PATH_SCHEMA, local_frame
+from lakehouse_admin_spark.metadata import PATH_SCHEMA, arrow_table, local_frame
 from lakehouse_admin_spark.sources.ledger import LedgerTable, Snapshot
 
 DEFAULT_TARGET_FILE_SIZE_BYTES = 512 * 1024 * 1024
@@ -391,7 +391,7 @@ def rewrite_position_delete_files(table: LedgerTable) -> dict[str, int]:
     ]
     dels = spark.read.parquet(*[e["file_path"] for e in delete_entries])
     total = dels.count()
-    uris_df = local_frame(spark, data_uris, PATH_SCHEMA)
+    uris_df = local_frame(spark, arrow_table(data_uris, PATH_SCHEMA))
     from pyspark.sql import functions as F
 
     kept = dels.join(F.broadcast(uris_df), "file_path", "left_semi")

@@ -11,20 +11,25 @@ Spark-first re-expression of the reference's metadata surface:
 - partition drill-down A2 (reference: backend/internal/handler_browse.go:137-178)
 
 The file/snapshot inventories are small (O(files), O(snapshots)) and
-held on the driver, so :func:`local_frame` hands them to Spark as one
-Arrow table: the plan leaf is a ``LocalRelation``, the optimizer folds
-the Filter/Project above it (``ConvertToLocalRelation``), and a browse
-read that filters down to a few rows runs no Spark job at all. Spark
-does not fold a Sort or an Aggregate, so listings are sorted and
-roll-ups folded on the driver before they become a frame. Above
+held on the driver, so every admin answer is produced once, as one Arrow
+table: :func:`snapshot_table`, :func:`listing_table`,
+:func:`drilldown_table` and :func:`partition_rollup`. The HTTP server
+serializes that table directly (``server.df_rows``) and builds no
+DataFrame. The DataFrame functions (:func:`snapshots_df`,
+:func:`list_files`, :func:`drilldown`, :func:`partitions_df`) are
+:func:`local_frame` adapters over the same producers for library callers
+and the registered queries: the plan leaf is a ``LocalRelation``, the
+optimizer folds the Filter/Project above it
+(``ConvertToLocalRelation``), and a read that filters down to a few rows
+runs no Spark job at all. Above
 ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by default)
-Spark itself turns the Arrow batches into an RDD scan, so a large
-inventory plans as a distributed scan with no change here. Tables with a
+Spark itself turns the Arrow batches into an RDD scan. Tables with a
 parquet manifest skip the driver for the file inventory
-(:func:`files_df`); the per-partition roll-up over it is one Spark
-aggregate per snapshot, whose result (one row per partition) is kept on
-the driver (:func:`partition_rollup`) and serves every later read of
-that snapshot.
+(:func:`files_df`): their listing filters and sorts in Spark and
+collects one partition's files as Arrow, and the per-partition roll-up
+over it is one Spark aggregate per snapshot, whose result (one row per
+partition) is kept on the driver (:func:`partition_rollup`) and serves
+every later read of that snapshot.
 """
 
 from __future__ import annotations
@@ -41,6 +46,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from lakehouse_admin_spark.operators.analyze import OptimizeSettings, file_rollup
@@ -53,6 +59,7 @@ SNAPSHOT_SCHEMA = StructType(
         StructField("committed_at_ms", LongType()),
         StructField("operation", StringType()),
         StructField("summary", MapType(StringType(), StringType())),
+        StructField("committed_at", TimestampType()),
     ]
 )
 
@@ -91,18 +98,19 @@ HISTORY_SCHEMA = StructType(
 )
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
-    """Driver-held ``rows`` (tuples in ``schema`` field order; map
-    columns as dicts) as a DataFrame whose plan leaf is a
-    ``LocalRelation``. The rows travel as one Arrow table typed by
-    ``schema``, so no pickled-RDD scan is built and a Filter/Project
-    over the frame is folded at optimization time. Empty ``rows`` give
-    an empty frame of the same schema."""
-    return spark.createDataFrame(arrow_table(rows, schema), schema)
+def local_frame(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """A driver-held Arrow ``table`` as a DataFrame whose plan leaf is a
+    ``LocalRelation``: no pickled-RDD scan is built and a Filter/Project
+    over the frame is folded at optimization time. The Spark schema is
+    the table's own (:func:`arrow_table` types it from a ``StructType``,
+    and the conversion round-trips exactly)."""
+    return spark.createDataFrame(table, from_arrow_schema(table.schema))
 
 
 def arrow_table(rows: list[tuple], schema: StructType) -> pa.Table:
-    """Driver-held ``rows`` as one Arrow table typed by ``schema``."""
+    """Driver-held ``rows`` (tuples in ``schema`` field order; map
+    columns as dicts) as one Arrow table typed by ``schema``. Empty
+    ``rows`` give an empty table of the same schema."""
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) or [()] * len(arrow_schema)
     return pa.table(
@@ -110,9 +118,11 @@ def arrow_table(rows: list[tuple], schema: StructType) -> pa.Table:
     )
 
 
-def snapshots_df(table: LedgerTable) -> DataFrame:
-    """The `{t}.snapshots` metadata table. Default operation is
-    "unknown" when absent (reference: service_iceberg.go:62-66)."""
+def snapshot_table(table: LedgerTable) -> pa.Table:
+    """The `{t}.snapshots` metadata table as Arrow. Default operation is
+    "unknown" when absent (reference: service_iceberg.go:62-66);
+    ``committed_at`` is the commit time as a timestamp (the instant of
+    ``timestamp_millis(committed_at_ms)``)."""
     rows = [
         (
             s.snapshot_id,
@@ -120,13 +130,16 @@ def snapshots_df(table: LedgerTable) -> DataFrame:
             s.committed_at_ms,
             s.operation or "unknown",
             {k: str(v) for k, v in s.summary.items()},
+            s.committed_at_ms * 1000,  # microseconds, the Arrow timestamp unit
         )
         for s in table.snapshots()
     ]
-    df = local_frame(table.spark, rows, SNAPSHOT_SCHEMA)
-    return df.withColumn(
-        "committed_at", F.timestamp_millis(F.col("committed_at_ms"))
-    )
+    return arrow_table(rows, SNAPSHOT_SCHEMA)
+
+
+def snapshots_df(table: LedgerTable) -> DataFrame:
+    """:func:`snapshot_table` as a DataFrame."""
+    return local_frame(table.spark, snapshot_table(table))
 
 
 def files_df(table: LedgerTable, snapshot_id: int | None = None) -> DataFrame:
@@ -143,7 +156,7 @@ def files_df(table: LedgerTable, snapshot_id: int | None = None) -> DataFrame:
     sid = snapshot_id if snapshot_id is not None else table.current_snapshot_id()
     if sid is not None and table.has_manifest(sid):
         return table.spark.read.schema(FILE_SCHEMA).parquet(table.manifest_path(sid))
-    return local_frame(table.spark, _file_rows(table, sid), FILE_SCHEMA)
+    return local_frame(table.spark, arrow_table(_file_rows(table, sid), FILE_SCHEMA))
 
 
 def _file_rows(table: LedgerTable, sid: int | None) -> list[tuple]:
@@ -168,8 +181,7 @@ def partitions_df(
     """Per-partition stats: the `$partitions` scan + needs_optimize,
     served from the current snapshot's driver-held
     :func:`partition_rollup` as a ``LocalRelation``."""
-    rollup = partition_rollup(table, settings)
-    return table.spark.createDataFrame(rollup, from_arrow_schema(rollup.schema))
+    return local_frame(table.spark, partition_rollup(table, settings))
 
 
 def partition_rollup(
@@ -234,6 +246,31 @@ def _rollup_frame(
     return rolled.withColumn("partition_browse", browse)
 
 
+_JSON_ESCAPES = {'"': '\\"', "\\": "\\\\", "\b": "\\b", "\t": "\\t", "\n": "\\n",
+                 "\f": "\\f", "\r": "\\r"}
+
+
+def _json_string(s: str) -> str:
+    """``s`` as a JSON string the way Spark's JSON generator writes it:
+    non-ASCII characters stay raw, ``"`` and ``\\`` are escaped, and the
+    control characters get their short escape or an upper-case
+    ``\\u00XX`` (Python's ``json`` writes lower-case hex)."""
+    return '"' + "".join(
+        _JSON_ESCAPES.get(ch) or (f"\\u{ord(ch):04X}" if ch < " " else ch) for ch in s
+    ) + '"'
+
+
+def map_json(entries: list[tuple[str, str | None]] | None) -> str | None:
+    """Spark's ``to_json`` of a ``map<string,string>`` given as its
+    (key, value) entries in entry order: ``{"k":"v","n":null}`` with no
+    spaces, null for a null map."""
+    if entries is None:
+        return None
+    return "{" + ",".join(
+        f"{_json_string(k)}:{'null' if v is None else _json_string(v)}" for k, v in entries
+    ) + "}"
+
+
 def rollup_totals(rollup: pa.Table) -> tuple[int, int, int, int, bool]:
     """(partition_count, file_count, record_count,
     total_data_file_size_in_bytes, needs_optimize) over partition rows:
@@ -279,11 +316,20 @@ def drilldown(
     selected: dict[str, str],
     settings: OptimizeSettings | None = None,
 ) -> DataFrame:
+    """:func:`drilldown_table` as a DataFrame."""
+    return local_frame(table.spark, drilldown_table(table, selected, settings))
+
+
+def drilldown_table(
+    table: LedgerTable,
+    selected: dict[str, str],
+    settings: OptimizeSettings | None = None,
+) -> pa.Table:
     """Partition drill-down: aggregate the *next* partition level under
     the selected prefix — `GROUP BY 1 ORDER BY 1` with roll-up sums and
     needs-optimize counts (reference: handler_browse.go:137-178). The
     fold runs on the driver over the snapshot's roll-up (at most one
-    row per partition) and the sorted groups become a ``LocalRelation``.
+    row per partition); the sorted groups are the Arrow answer.
     """
     from lakehouse_admin_spark.functions.partitions import browse_fields
 
@@ -314,20 +360,28 @@ def drilldown(
             groups.items(), key=lambda kv: (kv[0] is not None, kv[0] or "")
         )
     ]
-    return local_frame(table.spark, rows, DRILLDOWN_SCHEMA)
+    return arrow_table(rows, DRILLDOWN_SCHEMA)
 
 
 def list_files(
     table: LedgerTable,
     partition_filters: dict[str, str] | None = None,
 ) -> DataFrame:
+    """:func:`listing_table` as a DataFrame."""
+    return local_frame(table.spark, listing_table(table, partition_filters))
+
+
+def listing_table(
+    table: LedgerTable,
+    partition_filters: dict[str, str] | None = None,
+) -> pa.Table:
     """Data files of one (possibly fully-specified) partition, largest
     first — the `$files` listing `WHERE content = 0 AND CAST(
     partition.<k> AS VARCHAR)='<v>' ORDER BY file_size_in_bytes DESC,
     file_path ASC` (reference: service_browse_files.go:193-215).
-    Driver-held entries are filtered and sorted on the driver, so the
-    listing is a ``LocalRelation`` of its own rows; the manifest tier
-    filters and sorts in Spark."""
+    Driver-held entries are filtered and sorted on the driver; the
+    manifest tier filters and sorts in Spark and collects the listing
+    as Arrow."""
     filters = partition_filters or {}
     sid = table.current_snapshot_id()
     if sid is not None and table.has_manifest(sid):
@@ -336,10 +390,10 @@ def list_files(
             df = df.filter(F.col("partition")[k] == v)
         return df.select(*FILE_SCHEMA.names).orderBy(
             F.desc("file_size_in_bytes"), F.asc("file_path")
-        )
+        ).toArrow()
     rows = [r for r in _file_rows(table, sid) if r[0] == 0 and _matches(r[4], filters)]
     rows.sort(key=lambda r: (-r[6], r[1]))
-    return local_frame(table.spark, rows, FILE_SCHEMA)
+    return arrow_table(rows, FILE_SCHEMA)
 
 
 def _matches(values: dict | None, selected: dict) -> bool:
@@ -374,5 +428,5 @@ def history_df(table: LedgerTable) -> DataFrame:
         )
         for s in snaps
     ]
-    df = local_frame(table.spark, rows, HISTORY_SCHEMA)
+    df = local_frame(table.spark, arrow_table(rows, HISTORY_SCHEMA))
     return df.withColumn("made_current_at", F.timestamp_millis(F.col("made_current_at_ms")))

@@ -192,6 +192,10 @@ def _bm25_corpus_build(
         .agg(F.count(F.lit(1)).alias("df"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    # materialise both caches here: the df aggregate reads every posting.
+    # A serve over an unmaterialised cache plans the window and scoring
+    # exchanges that a serve over the materialised one drops
+    dfr.count()
     # N and avgdl count every document, empty token arrays included
     row = tok.agg(
         F.count(F.lit(1)).alias("n"),

@@ -19,6 +19,14 @@ Response conventions kept from the reference:
 Scale note: the server is an ADMIN plane. Every endpoint returns either
 bounded metadata (partitions, snapshots, task pages) or a paged listing;
 nothing streams table data through the driver.
+
+Serving path: the browse, metadata and refresh-entity routes call the
+Arrow producers of :mod:`~lakehouse_admin_spark.metadata` and
+:class:`~lakehouse_admin_spark.cache.MetadataCache` — the same ones the
+facade's DataFrame methods wrap — and :func:`df_rows` writes the Arrow
+rows out with the values ``DataFrame.collect()`` would give, so a
+driver-held answer reaches the client without a DataFrame, a Spark job
+or a Py4J call.
 """
 
 from __future__ import annotations
@@ -33,9 +41,11 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
 
+from lakehouse_admin_spark import metadata as md
 from lakehouse_admin_spark.engine import LakehouseAdmin
+from lakehouse_admin_spark.functions.partitions import synth_partition_filters
 
 
 def _json_default(o: Any) -> Any:
@@ -48,10 +58,58 @@ def _json_default(o: Any) -> Any:
     raise TypeError(f"not JSON serializable: {type(o)!r}")
 
 
-def df_rows(df: DataFrame) -> list[dict]:
-    """DataFrame → list of plain dicts (admin-plane result sets are
-    bounded: partitions / snapshots / file pages, never table data)."""
-    return [r.asDict(recursive=True) for r in df.collect()]
+def _java_string_hash(s: str) -> int:
+    """``String.hashCode`` (over UTF-16 code units) spread the way
+    ``java.util.HashMap`` spreads it, as an unsigned 32-bit int."""
+    h = 0
+    units = s.encode("utf-16-be")
+    for i in range(0, len(units), 2):
+        h = (31 * h + (units[i] << 8 | units[i + 1])) & 0xFFFFFFFF
+    return h ^ (h >> 16)
+
+
+def _collected_map(entries: list[tuple[str, Any]]) -> dict:
+    """A ``map<string, …>`` value as ``DataFrame.collect()`` returns it.
+    Spark hands a map to Python as a ``java.util.HashMap`` sized for its
+    entries, so the dict's keys come in that table's bucket order
+    (insertion order within a bucket), not in entry order. The table
+    starts at the next power of two of the entry count and doubles each
+    time it is more than 3/4 full. A bucket of more than eight colliding
+    keys, which Java keeps as a tree, is not modelled."""
+    values = dict(entries)
+    cap = 1 << (len(values) - 1).bit_length() if values else 1
+    for size in range(1, len(values) + 1):
+        if size > cap * 3 // 4:
+            cap *= 2
+    order = sorted(enumerate(values), key=lambda ik: (_java_string_hash(ik[1]) & (cap - 1), ik[0]))
+    return {k: values[k] for _, k in order}
+
+
+def _column_values(column: pa.ChunkedArray) -> list:
+    """One Arrow column as the Python values ``collect()`` gives: a
+    timestamp is the naive local datetime of
+    ``TimestampType.fromInternal`` and a map is :func:`_collected_map`."""
+    kind = column.type
+    if pa.types.is_timestamp(kind):  # microseconds, Spark's Arrow unit
+        micros = column.cast(pa.int64()).to_pylist()
+        return [
+            None if us is None
+            else dt.datetime.fromtimestamp(us // 1_000_000).replace(microsecond=us % 1_000_000)
+            for us in micros
+        ]
+    values = column.to_pylist()
+    if pa.types.is_map(kind):
+        return [None if m is None else _collected_map(m) for m in values]
+    return values
+
+
+def df_rows(table: pa.Table) -> list[dict]:
+    """An admin answer (an Arrow table) → list of plain dicts, equal to
+    the facade DataFrame's ``[r.asDict(recursive=True) for r in
+    collect()]`` (admin-plane result sets are bounded: partitions /
+    snapshots / file pages, never table data)."""
+    columns = [_column_values(c) for c in table.columns]
+    return [dict(zip(table.column_names, row)) for row in zip(*columns)]
 
 
 class _Route:
@@ -209,6 +267,17 @@ class AdminHTTPServer:
         def rollback(body, database, table, snapshotId):
             return a.rollback(database, table, int(snapshotId))
 
+        def files(body, database, table):
+            tbl = a.table(database, table)
+            selected = (body or {}).get("partitions", {})
+            raw = synth_partition_filters(tbl.partition_spec(), selected)
+            return {"files": df_rows(md.listing_table(tbl, raw))}
+
+        def refresh_entity(database, table, entity):
+            return df_rows(a.cache.refresh_entity_table(
+                a.catalog, database, table, entity, a.settings.optimize_settings()
+            ))
+
         def missing_files(body, database, table, snapshotId):
             from lakehouse_admin_spark.integrity import missing_files as mf
 
@@ -249,37 +318,42 @@ class AdminHTTPServer:
             r("GET", "/api/iceberg/:database/:table/snapshots/:snapshotId/missing-files",
               missing_files),
             r("GET", "/api/iceberg/:database/:table/snapshots",
-              lambda b, database, table: {"snapshots": df_rows(a.snapshots(database, table))}),
+              lambda b, database, table: {
+                  "snapshots": df_rows(md.snapshot_table(a.table(database, table)))
+              }),
             r("GET", "/api/iceberg/:database/:table/partitions",
-              lambda b, database, table: {"partitions": df_rows(a.partitions(database, table))}),
+              lambda b, database, table: {
+                  "partitions": df_rows(md.partition_rollup(
+                      a.table(database, table), a.settings.optimize_settings()
+                  ))
+              }),
             r("GET", "/api/iceberg/:database/:table",
               lambda b, database, table: a.describe(database, table)),
             # -- browse (cached metadata) -- main.go:84-89
             r("GET", "/api/browse/:database/tables",
-              lambda b, database: {
-                  "tables": df_rows(a.list_tables_with_summaries(database))
-              }),
+              lambda b, database: {"tables": df_rows(a.cache.summary_table(database))}),
             r("POST", "/api/browse/:database/:table/partitions",
               lambda b, database, table: {
-                  "partitions": df_rows(
-                      a.drilldown(database, table, (b or {}).get("partitions", {}))
-                  )
+                  "partitions": df_rows(md.drilldown_table(
+                      a.table(database, table),
+                      (b or {}).get("partitions", {}),
+                      a.settings.optimize_settings(),
+                  ))
               }),
-            r("POST", "/api/browse/:database/:table/files",
-              lambda b, database, table: {
-                  "files": df_rows(
-                      a.list_partition_files(database, table, (b or {}).get("partitions", {}))
-                  )
-              }),
+            r("POST", "/api/browse/:database/:table/files", files),
             # -- browse table summary -- main.go:86 (after the static
             #    /:database/tables route so "tables" wins the match)
             r("GET", "/api/browse/:database/:table",
               lambda b, database, table: a.table_summary(database, table)),
             # -- metadata (cached listings, no catalog touch) -- main.go:68-72
             r("GET", "/api/metadata/:database/:table/partitions",
-              lambda b, database, table: df_rows(a.cached_partitions(database, table))),
+              lambda b, database, table: df_rows(
+                  a.cache.cached_table("partitions", database, table)
+              )),
             r("GET", "/api/metadata/:database/:table/snapshots",
-              lambda b, database, table: df_rows(a.cached_snapshots(database, table))),
+              lambda b, database, table: df_rows(
+                  a.cache.cached_table("snapshots", database, table)
+              )),
             # -- maintenance (per-database batch) -- main.go:41-46
             r("POST", "/api/maintenance/:database/expire-snapshots",
               lambda b, database: a.enqueue_expire_batch(
@@ -297,9 +371,9 @@ class AdminHTTPServer:
             r("GET", "/api/refresh/tables",
               lambda b: {"status": "ok", **a.refresh_tables()}),
             r("GET", "/api/refresh/:database/:table/partitions",
-              lambda b, database, table: df_rows(a.refresh_partitions(database, table))),
+              lambda b, database, table: refresh_entity(database, table, "partitions")),
             r("GET", "/api/refresh/:database/:table/snapshots",
-              lambda b, database, table: df_rows(a.refresh_snapshots(database, table))),
+              lambda b, database, table: refresh_entity(database, table, "snapshots")),
             r("GET", "/api/refresh/:database/:table",
               lambda b, database, table: a.refresh(database, table)),
             r("GET", "/api/refresh/:database",

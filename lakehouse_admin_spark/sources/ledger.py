@@ -1776,33 +1776,54 @@ class LedgerTable:
     def _harvest_files(
         self, out_dir: str, spec: list[PartitionField], pcols: list[str]
     ) -> list[dict]:
+        """Manifest entries of a staged append/overwrite directory, each
+        partition read back from its hive directory names."""
         from urllib.parse import unquote
 
-        spec_id = self.default_spec_id()
-        entries = []
+        def partition_of(rel: str) -> dict:
+            partition: dict[str, str] = {}
+            if rel != ".":
+                for part in rel.split(os.sep):
+                    k, _, v = part.partition("=")
+                    idx = int(k.removeprefix("_p_"))
+                    # hive writer encodes NULL partition values as a
+                    # sentinel dir; manifests carry a real null
+                    # (rendered as "null" at the display edge, F10).
+                    # Non-null values are percent-escaped by Spark's
+                    # escapePathName (':', '=', '%', '/', …) — store
+                    # the REAL value so predicates/rendering match.
+                    partition[spec[idx].name] = (
+                        None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+                    )
+            return partition
+
+        return self._staged_entries(out_dir, partition_of, self.default_spec_id())
+
+    def _staged_entries(self, out_dir: str, partition_of, spec_id: int) -> list[dict]:
+        """Manifest entries of the parquet files Spark wrote under
+        ``out_dir``, sorted by path; ``partition_of(relative dir)`` gives
+        each file's partition. Spark leaves a schema-only part file for
+        an empty input, and a task with no rows for some partition may
+        still write one, so a zero-row file is kept out of the manifest
+        — an append commits only files with rows, a compaction DROPS a
+        dead group instead of replacing it with an empty file — and
+        unlinked so it never surfaces as an orphan."""
+        live = []
         for dirpath, _dirnames, filenames in os.walk(out_dir):
+            partition = partition_of(os.path.relpath(dirpath, out_dir))
             for fn in filenames:
                 if not fn.endswith(".parquet"):
                     continue
-                fpath = os.path.join(dirpath, fn)
-                rel = os.path.relpath(dirpath, out_dir)
-                partition: dict[str, str] = {}
-                if rel != ".":
-                    for part in rel.split(os.sep):
-                        k, _, v = part.partition("=")
-                        idx = int(k.removeprefix("_p_"))
-                        # hive writer encodes NULL partition values as a
-                        # sentinel dir; manifests carry a real null
-                        # (rendered as "null" at the display edge, F10).
-                        # Non-null values are percent-escaped by Spark's
-                        # escapePathName (':', '=', '%', '/', …) — store
-                        # the REAL value so predicates/rendering match.
-                        partition[spec[idx].name] = (
-                            None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-                        )
-                entries.append(self._file_entry(fpath, partition, spec_id))
-        entries.sort(key=lambda e: e["file_path"])
-        return entries
+                entry = self._file_entry(os.path.join(dirpath, fn), dict(partition), spec_id)
+                if entry["record_count"] > 0:
+                    live.append(entry)
+                    continue
+                try:
+                    os.remove(entry["file_path"])
+                except OSError:
+                    pass  # best-effort; remove_orphan_files sweeps stragglers
+        live.sort(key=lambda e: e["file_path"])
+        return live
 
     def _file_entry(self, fpath: str, partition: dict, spec_id: int) -> dict:
         """Manifest entry for one written parquet file: stats come from
@@ -1996,30 +2017,9 @@ class LedgerTable:
     def _collect_staged_entries(
         self, out_dir: str, partition: dict, spec_id: int
     ) -> list[dict]:
-        """Manifest entries for a staged rewrite directory. Spark emits
-        a schema-only part file for an EMPTY input (e.g. a group whose
-        rows are all position-deleted); keep it out of the manifest —
-        compaction should DROP a dead group, not replace it with an
-        empty file — and unlink it so it never surfaces as an orphan."""
-        entries = []
-        for dirpath, _dirnames, filenames in os.walk(out_dir):
-            for fn in filenames:
-                if fn.endswith(".parquet"):
-                    entries.append(
-                        self._file_entry(
-                            os.path.join(dirpath, fn), dict(partition), spec_id
-                        )
-                    )
-        live, dead = [], []
-        for e in entries:
-            (live if e["record_count"] > 0 else dead).append(e)
-        for e in dead:
-            try:
-                os.remove(e["file_path"])
-            except OSError:
-                pass  # best-effort; remove_orphan_files sweeps stragglers
-        live.sort(key=lambda e: e["file_path"])
-        return live
+        """Manifest entries of a staged rewrite directory, all in the
+        rewritten group's ``partition``."""
+        return self._staged_entries(out_dir, lambda _rel: partition, spec_id)
 
     def write_clustered_files(
         self,
@@ -2149,13 +2149,6 @@ class LedgerTable:
             parent=parent,
             prepare=prepare,
         )
-
-    def replace_files(
-        self, removed: list[str], df: DataFrame, operation: str = "replace"
-    ) -> Snapshot:
-        """Commit a rewrite: ``removed`` file paths replaced by the
-        files written from ``df`` (the compaction commit primitive)."""
-        return self.commit_rewrite(removed, self._stage_write(df), operation)
 
     def commit_rewrite(
         self, removed: list[str], new_files: list[dict], operation: str = "replace"

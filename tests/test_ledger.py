@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -1927,6 +1928,59 @@ def test_update_where_mor(spark, catalog):
     with pytest.raises(ValueError, match="v_nonneg"):
         tbl.update_where(F.col("id") < 3, {"v": F.lit(-5.0)})
     assert tbl.read().filter(F.col("v") < 0).count() == 0
+
+
+def _zero_row_files(tbl) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for d, _s, files in os.walk(tbl.data_dir)
+        for f in files
+        if f.endswith(".parquet") and pq.read_metadata(os.path.join(d, f)).num_rows == 0
+    ]
+
+
+@pytest.mark.parametrize("partitions", [2, 4])
+def test_update_commits_only_files_with_rows(spark, catalog, partitions):
+    """The updated copies are written by one task per scan split; a
+    split with no matched row commits no file, whatever the split count
+    (Spark's minimum split count stands in for the core count)."""
+    key = "spark.sql.files.minPartitionNum"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(partitions))
+    try:
+        tbl = catalog.create_table(
+            "main", f"update_splits_{partitions}",
+            spark.range(1).selectExpr("id", "id AS g").schema, [],
+        )
+        for lo in (0, 10, 20):
+            tbl.append(spark.range(lo, lo + 10, numPartitions=1).selectExpr("id", "id % 3 AS g"))
+        snap = tbl.update_where(F.col("id").isin(7, 27), {"g": F.lit(9).cast("long")})
+    finally:
+        spark.conf.unset(key) if old is None else spark.conf.set(key, old)
+    added = [e for e in snap.added if e.get("content", 0) == 0]
+    assert snap.summary["added-records"] == "2"
+    assert snap.summary["added-data-files"] == str(len(added))
+    assert added and all(e["record_count"] > 0 for e in added)
+    assert _zero_row_files(tbl) == []
+    got = {r["id"]: r["g"] for r in tbl.read().collect()}
+    assert len(got) == 30 and got[7] == got[27] == 9 and got[8] == 2
+
+
+def test_append_of_an_all_filtered_frame_commits_cleanly(spark, catalog):
+    day = [PartitionField(source="ts", transform="day", name="ts_day")]
+    rows = spark.range(0, 6).selectExpr(
+        "timestamp_seconds(1704067200 + (id % 2) * 86400) AS ts", "id AS v"
+    )
+    for name, spec in (("none", []), ("daily", day)):
+        tbl = catalog.create_table("main", f"filtered_append_{name}", rows.schema, spec)
+        first = tbl.append(rows)
+        snap = tbl.append(rows.filter("v < 0"))
+        assert snap.parent_id == first.snapshot_id, name
+        assert (snap.summary["added-data-files"], snap.summary["added-records"]) == ("0", "0")
+        assert snap.summary["total-records"] == "6", name
+        assert snap.added == [], name
+        assert tbl.live_files() == tbl.live_files(first.snapshot_id), name
+        assert tbl.read().count() == 6 and _zero_row_files(tbl) == [], name
 
 
 def test_mixed_equality_delete_key_sets(spark, catalog):

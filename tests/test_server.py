@@ -390,6 +390,58 @@ def test_small_browse_reads_start_no_spark_job(spark, one_file_served):
     assert got["summary"]["partition_count"] == len(got["cached_partitions"]) == 4
 
 
+def test_browse_routes_build_no_dataframe_and_call_no_jvm(spark, one_file_served, monkeypatch):
+    """After one warm call, the browse reads and the two refresh-entity
+    routes answer from Arrow: no DataFrame is created or collected, and
+    no Py4J command reaches the JVM."""
+    from py4j import protocol
+    from pyspark.sql import DataFrame, SparkSession
+
+    base, _, _ = one_file_served
+    _req(base, "GET", "/api/refresh/main/daily")
+    day = {"partitions": {"year": "2024", "month": "01", "day": "04"}}
+    reads = [
+        ("GET", "/api/browse/main/tables", None),
+        ("GET", "/api/browse/main/daily", None),
+        ("POST", "/api/browse/main/daily/partitions", {"partitions": {}}),
+        ("POST", "/api/browse/main/daily/partitions", {"partitions": {"year": "2024"}}),
+        ("POST", "/api/browse/main/daily/partitions",
+         {"partitions": {"year": "2024", "month": "01"}}),
+        ("POST", "/api/browse/main/daily/files", {"partitions": {**day["partitions"], "day": "02"}}),
+        ("POST", "/api/browse/main/daily/files", day),
+        ("GET", "/api/metadata/main/daily/partitions", None),
+        ("GET", "/api/metadata/main/daily/snapshots", None),
+        ("GET", "/api/iceberg/main/daily/snapshots", None),
+        ("GET", "/api/iceberg/main/daily/partitions", None),
+        ("GET", "/api/refresh/main/daily/partitions", None),
+        ("GET", "/api/refresh/main/daily/snapshots", None),
+    ]
+    for method, path, body in reads:
+        _req(base, method, path, body)  # warm: a new snapshot's roll-up
+
+    def refuse(*_a, **_k):
+        raise AssertionError("a browse route built or collected a DataFrame")
+
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send = client.send_command
+    commands = []
+
+    def counted(self, command, *args, **kwargs):
+        # the JVM-side release of a collected Python proxy is not a call
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            commands.append(command.split("\n", 1)[0])
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+    monkeypatch.setattr(DataFrame, "collect", refuse)
+    monkeypatch.setattr(client, "send_command", counted)
+    for method, path, body in reads:
+        status, payload = _req(base, method, path, body)
+        assert status == 200 and payload, (path, body)
+    monkeypatch.undo()
+    assert commands == []
+
+
 def test_driver_held_frames_are_local_relations(spark, one_file_served):
     """Every driver-held admin frame analyses to a LocalRelation leaf,
     never a pickled-RDD scan; an empty inventory keeps its schema."""

@@ -87,6 +87,15 @@ def test_bm25_scoring_aggregate_does_not_shuffle(spark):
     assert not re.search(r"hashpartitioning\(query_id#\d+L?, doc_id#", plan), plan
 
 
+def test_bm25_first_serve_after_a_build_does_not_shuffle(spark):
+    """The build materialises the postings, so the serve that builds
+    them already plans over the materialised cache."""
+    fresh_corpus()
+    plan = executed_plan(q("bm25_topk")(spark, SF_SMOKE))
+    assert "InMemoryTableScan" in plan, plan
+    assert not re.search(r"hashpartitioning\(query_id#\d+L?, doc_id#", plan), plan
+
+
 def test_invalidating_the_corpus_drops_every_derived_index(spark):
     import lakehouse_admin_spark.operators.dedup as dd
     import lakehouse_admin_spark.operators.retrieval as ret
